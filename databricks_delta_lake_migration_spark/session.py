@@ -1,84 +1,59 @@
-"""SparkSession factory with env-tiered performance profiles.
+"""SparkSession factory with the engine's performance settings.
 
 Mirrors the reference's tuned session bootstrap
 (``/root/reference/src/config.py:20-133`` and
 ``/root/reference/src/data_processor.py:41-85``): AQE on (incl. skew-join
 and partition coalescing), broadcast threshold, shuffle parallelism and
-input-split sizing tiered by environment, snappy parquet compression.
+input-split sizing, snappy parquet compression.
 
-Scale posture: profiles are sized for a multi-executor cluster
-(prod = 4000 shuffle partitions / 128 MB splits, the reference's
-10 TB+/day envelope); ``local`` is the test/bench profile for
-``local[N]`` single-JVM runs where a shuffle fan-out beyond core count
-only adds task-scheduling overhead.
+The settings are sized for ``local[N]`` single-JVM runs, where a shuffle
+fan-out beyond the core count only adds task-scheduling overhead.
+SCALING.md gives the cluster sizing (the reference's dev/staging/prod
+tiers) for runs on many executors.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-
-@dataclass(frozen=True)
-class SparkProfile:
-    """One environment tier of Spark tuning (reference: config.py:74-92)."""
-
-    name: str
-    shuffle_partitions: int
-    max_partition_bytes: str = "134217728"  # 128 MB splits (config.py:24)
-    broadcast_threshold: str = "104857600"  # 100 MB (config.py:26,105)
-    extra: dict[str, str] = field(default_factory=dict)
-
-
-PROFILES: dict[str, SparkProfile] = {
-    # local[N] testing/bench: shuffle fan-out ≈ core count; fixture
-    # files are ~10 MB, so default 128 MB splits would scan them in
-    # 1-3 tasks — split small so all cores engage. Cluster profiles
-    # below keep the reference's 128 MB splits.
-    "local": SparkProfile(
-        "local",
-        shuffle_partitions=32,
-        max_partition_bytes=str(2 * 1024 * 1024),
-        extra={
-            "spark.sql.files.openCostInBytes": "131072",
-            # full-outer joins (MERGE writeAllChanges) can't broadcast;
-            # shuffled-hash beats sort-merge at single-node scale
-            # (measured 2× on MERGE). Cluster profiles keep SMJ — safer
-            # under skew/memory pressure at 100 TB.
-            "spark.sql.join.preferSortMergeJoin": "false",
-        },
-    ),
-    # reference dev/staging/prod tiers (config.py:76-92)
-    "dev": SparkProfile("dev", shuffle_partitions=200),
-    "staging": SparkProfile("staging", shuffle_partitions=1000),
-    "prod": SparkProfile("prod", shuffle_partitions=4000),
+# shuffle fan-out when the master gives no core count (local[*], a
+# cluster URL)
+SHUFFLE_PARTITIONS = 32
+# fixture files are ~10 MB, so 128 MB splits would scan them in 1-3
+# tasks — split small so all cores engage
+MAX_PARTITION_BYTES = str(2 * 1024 * 1024)
+BROADCAST_THRESHOLD = "104857600"  # 100 MB (config.py:26,105)
+EXTRA_CONF = {
+    "spark.sql.files.openCostInBytes": "131072",
+    # full-outer joins (MERGE writeAllChanges) can't broadcast;
+    # shuffled-hash beats sort-merge at single-node scale (measured 2×
+    # on MERGE). A cluster keeps SMJ — safer under skew/memory
+    # pressure at 100 TB.
+    "spark.sql.join.preferSortMergeJoin": "false",
 }
 
 
-def _shuffle_partitions_for(prof: SparkProfile, master: str) -> int:
-    """Local-profile shuffle fan-out tracks the session's ACTUAL core
-    count — parsed from the final ``local[N]`` master, whether that
-    came from the driver's ``SPARK_GRAFT_CPUS`` or an explicit caller
-    master (optimization guide §2.5: scale-adaptive, not a constant
-    tuned for one core count — the driver benches at SEVERAL core
-    counts and 32 fixed tasks on e.g. 8 cores only add scheduling
-    overhead; a caller-pinned master must not desync from an unrelated
-    env var either). ``local[*]`` and cluster profiles keep the fixed
-    profile sizing."""
-    if prof.name == "local":
-        m = re.fullmatch(r"local\[(\d+)\]", master)
-        if m and int(m.group(1)) > 0:
-            return int(m.group(1))
-    return prof.shuffle_partitions
+def _shuffle_partitions_for(master: str) -> int:
+    """Shuffle fan-out tracks the session's ACTUAL core count, parsed
+    from the final ``local[N]`` master, whether that came from
+    ``SPARK_GRAFT_CPUS`` or an explicit caller master: scale-adaptive,
+    not a constant tuned for one core count — benchmarks run at
+    several core counts, and 32 fixed tasks on e.g. 8 cores only add
+    scheduling overhead; a caller-pinned master must not desync from an
+    unrelated env var either.
+    ``local[*]`` and cluster masters keep ``SHUFFLE_PARTITIONS``."""
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    if m and int(m.group(1)) > 0:
+        return int(m.group(1))
+    return SHUFFLE_PARTITIONS
 
 
 def build_session(
     app_name: str = "spark-engine",
     master: str | None = None,
-    profile: str = "local",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) a tuned SparkSession.
@@ -87,11 +62,10 @@ def build_session(
     oracle-comparable. Arrow is enabled for the vectorized Pandas-UDF
     path used by the LLM-pipeline operators.
     """
-    prof = PROFILES[profile]
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    shuffle_partitions = _shuffle_partitions_for(prof, master)
+    shuffle_partitions = _shuffle_partitions_for(master)
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -102,9 +76,9 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # shuffle / IO sizing (data_processor.py:65-68)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", prof.max_partition_bytes)
+        .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
         # join planning (data_processor.py:78-79)
-        .config("spark.sql.autoBroadcastJoinThreshold", prof.broadcast_threshold)
+        .config("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
         # columnar storage (data_processor.py:82-83)
         .config("spark.sql.parquet.compression.codec", "snappy")
         # determinism + python interop
@@ -113,9 +87,7 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in prof.extra.items():
-        b = b.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**EXTRA_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()
 

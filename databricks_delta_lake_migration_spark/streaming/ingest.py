@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..tables import LogTable
+from ..tables.fsio import LOCAL_FS
 
 
 class SchemaDriftError(ValueError):
@@ -136,10 +137,7 @@ def infer_stream_schema(
 
     def _save(schema: T.StructType) -> None:
         os.makedirs(schema_location, exist_ok=True)
-        tmp = stored + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema.jsonValue(), fh)
-        os.replace(tmp, stored)
+        LOCAL_FS.write_text(stored, json.dumps(schema.jsonValue()))
 
     def _infer() -> T.StructType:
         reader = spark.read.format(file_format)

@@ -18,11 +18,13 @@ Semantics mirrored from Delta's source:
   the whole table history, which for an append-only table equals the
   full current contents).
 
-Scale design: the planner folds ONLY the commit JSONs (pure-Python,
-metadata-sized, no SparkSession in the planning worker); each added
-parquet file becomes one InputPartition, and executors read their file
-with pyarrow directly — the per-batch work distributes exactly like
-Delta's file-granular streaming source. Hive-style partition values are
+Scale design: the planner reads only the commit log, through the same
+Spark-free reader LogTable uses (``tables/log.py``: newest checkpoint
+plus commit tail, all I/O through the ``fsio`` seam, no SparkSession in
+the planning worker); each added parquet file becomes one
+InputPartition, and executors read their file with pyarrow directly —
+the per-batch work distributes exactly like Delta's file-granular
+streaming source. Hive-style partition values are
 parsed from directory names and injected; physical→logical column
 mapping (RENAME COLUMN tables) is applied from the mapping property;
 columns added later surface as NULL for pre-DDL files; dropped/hidden
@@ -44,7 +46,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-LOG_DIR = "_log"
+from ..tables.log import CommitLog
+
 CHANGES_DIR = "_changes"
 MAPPING_PROP = "columnmapping.map"
 CDF_PROP = "enableChangeDataFeed"
@@ -59,101 +62,6 @@ CDF_FIELDS = [
 
 # rewrite-only maintenance: adds carry no new data (Delta dataChange=false)
 _DATA_UNCHANGED_OPS = {"OPTIMIZE", "ZORDER"}
-
-# ops whose commit carries the FULL post-op property map (mirror of
-# logtable._PROPS_REPLACE_OPS — kept in lockstep so the pure-python
-# planner folds properties identically to the engine)
-_PROPS_REPLACE_OPS = {
-    "UNSET TBLPROPERTIES", "RENAME COLUMN", "DROP COLUMN",
-    "RESTORE", "ALTER COLUMN", "DROP FEATURE",
-}
-
-
-class _PlainLog:
-    """Pure-python commit-log reader: folds schema / properties / adds
-    without a SparkSession (the data source's planning worker has
-    none). Checkpoint-aware for prefix-pruned logs."""
-
-    def __init__(self, path: str):
-        self.path = path
-        self.log = os.path.join(path, LOG_DIR)
-        if not os.path.isdir(self.log):
-            raise FileNotFoundError(f"not a log table: {path}")
-
-    def versions(self) -> list[int]:
-        return sorted(
-            int(n.split(".")[0])
-            for n in os.listdir(self.log)
-            if n.endswith(".json")
-        )
-
-    def commit(self, v: int) -> dict:
-        with open(os.path.join(self.log, f"{v:020d}.json")) as fh:
-            return json.load(fh)
-
-    def walk(self):
-        """Yield ``(version, commit, props_after_version)`` in commit
-        order, properties seeded from the newest checkpoint when the
-        log prefix was pruned — the per-version twin of ``state()``,
-        used where a property's value AT a version matters (e.g. was
-        CDF enabled when commit v ran?)."""
-        vs = self.versions()
-        props: dict = {}
-        if vs and vs[0] != 0:
-            cps = sorted(
-                int(n.split(".")[0])
-                for n in os.listdir(self.log)
-                if n.endswith(".checkpoint")
-            )
-            base = [c for c in cps if c <= vs[0]]
-            if base:
-                with open(
-                    os.path.join(self.log, f"{base[-1]:020d}.checkpoint")
-                ) as fh:
-                    props = dict(json.load(fh).get("properties") or {})
-        for v in vs:
-            c = self.commit(v)
-            if c.get("properties") is not None:
-                if c.get("operation") in _PROPS_REPLACE_OPS:
-                    props = dict(c["properties"])
-                else:
-                    props.update(c["properties"])
-            yield v, c, props
-
-    def state(self) -> tuple[str, dict]:
-        """(schema_json, properties) at the latest version, seeded from
-        the newest checkpoint when the log prefix was pruned."""
-        vs = self.versions()
-        schema, props = None, {}
-        if vs and vs[0] != 0:
-            cps = sorted(
-                int(n.split(".")[0])
-                for n in os.listdir(self.log)
-                if n.endswith(".checkpoint")
-            )
-            base = [c for c in cps if c <= vs[0]]
-            if base:
-                with open(
-                    os.path.join(self.log, f"{base[-1]:020d}.checkpoint")
-                ) as fh:
-                    st = json.load(fh)
-                schema, props = st.get("schema"), dict(
-                    st.get("properties") or {}
-                )
-        for v in vs:
-            c = self.commit(v)
-            if c.get("schema"):
-                schema = c["schema"]
-            if c.get("properties") is not None:
-                # replace-ops carry the full post-op map
-                if c.get("operation") in _PROPS_REPLACE_OPS:
-                    props = dict(c["properties"])
-                else:
-                    props.update(c["properties"])
-        if schema is None:
-            raise FileNotFoundError(f"no schema in log: {self.path}")
-        return schema, props
-
 
 class _FileSlice(InputPartition):
     def __init__(self, file_path, part_values, inv_mapping, schema_json):
@@ -206,22 +114,22 @@ class LogTableStreamReader(DataSourceStreamReader):
         return {"version": self.starting - 1}
 
     def latestOffset(self) -> dict:
-        vs = _PlainLog(self.path).versions()
+        vs = CommitLog(self.path).versions()
         return {"version": vs[-1] if vs else -1}
 
     def partitions(self, start: dict, end: dict):
-        log = _PlainLog(self.path)
-        schema_json, props = log.state()
+        log = CommitLog(self.path)
+        _, schema_json, _, props, _ = log.snapshot()
         if self.cdf:
             return self._cdf_partitions(log, schema_json, props, start, end)
         mapping = json.loads(props.get(MAPPING_PROP, "{}"))
         inv = {phys: logical for logical, phys in mapping.items()}
-        have = set(log.versions())
+        commits = {c.version: c for c in log.commits()}
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
             if v < 0:
                 continue
-            if v not in have:
+            if v not in commits:
                 # the commit was pruned by log retention: silently
                 # skipping would be data loss — fail like Delta's
                 # "versionAsOf/startingVersion is before the earliest
@@ -229,13 +137,11 @@ class LogTableStreamReader(DataSourceStreamReader):
                 raise RuntimeError(
                     f"streaming source needs version {v} of {self.path} "
                     "but the commit log has been pruned past it; restart "
-                    f"with startingVersion >= {min(have) if have else 0}"
+                    f"with startingVersion >= {min(commits) if commits else 0}"
                 )
-            c = log.commit(v)
-            op = c.get("operation", "")
-            changes = bool(c.get("remove")) or bool(
-                c.get("deletionVectors")
-            )
+            c = commits[v]
+            op = c.operation
+            changes = bool(c.remove) or bool(c.dvs)
             if changes and op in _DATA_UNCHANGED_OPS:
                 continue  # compaction rewrite: data unchanged, skip
             if changes and not self.ignore_changes:
@@ -245,12 +151,11 @@ class LogTableStreamReader(DataSourceStreamReader):
                     "newer startingVersion or set ignoreChanges=true "
                     "(downstream must then tolerate re-delivered rows)"
                 )
-            for f in c.get("add", []):
-                rel = f["path"]
+            for f in c.add:
                 out.append(
                     _FileSlice(
-                        os.path.join(f.get("base") or self.path, rel),
-                        _parse_partition_values(rel),
+                        os.path.join(f.base or self.path, f.path),
+                        _parse_partition_values(f.path),
                         inv,
                         schema_json,
                     )
@@ -284,9 +189,9 @@ class LogTableStreamReader(DataSourceStreamReader):
         inv = {phys: logical for logical, phys in mapping.items()}
         commits: dict[int, dict] = {}
         cdf_on: dict[int, bool] = {}
-        for v, c, props_v in log.walk():
-            commits[v] = c
-            cdf_on[v] = props_v.get(CDF_PROP, "false") == "true"
+        for c, props_v in log.walk():
+            commits[c.version] = c
+            cdf_on[c.version] = props_v.get(CDF_PROP, "false") == "true"
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
             if v < 0:
@@ -299,14 +204,13 @@ class LogTableStreamReader(DataSourceStreamReader):
                     f"{min(commits) if commits else 0}"
                 )
             d = os.path.join(self.path, CHANGES_DIR, f"v={v:020d}")
-            if not os.path.isdir(d):
+            if not log.fs.isdir(d):
                 c = commits[v]
                 # compaction rewrites (dataChange=false) never emit
                 # change files — their absence is not data loss
                 mutated = bool(
-                    c.get("add") or c.get("remove")
-                    or c.get("deletionVectors")
-                ) and c.get("operation", "") not in _DATA_UNCHANGED_OPS
+                    c.add or c.remove or c.dvs
+                ) and c.operation not in _DATA_UNCHANGED_OPS
                 if mutated and cdf_on[v]:
                     raise RuntimeError(
                         f"change files for version {v} of {self.path} "
@@ -319,7 +223,7 @@ class LogTableStreamReader(DataSourceStreamReader):
                 # metadata-only commit (or written before CDF was
                 # enabled): genuinely nothing to emit
                 continue
-            for name in sorted(os.listdir(d)):
+            for name in sorted(log.fs.listdir(d)):
                 if name.endswith(".parquet"):
                     out.append(
                         _FileSlice(
@@ -374,7 +278,7 @@ class LogTableStreamDataSource(DataSource):
         return "logtable_stream"
 
     def schema(self):
-        schema_json, _ = _PlainLog(self.options["path"]).state()
+        _, schema_json, _, _, _ = CommitLog(self.options["path"]).snapshot()
         sch = json.loads(schema_json)
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             sch["fields"] = list(sch["fields"]) + CDF_FIELDS

@@ -34,6 +34,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .fsio import LOCAL_FS
 from .logtable import LogTable, _partition_values
 
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -100,10 +101,7 @@ class Catalog:
             return json.load(fh)
 
     def _save(self, reg: dict[str, str]) -> None:
-        tmp = self._registry_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(reg, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._registry_path)
+        LOCAL_FS.write_text(self._registry_path, json.dumps(reg, indent=1, sort_keys=True))
 
     def resolve_name(self, name: str) -> tuple[str, str, str]:
         """``table`` / ``schema.table`` / ``catalog.schema.table`` →
@@ -332,10 +330,7 @@ class Catalog:
             return json.load(fh)
 
     def _save_views(self, reg: dict[str, str]) -> None:
-        tmp = self._views_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(reg, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._views_path)
+        LOCAL_FS.write_text(self._views_path, json.dumps(reg, indent=1, sort_keys=True))
 
     def create_view(
         self, name: str, body: str, or_replace: bool = False

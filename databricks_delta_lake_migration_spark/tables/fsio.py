@@ -1,9 +1,11 @@
 """Filesystem seam for the log-table format's driver-side metadata I/O.
 
-Every driver-side metadata operation LogTable performs (log listing,
-optimistic commit, checkpoint write, staged-file promotion, vacuum
-deletes, clone copies) goes through this interface instead of ``os``
-directly, so the format ports to an object store by swapping one class:
+Every driver-side metadata operation LogTable performs (staged-file
+promotion, vacuum deletes, clone copies) goes through this interface
+instead of ``os`` directly, and so does every commit-log access —
+listing, commit, checkpoint read and write, pruning — made by the log
+reader in ``log.py`` that LogTable and the streaming source share. The
+format therefore ports to an object store by swapping one class:
 
 ==================  ===============================================
 operation           object-store mapping (S3/GCS/ABFS)

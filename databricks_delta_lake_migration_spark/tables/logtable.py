@@ -41,7 +41,6 @@ import shutil
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field, replace as _dc_replace
 from functools import reduce
 from typing import Any, Callable
 
@@ -50,8 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fsio import LOCAL_FS, FileSystem
+from .log import LOG_DIR, Commit, CommitLog, FileEntry, fold_properties
 
-LOG_DIR = "_log"
 CHANGES_DIR = "_changes"
 STAGING_DIR = "_staging"
 DV_DIR = "_deletion_vectors"
@@ -158,18 +157,6 @@ def _enabled_features(props: dict[str, str]) -> set[str]:
     }
 
 
-# Commits whose `properties` payload REPLACES the table's property map
-# wholesale (they carry the full post-op map, and merging would
-# resurrect removed keys). All other property-bearing commits merge.
-# "ALTER COLUMN" is here for DROP NOT NULL, which must REMOVE its
-# notnull.* key — merge semantics would resurrect it. Its other users
-# (TYPE / COMMENT) carry no properties, and SET NOT NULL passes the
-# full current map, so replace semantics are correct for all of them.
-_PROPS_REPLACE_OPS = {
-    "UNSET TBLPROPERTIES", "RENAME COLUMN", "DROP COLUMN", "RESTORE",
-    "ALTER COLUMN", "DROP FEATURE",
-}
-
 # Below this total table size, MERGE rewrites every file instead of
 # running the pruning probe job — at small scale the probe costs more
 # than the rewrite it avoids. Module-level so tests/tuning can override.
@@ -220,121 +207,6 @@ class UnsupportedTableFeatureError(RuntimeError):
     implement (Delta's InvalidProtocolVersionException /
     unsupported-table-feature errors): refuse loudly rather than
     misread or corrupt a newer table."""
-
-
-@dataclass
-class FileEntry:
-    path: str  # relative to table root (includes partition subdirs);
-    # absolute for shallow-clone references into a foreign table
-    num_records: int
-    size_bytes: int
-    base: str | None = None  # partition-resolution root for foreign files
-    # per-column [min, max] from the parquet footer (Delta's add.stats):
-    # drives MERGE/DML file pruning without scanning data. None for
-    # files written before stats collection (conservatively un-prunable).
-    stats: dict[str, list] | None = None
-    # deletion-vector files (paths under DV_DIR, relative to the table
-    # root) whose (path, row_index) tombstones apply to this file; the
-    # effective deleted set is their union (Delta's add.deletionVector).
-    dv: list[str] | None = None
-    # bloom-filter sidecar (path under BLOOM_DIR, relative to the table
-    # root) carrying per-column membership filters for the columns in
-    # the table's bloomfilter.columns property at write time — loaded
-    # lazily and only for stats-surviving files (Delta's bloom index).
-    bloom: str | None = None
-    # default row commit version (Delta's defaultRowCommitVersion,
-    # row-tracking tables only): rows whose __row_commit is NULL were
-    # last modified by the commit that added this file. Stamped with
-    # the FINAL commit version by _commit_tx (rebase-safe); preserved
-    # verbatim when an entry is replayed (RESTORE) or DV-replaced.
-    rcv: int | None = None
-    # base row id (Delta's baseRowId): rows whose __row_id is NULL get
-    # id = brid + _metadata.row_index — fresh ingest never materializes
-    # ids (zero extra jobs); rewrites carry materialized ids forward.
-    # Allocated driver-side at commit time from the table's
-    # rowtracking.highWatermark property.
-    brid: int | None = None
-
-    def abspath(self, root: str) -> str:
-        return self.path if os.path.isabs(self.path) else os.path.join(root, self.path)
-
-    def to_json(self) -> dict:
-        d = {"path": self.path, "numRecords": self.num_records, "size": self.size_bytes}
-        if self.base:
-            d["base"] = self.base
-        if self.stats:
-            d["stats"] = self.stats
-        if self.dv:
-            d["dv"] = self.dv
-        if self.bloom:
-            d["bloom"] = self.bloom
-        if self.rcv is not None:
-            d["rcv"] = self.rcv
-        if self.brid is not None:
-            d["brid"] = self.brid
-        return d
-
-    @staticmethod
-    def from_json(d: dict) -> "FileEntry":
-        return FileEntry(
-            d["path"], d["numRecords"], d["size"], d.get("base"), d.get("stats"),
-            d.get("dv"), d.get("bloom"), d.get("rcv"), d.get("brid"),
-        )
-
-
-@dataclass
-class Commit:
-    version: int
-    timestamp: float
-    operation: str
-    add: list[FileEntry] = field(default_factory=list)
-    remove: list[str] = field(default_factory=list)
-    schema_json: str | None = None
-    partition_by: list[str] | None = None
-    properties: dict[str, str] | None = None
-    parameters: dict[str, Any] = field(default_factory=dict)
-    metrics: dict[str, Any] = field(default_factory=dict)
-    # merge-on-read deletes: data-file path → DV files added for it
-    dvs: dict[str, list[str]] = field(default_factory=dict)
-    # free-form commit annotation (Delta's commitInfo.userMetadata)
-    user_metadata: str | None = None
-
-    def to_json(self) -> dict:
-        return {
-            "version": self.version,
-            "timestamp": self.timestamp,
-            "operation": self.operation,
-            "add": [f.to_json() for f in self.add],
-            "remove": self.remove,
-            "schema": self.schema_json,
-            "partitionBy": self.partition_by,
-            "properties": self.properties,
-            "operationParameters": self.parameters,
-            "operationMetrics": self.metrics,
-            **({"deletionVectors": self.dvs} if self.dvs else {}),
-            **(
-                {"userMetadata": self.user_metadata}
-                if self.user_metadata is not None
-                else {}
-            ),
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "Commit":
-        return Commit(
-            version=d["version"],
-            timestamp=d["timestamp"],
-            operation=d["operation"],
-            add=[FileEntry.from_json(f) for f in d.get("add", [])],
-            remove=d.get("remove", []),
-            schema_json=d.get("schema"),
-            partition_by=d.get("partitionBy"),
-            properties=d.get("properties"),
-            parameters=d.get("operationParameters", {}),
-            metrics=d.get("operationMetrics", {}),
-            dvs=d.get("deletionVectors", {}),
-            user_metadata=d.get("userMetadata"),
-        )
 
 
 # max columns to carry min/max stats for (Delta's
@@ -659,8 +531,7 @@ class LogTable:
     ):
         self.spark = spark
         self.path = os.path.abspath(path)
-        self.fs = fs  # driver-side metadata I/O seam (see fsio.py)
-        self._commits: list[Commit] | None = None  # lazy log cache
+        self.log = CommitLog(self.path, fs)
         # one-shot commit annotation queued by with_user_metadata()
         self._pending_user_metadata: str | None = None
 
@@ -669,36 +540,28 @@ class LogTable:
     # ------------------------------------------------------------------
 
     @property
-    def _log_path(self) -> str:
-        return os.path.join(self.path, LOG_DIR)
+    def fs(self) -> FileSystem:
+        """Driver-side metadata I/O seam (see fsio.py), shared with the log."""
+        return self.log.fs
+
+    @fs.setter
+    def fs(self, fs: FileSystem) -> None:
+        self.log.fs = fs
 
     def exists(self) -> bool:
-        return self.fs.isdir(self._log_path) and bool(self.fs.listdir(self._log_path))
+        return self.log.exists()
 
     def commits(self) -> list[Commit]:
-        """Commit list, cached per already-read version. The dir listing
-        runs every call (cheap metadata op) so commits written by OTHER
-        handles — streaming sinks, concurrent writers — are picked up;
-        only the new tail is parsed."""
-        names = (
-            sorted(n for n in self.fs.listdir(self._log_path) if n.endswith(".json"))
-            if self.fs.isdir(self._log_path)
-            else []
-        )
-        if self._commits is None:
-            self._commits = []
-        if len(names) < len(self._commits):  # external truncation — reload
-            self._commits = []
-        for name in names[len(self._commits):]:
-            data = self.fs.read_json(os.path.join(self._log_path, name))
-            self._commits.append(Commit.from_json(data))
-        return self._commits
+        """Every commit in the log, from a fresh listing (see CommitLog),
+        so commits written by OTHER handles — streaming sinks,
+        concurrent writers, pruners — are always seen."""
+        return self.log.commits()
 
     def version(self) -> int:
-        cs = self.commits()
-        if not cs:
+        vs = self.log.versions()
+        if not vs:
             raise FileNotFoundError(f"not a log table: {self.path}")
-        return cs[-1].version
+        return vs[-1]
 
     def _required_features(self, commit: Commit, eff: dict[str, str]) -> set[str]:
         """Features the table state after ``commit`` relies on — derived
@@ -737,26 +600,7 @@ class LogTable:
         capability. Steady-state commits see no missing features and
         are left untouched — only the first enabling commit becomes a
         metadata commit (matching Delta's one-time protocol upgrade)."""
-        try:
-            cur = (
-                self._properties_at(commit.version - 1)
-                if commit.version > 0
-                else {}
-            )
-        except (FileNotFoundError, ValueError) as exc:
-            # expected only when the prior version is log-pruned (or
-            # the table dir vanished mid-write); anything else — a
-            # corrupt commit JSON (JSONDecodeError is a ValueError!),
-            # an IO fault — must PROPAGATE, or the effective feature
-            # set degrades to the commit's own properties and the
-            # unknown-feature write gate is silently bypassed
-            if isinstance(exc, json.JSONDecodeError):
-                raise
-            cur = {}
-        if commit.properties is not None and commit.operation in _PROPS_REPLACE_OPS:
-            eff = dict(commit.properties)
-        else:
-            eff = {**cur, **(commit.properties or {})}
+        eff = fold_properties(self.log.properties_at(commit.version - 1), commit)
         enabled = _enabled_features(eff)
         unknown = enabled - WRITER_FEATURES
         if unknown:
@@ -789,22 +633,19 @@ class LogTable:
             commit.timestamp = max(
                 commit.timestamp, prev[-1].timestamp + 0.001
             )
-        self.fs.makedirs(self._log_path)
-        target = os.path.join(self._log_path, f"{commit.version:020d}.json")
         # put-if-absent is the whole commit protocol: optimistic
         # concurrency without a lock service (local: atomic hard link;
-        # object stores: conditional PUT — see fsio.py).
-        if not self.fs.put_if_absent(target, json.dumps(commit.to_json())):
+        # object stores: conditional PUT — see fsio.py). It also refuses
+        # a slot a concurrent pruner emptied below its checkpoint.
+        if not self.log.put(commit):
             raise ConcurrentWriteError(
-                f"version {commit.version} already committed at {self.path}"
+                f"version {commit.version} already committed or pruned at {self.path}"
             )
-        if self._commits is not None:
-            self._commits.append(commit)
         try:
             # interval from delta.checkpointInterval when set (per-table
             # tuning for high-commit-rate workloads), Delta's 10 default
             interval = int(
-                self._properties_at(commit.version).get(
+                self.log.properties_at(commit.version).get(
                     "delta.checkpointInterval", CHECKPOINT_INTERVAL
                 )
             )
@@ -812,14 +653,14 @@ class LogTable:
             interval = CHECKPOINT_INTERVAL
         if commit.version > 0 and commit.version % max(1, interval) == 0:
             try:
-                self._write_checkpoint(commit.version)
+                self.log.write_checkpoint(commit.version)
                 self._prune_log()
             except Exception:
                 pass  # optimization only — never fail a landed commit
 
     def _next_version(self) -> int:
-        cs = self.commits()
-        return (cs[-1].version + 1) if cs else 0
+        vs = self.log.versions()
+        return (vs[-1] + 1) if vs else 0
 
     def _commit_tx(self, commit: Commit, attempts: int = 15) -> int:
         """Commit with optimistic conflict resolution (WriteSerializable,
@@ -906,6 +747,13 @@ class LogTable:
     def _check_rebase_conflicts(self, ours: Commit, theirs: list[Commit]) -> None:
         """Raise a typed conflict error if ``ours`` cannot be replayed
         on top of ``theirs`` (see :meth:`_commit_tx`)."""
+        if theirs and theirs[0].version != ours.version:
+            # the commits that won the race were pruned before we could
+            # read them: nothing can be checked, so nothing is rebased
+            raise ConcurrentWriteError(
+                f"{self.path}: commits racing {ours.operation} at version "
+                f"{ours.version} were pruned from the log; retry it"
+            )
 
         def _is_meta(c: Commit) -> bool:
             # a properties payload whose ONLY key is the row-tracking
@@ -973,56 +821,9 @@ class LogTable:
                 f"{sorted(dv_on_removed | removed_with_dv)[:3]}..."
             )
 
-    # ---- checkpoints (Delta's _last_checkpoint mechanism) ---------------
+    # ---- log retention -------------------------------------------------
 
-    def _checkpoint_versions(self) -> list[int]:
-        if not self.fs.isdir(self._log_path):
-            return []
-        return sorted(
-            int(n.split(".")[0])
-            for n in self.fs.listdir(self._log_path)
-            if n.endswith(".checkpoint")
-        )
-
-    def _write_checkpoint(self, version: int) -> None:
-        """Materialize the full replayed state at ``version`` so later
-        snapshot resolution replays only the commit tail — Delta's
-        checkpoint-parquet mechanism (a failure here is swallowed by the
-        caller: checkpoints are an optimization, never a correctness
-        dependency)."""
-        files, schema_json, partition_by, props, v = self._replay(version)
-        state = {
-            "version": v,
-            "add": [f.to_json() for f in files],
-            "schema": schema_json,
-            "partitionBy": partition_by,
-            "properties": props,
-        }
-        target = os.path.join(self._log_path, f"{version:020d}.checkpoint")
-        self.fs.write_text(target, json.dumps(state))  # idempotent content
-
-    def _properties_at(self, version: int) -> dict[str, str]:
-        """Properties as of ``version`` by folding the cached commit
-        list only — no checkpoint read, no active-file dict. The cheap
-        path for per-commit property lookups (the hot write path). A
-        prefix-pruned log (first commit > 0) falls back to the
-        checkpoint-backed replay, whose state carries the properties
-        the pruned commits established."""
-        cs = self.commits()
-        if not cs or cs[0].version != 0:
-            return self._replay(version)[3]
-        props: dict[str, str] = {}
-        for c in cs:
-            if c.version > version:
-                break
-            if c.properties is not None:
-                if c.operation in _PROPS_REPLACE_OPS:
-                    props = dict(c.properties)
-                else:
-                    props.update(c.properties)
-        return props
-
-    def _prune_log(self) -> list[str]:
+    def _prune_log(self) -> None:
         """Delta's log cleanup (``delta.logRetentionDuration``, 30-day
         default): at checkpoint time, delete commit JSONs that are (a)
         older than the retention horizon AND (b) strictly below the
@@ -1033,9 +834,9 @@ class LogTable:
         a long-lived table (a year of minutely commits is ~0.5 M log
         files without this); time travel beyond retention reports
         'version not found', exactly like Delta."""
-        cps = self._checkpoint_versions()
+        cps = self.log.checkpoint_versions()
         if len(cps) < 2:
-            return []
+            return
         hours = self._parse_interval_hours(
             self.properties().get("delta.logRetentionDuration", ""), 720.0
         )
@@ -1048,99 +849,21 @@ class LogTable:
         # newest checkpoint is never the cut, preserving the
         # damaged-checkpoint fallback to an older one.
         eligible = [v for v in cps[:-1] if ts.get(v, time.time()) <= horizon]
-        if not eligible:
-            return []
-        cut = eligible[-1]
-        removed = []
-        for c in list(self.commits()):
-            if c.version < cut:
-                p = os.path.join(self._log_path, f"{c.version:020d}.json")
-                self.fs.delete(p)
-                removed.append(p)
-        if removed:
-            self._commits = None  # force re-list: the prefix is gone
-            for v in cps:
-                if v < cut:
-                    self.fs.delete(
-                        os.path.join(self._log_path, f"{v:020d}.checkpoint")
-                    )
-        return removed
-
-    def _load_checkpoint(self, max_version: int) -> dict | None:
-        best = [v for v in self._checkpoint_versions() if v <= max_version]
-        # newest first; a damaged checkpoint falls back to the next-older
-        # one (a pruned log keeps two exactly for this)
-        for v in reversed(best):
-            path = os.path.join(self._log_path, f"{v:020d}.checkpoint")
-            try:
-                return self.fs.read_json(path)
-            except (OSError, json.JSONDecodeError):
-                continue
-        return None  # no readable checkpoint → full replay
+        if eligible:
+            self.log.prune_below(eligible[-1])
 
     # ---- snapshot state ------------------------------------------------
 
     def _replay(self, version: int | None = None, timestamp: float | None = None):
-        """Replay the log → (active file entries, schema_json,
-        partition_by, properties, version).
-
-        Resolution starts from the newest checkpoint at or below the
-        target version and applies only the commit tail after it, so
-        snapshot cost is O(files + commits-since-checkpoint), not
-        O(all commits) — the property that keeps a long-lived table
-        (thousands of commits) readable at scale."""
-        cs = self.commits()
-        if not cs:
-            raise FileNotFoundError(f"not a log table: {self.path}")
+        """Snapshot → (active file entries, schema_json, partition_by,
+        properties, version); see :meth:`CommitLog.snapshot`. A
+        ``timestamp`` selects the last commit at or before it."""
         if timestamp is not None:
-            eligible = [c for c in cs if c.timestamp <= timestamp]
+            eligible = [c.version for c in self.commits() if c.timestamp <= timestamp]
             if not eligible:
                 raise ValueError(f"no commit at or before timestamp {timestamp}")
-            version = eligible[-1].version
-        active: dict[str, FileEntry] = {}
-        schema_json: str | None = None
-        partition_by: list[str] = []
-        props: dict[str, str] = {}
-        seen = False
-        start_after = -1
-        cp = self._load_checkpoint(version if version is not None else cs[-1].version)
-        if cp is not None:
-            active = {d["path"]: FileEntry.from_json(d) for d in cp["add"]}
-            schema_json = cp["schema"]
-            partition_by = cp["partitionBy"] or []
-            props = dict(cp["properties"] or {})
-            start_after = cp["version"]
-            seen = True
-        for c in cs:
-            if c.version <= start_after:
-                continue
-            if version is not None and c.version > version:
-                break
-            seen = True
-            for p in c.remove:
-                active.pop(p, None)
-            for f in c.add:
-                active[f.path] = f
-            for p, dvfiles in c.dvs.items():
-                e = active.get(p)
-                if e is not None:
-                    # copy-on-write: the cached Commit owns its entries
-                    active[p] = _dc_replace(e, dv=(e.dv or []) + dvfiles)
-            if c.schema_json:
-                schema_json = c.schema_json
-            if c.partition_by is not None:
-                partition_by = c.partition_by
-            if c.properties is not None:
-                if c.operation in _PROPS_REPLACE_OPS:
-                    # replace wholesale: the commit carries the full
-                    # post-removal map; merging would resurrect the keys
-                    props = dict(c.properties)
-                else:
-                    props.update(c.properties)
-        if version is not None and not seen:
-            raise ValueError(f"version {version} not found (table at {self.version()})")
-        v = version if version is not None else cs[-1].version
-        return list(active.values()), schema_json, partition_by, props, v
+            version = eligible[-1]
+        return self.log.snapshot(version)
 
     def schema(self) -> T.StructType:
         _, schema_json, _, _, _ = self._replay()

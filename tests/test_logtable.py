@@ -706,9 +706,12 @@ def test_optimistic_concurrency_conflict(spark, table):
         ConcurrentWriteError,
     )
 
-    # another writer claims the next version out from under this handle
+    # a handle that has read the log, then another writer claims the
+    # next version out from under it
+    t2 = LogTable(spark, table.path)
+    t2.commits()
     nxt = table._next_version()
-    path = os.path.join(table._log_path, f"{nxt:020d}.json")
+    path = os.path.join(table.log.dir, f"{nxt:020d}.json")
     with open(path, "w") as fh:
         _json.dump(
             {"version": nxt, "timestamp": 0, "operation": "WRITE", "add": [],
@@ -716,8 +719,6 @@ def test_optimistic_concurrency_conflict(spark, table):
              "operationParameters": {}, "operationMetrics": {}},
             fh,
         )
-    t2 = LogTable(spark, table.path)  # stale handle that hasn't seen it
-    t2._commits = table.commits()[: nxt]  # force staleness
     with pytest.raises(ConcurrentWriteError):
         t2._commit(
             __import__(
@@ -811,15 +812,15 @@ def test_merge_legacy_entries_without_stats_stay_candidates(spark, tmp_path):
     # simulate a pre-stats log: strip stats in memory and on disk
     import json as _json
 
-    for name in os.listdir(t._log_path):
-        p = os.path.join(t._log_path, name)
+    for name in os.listdir(t.log.dir):
+        p = os.path.join(t.log.dir, name)
         with open(p) as fh:
             d = _json.load(fh)
         for f in d.get("add", []):
             f.pop("stats", None)
         with open(p, "w") as fh:
             _json.dump(d, fh)
-    t._commits = None
+    t.log.cache.clear()  # the files changed under cached versions
     assert all(f.stats is None for f in t._replay()[0])
     res = t.upsert(spark.createDataFrame([(2, "B2")], schema), ["id"])
     assert res["numUpdatedRows"] == 1
@@ -2385,7 +2386,7 @@ def test_checkpoint_interval_property(spark, tmp_path):
     )
     for i in range(7):
         t.append(spark.createDataFrame([(i,)], "a int"))
-    assert t._checkpoint_versions() == [3, 6]
+    assert t.log.checkpoint_versions() == [3, 6]
 
 
 def test_log_retention_prunes_at_checkpoint_granularity(spark, tmp_path):
@@ -2415,11 +2416,89 @@ def test_log_retention_prunes_at_checkpoint_granularity(spark, tmp_path):
     assert t2.read().count() == 10
     # damaged newest checkpoint → falls back to the older kept one
     import os as _os
-    cps = t._checkpoint_versions()
-    with open(_os.path.join(t._log_path, f"{cps[-1]:020d}.checkpoint"), "w") as fh:
+    cps = t.log.checkpoint_versions()
+    with open(_os.path.join(t.log.dir, f"{cps[-1]:020d}.checkpoint"), "w") as fh:
         fh.write("garbage")
     t3 = LogTable(spark, str(tmp_path / "lr"))
     assert t3.read().count() == 10
+
+
+def _pruning_table(spark, path):
+    """v0 create + v1..v4 appends of 3 rows; checkpoints every 3
+    commits and zero log retention, so each checkpoint prunes."""
+    t = LogTable.create(
+        spark, path,
+        T.StructType([T.StructField("a", T.IntegerType())]),
+        properties={
+            "delta.checkpointInterval": "3",
+            "delta.logRetentionDuration": "interval 0 hours",
+        },
+    )
+    _append_batches(spark, t, 4)
+    return t
+
+
+def _append_batches(spark, t, n):
+    for _ in range(n):
+        t.append(spark.createDataFrame([(1,), (2,), (3,)], "a int"))
+
+
+def _log_layout(path):
+    """(commit versions, checkpoint versions) on disk."""
+    names = os.listdir(os.path.join(path, "_log"))
+    return (
+        sorted(int(n.split(".")[0]) for n in names if n.endswith(".json")),
+        sorted(int(n.split(".")[0]) for n in names if n.endswith(".checkpoint")),
+    )
+
+
+def test_stale_handle_sees_pruned_log_and_keeps_its_write(spark, tmp_path):
+    """A handle opened before another handle's checkpoints pruned the
+    log must see the new head, not its cached v4: otherwise its next
+    append lands at v5, below checkpoint 12, where no snapshot reads it
+    and the acknowledged rows are lost."""
+    path = str(tmp_path / "stale")
+    a = _pruning_table(spark, path)
+    assert a.version() == 4 and a.read().count() == 12
+    _append_batches(spark, LogTable(spark, path), 12)
+    assert _log_layout(path) == ([12, 13, 14, 15, 16], [12, 15])
+    assert a.version() == 16 and a.read().count() == 48
+    _append_batches(spark, a, 1)
+    assert a.version() == 17
+    assert LogTable(spark, path).read().count() == 51
+
+
+def test_commit_refuses_slot_emptied_by_concurrent_pruner(spark, tmp_path):
+    """Another handle appends and prunes between this handle planning
+    version 5 and writing it, so slot 5 is free again but lies below
+    checkpoint 12: the commit must be refused (nothing left in the log)
+    rather than acknowledged and lost; a retry lands on the new head."""
+    from databricks_delta_lake_migration_spark.tables.fsio import FileSystem
+    from databricks_delta_lake_migration_spark.tables.logtable import (
+        ConcurrentWriteError,
+    )
+
+    path = str(tmp_path / "race")
+    _pruning_table(spark, path)
+
+    class PrunerFirstFS(FileSystem):
+        fired = False
+
+        def put_if_absent(self, target, text):
+            if not self.fired:
+                self.fired = True
+                _append_batches(spark, LogTable(spark, path), 12)
+            return super().put_if_absent(target, text)
+
+    a = LogTable(spark, path, fs=PrunerFirstFS())
+    assert a.version() == 4
+    with pytest.raises(ConcurrentWriteError, match="pruned"):
+        _append_batches(spark, a, 1)
+    assert _log_layout(path) == ([12, 13, 14, 15, 16], [12, 15])
+    assert LogTable(spark, path).read().count() == 48
+    _append_batches(spark, a, 1)
+    assert a.version() == 17
+    assert LogTable(spark, path).read().count() == 51
 
 
 def test_log_retention_default_keeps_everything(spark, tmp_path):

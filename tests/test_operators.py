@@ -1908,26 +1908,20 @@ def test_connected_components_star_matches_union_find(spark):
 
 
 def test_local_shuffle_partitions_track_session_master():
-    """r12 (guide §2.5): the local profile's shuffle fan-out follows the
-    session's FINAL local[N] master (driver-granted SPARK_GRAFT_CPUS or
-    an explicit caller master) instead of pinning 32 — the driver
-    benches at several core counts and the scaling measurement must not
+    """The shuffle fan-out follows the session's FINAL local[N] master
+    (from SPARK_GRAFT_CPUS or an explicit caller master) instead of
+    pinning 32 — benchmarks run at several core counts and must not
     schedule 32 shuffle tasks onto 8 cores; nor may an unrelated env
     var desync a caller-pinned master. local[*]/garbage falls back to
-    the profile; cluster profiles keep their fixed reference sizing."""
+    the fixed default."""
     from databricks_delta_lake_migration_spark.session import (
-        PROFILES,
+        SHUFFLE_PARTITIONS,
         _shuffle_partitions_for,
     )
 
-    local = PROFILES["local"]
-    assert _shuffle_partitions_for(local, "local[8]") == 8
-    assert _shuffle_partitions_for(local, "local[32]") == 32
-    assert _shuffle_partitions_for(local, "local[*]") == local.shuffle_partitions
-    assert _shuffle_partitions_for(local, "local") == local.shuffle_partitions
-    assert _shuffle_partitions_for(local, "local[0]") == local.shuffle_partitions
-    assert (
-        _shuffle_partitions_for(local, "spark://host:7077")
-        == local.shuffle_partitions
-    )
-    assert _shuffle_partitions_for(PROFILES["prod"], "local[8]") == 4000
+    assert _shuffle_partitions_for("local[8]") == 8
+    assert _shuffle_partitions_for("local[32]") == 32
+    assert _shuffle_partitions_for("local[*]") == SHUFFLE_PARTITIONS
+    assert _shuffle_partitions_for("local") == SHUFFLE_PARTITIONS
+    assert _shuffle_partitions_for("local[0]") == SHUFFLE_PARTITIONS
+    assert _shuffle_partitions_for("spark://host:7077") == SHUFFLE_PARTITIONS

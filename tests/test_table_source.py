@@ -197,16 +197,14 @@ def test_stream_source_change_feed(spark, tmp_path):
 
 
 def test_plainlog_state_matches_logtable_across_ddl(spark, tmp_path):
-    """The streaming source plans from a pure-python log fold
-    (_PlainLog) with no SparkSession; it must agree with LogTable's
+    """The streaming source plans from the Spark-free log reader
+    (CommitLog) with no SparkSession; it must agree with LogTable's
     own replay for schema and properties across every property-bearing
     DDL shape (merge vs replace semantics), or the source would plan
     against a stale schema/mapping."""
     import json
 
-    from databricks_delta_lake_migration_spark.streaming.table_source import (
-        _PlainLog,
-    )
+    from databricks_delta_lake_migration_spark.tables.log import CommitLog
 
     t = LogTable.create(spark, str(tmp_path / "t"), SCHEMA)
     t.append(spark.createDataFrame([(1, 1.0)], SCHEMA))
@@ -216,7 +214,7 @@ def test_plainlog_state_matches_logtable_across_ddl(spark, tmp_path):
     t.unset_properties(["k"])          # props REPLACE op
     t.update("id = 1", {"val": "val + 1"})
 
-    schema_json, props = _PlainLog(t.path).state()
+    _, schema_json, _, props, _ = CommitLog(t.path).snapshot()
     assert T.StructType.fromJson(json.loads(schema_json)) == t.schema()
     assert props == t.properties()
 
@@ -247,11 +245,9 @@ def test_stream_source_raises_on_pruned_history(spark, tmp_path):
     for n in os.listdir(log_dir):
         os.utime(os.path.join(log_dir, n), (old, old))
     t.append(spark.createDataFrame([(100, 1.0)], SCHEMA))
-    from databricks_delta_lake_migration_spark.streaming.table_source import (
-        _PlainLog,
-    )
+    from databricks_delta_lake_migration_spark.tables.log import CommitLog
 
-    vs = _PlainLog(t.path).versions()
+    vs = CommitLog(t.path).versions()
     assert vs[0] > 0, "log prefix should have been pruned"
 
     with pytest.raises(Exception, match="pruned"):
