@@ -18,15 +18,22 @@ silver/gold by event_date, so daily re-runs prune to one partition
 and ``replaceWhere`` keeps them idempotent; every aggregate is a
 single groupBy (map-side partial agg); the only shuffles are the
 silver dedup window and the gold groupBy, both keyed on high-
-cardinality columns (no skew).
+cardinality columns (no skew). Each silver and gold product is
+computed once: the write job itself observes the replaced date range
+(``overwrite(replace_range=…)``), so there is no separate bounds or
+validation pass. The five gold products are independent tables and
+are written concurrently, one thread each; Spark's scheduler runs
+their jobs side by side on the free cores.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..tables import LogTable
 
@@ -408,13 +415,8 @@ class MedallionPipeline:
         )
         # idempotent re-run: replace exactly this batch's date range
         # (K3 — 03_gold_aggregation.py:82-86 uses replaceWhere the same
-        # way); a metadata-sized 1-row aggregate finds the bounds
-        lo, hi = silver.agg(F.min("order_date"), F.max("order_date")).first()
-        if lo is None:
-            return t
-        t.overwrite(
-            silver, replace_where=f"order_date >= '{lo}' AND order_date <= '{hi}'"
-        )
+        # way); the write job itself observes the bounds
+        t.overwrite(silver, replace_range="order_date")
         return t
 
     def run_silver_users(self, snapshot: DataFrame, now: str) -> LogTable:
@@ -435,8 +437,14 @@ class MedallionPipeline:
 
     def run_gold_products(self) -> dict[str, LogTable]:
         """The five gold products (03_gold_aggregation.py:52-350), each
-        its own log table; date-keyed products use replaceWhere for
-        idempotent daily re-runs."""
+        its own log table; date-keyed products replace their batch's
+        date range for idempotent daily re-runs.
+
+        Each product is an independent transaction on its own table, so
+        the five are written as one concurrent wave, one thread each;
+        the caller's job group, description and tags reach every
+        product's jobs. If a product fails, the others still commit and
+        the first failure (in product order) is raised."""
         silver_ev = LogTable(self.spark, self.silver_path()).read()
         silver_tx = LogTable(self.spark, self._table("silver_transactions")).read()
         users_cur = (
@@ -444,30 +452,30 @@ class MedallionPipeline:
             .read()
             .filter(F.col("is_current"))
         )
-        products: dict[str, DataFrame] = {
-            "gold_daily_user_activity": daily_user_activity(silver_ev),
-            "gold_transaction_analytics": transaction_analytics(silver_tx),
-            "gold_user_ltv": user_ltv(silver_tx, users_cur),
-            "gold_cohort_analysis": cohort_analysis(silver_tx),
-            "gold_daily_kpis": daily_kpis(silver_tx, silver_ev),
+        products: dict[str, tuple[DataFrame, str | None]] = {
+            "gold_daily_user_activity": (daily_user_activity(silver_ev), "event_date"),
+            "gold_transaction_analytics": (transaction_analytics(silver_tx), "order_date"),
+            "gold_user_ltv": (user_ltv(silver_tx, users_cur), None),
+            "gold_cohort_analysis": (cohort_analysis(silver_tx), None),
+            "gold_daily_kpis": (daily_kpis(silver_tx, silver_ev), "kpi_date"),
         }
-        date_key = {
-            "gold_daily_user_activity": "event_date",
-            "gold_transaction_analytics": "order_date",
-            "gold_daily_kpis": "kpi_date",
-        }
-        out: dict[str, LogTable] = {}
-        for name, df in products.items():
+
+        def write(name: str, df: DataFrame, date_key: str | None) -> LogTable:
             t = LogTable.create(self.spark, self._table(name), df.schema)
-            if name in date_key:
-                k = date_key[name]
-                lo, hi = df.agg(F.min(k), F.max(k)).first()
-                if lo is not None:
-                    t.overwrite(df, replace_where=f"{k} >= '{lo}' AND {k} <= '{hi}'")
-            else:
-                t.overwrite(df)
-            out[name] = t
-        return out
+            t.overwrite(df, replace_range=date_key)
+            return t
+
+        with ThreadPoolExecutor(max_workers=len(products)) as pool:
+            futures = {
+                name: pool.submit(
+                    inheritable_thread_target(self.spark)(write), name, df, key
+                )
+                for name, (df, key) in products.items()
+            }
+        for f in futures.values():
+            if f.exception() is not None:
+                raise f.exception()
+        return {name: f.result() for name, f in futures.items()}
 
     def run_full(
         self,

@@ -44,7 +44,7 @@ import uuid
 from functools import reduce
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -200,6 +200,22 @@ class ConcurrentTransactionError(ConcurrentWriteError):
 
 class ConstraintViolationError(ValueError):
     pass
+
+
+def _count_if(c: Column) -> Column:
+    """Rows where ``c`` is TRUE (NULL counts as not true), 0 when none."""
+    return F.coalesce(F.sum(F.when(c, 1).otherwise(0)), F.lit(0))
+
+
+def _check_aggs(checks: dict[str, str], rows: Column | None = None) -> list[Column]:
+    """One violation counter per write-time predicate, named
+    ``__check_<name>``; a NULL predicate is not a violation. ``rows``
+    limits the count to the rows the write keeps."""
+    def bad(pred: str) -> Column:
+        v = ~F.expr(pred)
+        return v if rows is None else rows & v
+
+    return [_count_if(bad(p)).alias(f"__check_{n}") for n, p in checks.items()]
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -1955,21 +1971,42 @@ class LogTable:
         )
         return t
 
-    def _check_constraints(self, df: DataFrame) -> None:
-        """CHECK constraints (Q6 — README.md:303-306): properties of the
-        form ``constraint.<name> = <sql predicate>``, plus generated-
-        column contracts."""
-        checks = self._all_checks()
-        if not checks:
-            return
-        aggs = [
-            F.sum(F.when(~F.expr(pred), 1).otherwise(0)).alias(name)
-            for name, pred in checks.items()
-        ]
-        row = df.agg(*aggs).collect()[0]
-        bad = {name: row[name] for name in checks if (row[name] or 0) > 0}
+    @staticmethod
+    def _observe(
+        df: DataFrame, metrics: list[Column], checks: dict[str, str]
+    ) -> tuple[DataFrame, Observation | None]:
+        """Attach ``metrics`` and the violation counters of ``checks``
+        (CHECK constraints — Q6, README.md:303-306 — and generated-
+        column contracts, see :meth:`_all_checks`) to ``df``, so the
+        write job itself computes them: the data is read once."""
+        aggs = metrics + _check_aggs(checks)
+        if not aggs:
+            return df, None
+        obs = Observation()
+        return df.observe(obs, *aggs), obs
+
+    def _observed(
+        self,
+        obs: Observation | None,
+        checks: dict[str, str],
+        entries: list[FileEntry],
+    ) -> dict[str, Any]:
+        """The metrics of a finished observed write; a CHECK violation
+        discards the written files and raises."""
+        m = obs.get if obs is not None else {}
+        bad = {n: m[f"__check_{n}"] for n in checks if m[f"__check_{n}"] > 0}
         if bad:
+            self._discard(entries)
             raise ConstraintViolationError(f"CHECK constraint violations: {bad}")
+        return m
+
+    def _discard(self, entries: list[FileEntry]) -> None:
+        """Roll back a write that will not commit: delete its data files
+        and bloom sidecars (no commit references them yet)."""
+        for e in entries:
+            self.fs.delete(os.path.join(self.path, e.path))
+            if e.bloom:
+                self.fs.delete(os.path.join(self.path, e.bloom))
 
     def _write_files(
         self, df: DataFrame, partition_by: list[str]
@@ -2098,9 +2135,11 @@ class LogTable:
         schema = self._evolve_schema(df, merge_schema)
         _, _, partition_by, props, _ = self._replay()
         data = self._align(df, schema, defaults=self._column_defaults(props))
-        self._check_constraints(data)
+        checks = self._all_checks()
+        data, obs = self._observe(data, [], checks)
         data = self._maybe_optimize_write(data, partition_by, props)
         entries = self._write_files(data, partition_by)
+        self._observed(obs, checks, entries)
         version = self._commit_tx(
             Commit(
                 version=self._next_version(),
@@ -2257,9 +2296,11 @@ class LogTable:
         df = self._apply_generated(df)
         _, _, partition_by, props, _ = self._replay()
         data = self._align(df, schema, defaults=self._column_defaults(props))
-        self._check_constraints(data)
+        checks = self._all_checks()
+        data, obs = self._observe(data, [], checks)
         data = self._maybe_optimize_write(data, partition_by, props)
         entries = self._write_files(data, partition_by)
+        self._observed(obs, checks, entries)
         n_rows = sum(e.num_records for e in entries)
         version = self._commit_tx(
             Commit(
@@ -2290,78 +2331,92 @@ class LogTable:
         overwrite_schema: bool = False,
         dynamic: bool = False,
         extra_properties: dict[str, str] | None = None,
+        replace_range: str | None = None,
     ) -> None:
         """Delta overwrite (K2) / partition-scoped idempotent overwrite
         via ``replace_where`` (K3 — 03_gold_aggregation.py:82-86) /
         ``dynamic=True`` = Spark's ``partitionOverwriteMode=dynamic``:
         replace exactly the partitions present in ``df``, keep the
         rest. Unlike ``replace_where`` there is no predicate to declare
-        — the incoming data itself names the partitions. One
-        metadata-sized distinct over the partition columns; file
-        selection is pure path matching (no data read)."""
+        — the incoming data itself names the partitions, read off the
+        written files' partition directories (no extra job).
+
+        ``replace_range=k`` replaces the batch's own key range: the
+        write observes ``min(k)``/``max(k)`` and the commit records
+        ``replaceWhere = "k >= '<min>' AND k <= '<max>'"``. A batch
+        that is empty or whose keys are all NULL commits nothing.
+
+        Every variant is one pass over ``df``: CHECK constraints, the
+        ``replace_where`` rows that violate the predicate (a NULL
+        predicate is not a violation) and the range are all counted by
+        the write job itself. A violation deletes the just-written
+        files and raises before anything is committed. Rows of replaced
+        files that fall outside the predicate are rewritten (a second
+        job, only when such files exist)."""
+        if dynamic and (replace_where is not None or replace_range is not None):
+            raise ValueError("dynamic excludes replace_where and replace_range")
+        if replace_where is not None and replace_range is not None:
+            raise ValueError("replace_where and replace_range are mutually exclusive")
         files, schema_json, partition_by, props, _ = self._replay()
+        if dynamic and not partition_by:
+            raise ValueError("dynamic overwrite requires a partitioned table")
         df, ident_props = self._apply_identity(df)
         df = self._apply_generated(df)
         schema = (
             df.schema if overwrite_schema else T.StructType.fromJson(json.loads(schema_json))
         )
         data = self._align(df, schema, defaults=self._column_defaults(props))
-        self._check_constraints(data)
+        checks = self._all_checks()
+        metrics = []
+        if replace_where is not None:
+            metrics.append(_count_if(~F.expr(replace_where)).alias("__bad"))
+        if replace_range is not None:
+            k = F.col(replace_range)
+            metrics += [F.min(k).alias("__lo"), F.max(k).alias("__hi")]
+        data, obs = self._observe(data, metrics, checks)
         data = self._maybe_optimize_write(data, partition_by, props)
+        entries = self._write_files(data, partition_by)
+        m = self._observed(obs, checks, entries)
+        if m.get("__bad"):
+            # new data must satisfy the predicate (delta semantics)
+            self._discard(entries)
+            raise ValueError(
+                f"replaceWhere: {m['__bad']} input rows violate '{replace_where}'"
+            )
+        if replace_range is not None:
+            if m["__lo"] is None:  # no keyed row: nothing to replace
+                self._discard(entries)
+                return
+            replace_where = (
+                f"{replace_range} >= '{m['__lo']}' AND {replace_range} <= '{m['__hi']}'"
+            )
 
         removed: list[str]
-        carried: list[FileEntry] = []
-        extra_add: list[FileEntry] = []
         if dynamic:
-            if not partition_by:
-                raise ValueError("dynamic overwrite requires a partitioned table")
-            if replace_where is not None:
-                raise ValueError("dynamic and replace_where are mutually exclusive")
-            # canonicalize row values to the decoded-path representation
-            # (_partition_values): None stays None (hive NULL dir), bools
-            # write as lowercase, everything else as its str() form —
-            # raw str() produced 'None'/'True' which never matched a
-            # path segment, so those partitions silently duplicated.
-            def canon(v):
-                if v is None:
-                    return None
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                return str(v)
-
-            new_parts = {
-                tuple(canon(r[c]) for c in partition_by)
-                for r in data.select(*partition_by).distinct().collect()
-            }
             phys_parts = [
                 self._column_mapping().get(c, c) for c in partition_by
             ]  # paths carry physical names
-            touched_d, carried = [], []
-            for f in files:
-                pv = _partition_values(f.path)
-                key = tuple(pv.get(c) for c in phys_parts)
-                (touched_d if key in new_parts else carried).append(f)
-            removed = [f.path for f in touched_d]
+            # the same decoder reads old and new paths, so NULL, boolean
+            # and escaped partition values compare equal by construction
+            def part_key(path: str) -> tuple:
+                pv = _partition_values(path)
+                return tuple(pv.get(c) for c in phys_parts)
+
+            new_parts = {part_key(e.path) for e in entries}
+            removed = [f.path for f in files if part_key(f.path) in new_parts]
         elif replace_where is None:
             removed = [f.path for f in files]
         else:
             pred = F.expr(replace_where)
-            # new data must satisfy the predicate (delta semantics)
-            n_bad = data.filter(~pred).count()
-            if n_bad:
-                raise ValueError(
-                    f"replaceWhere: {n_bad} input rows violate '{replace_where}'"
-                )
-            touched, untouched = self._split_files_by_predicate(files, pred, replace_where)
+            touched, _ = self._split_files_by_predicate(files, pred, replace_where)
             removed = [f.path for f in touched]
-            carried = untouched
             # rows in touched files that do NOT match the predicate survive
             if touched:
                 rt_on = props.get(RT_PROP) == "true"
                 survivors = self._read_file_subset(
                     touched, with_row_tracking=rt_on
                 ).filter(~pred)
-                extra_add = self._write_files(
+                entries += self._write_files(
                     self._align(
                         survivors,
                         schema,
@@ -2369,7 +2424,6 @@ class LogTable:
                     ),
                     partition_by,
                 )
-        entries = self._write_files(data, partition_by) + extra_add
         self._commit_tx(
             Commit(
                 version=self._next_version(),
@@ -2392,7 +2446,6 @@ class LogTable:
                 },
             )
         )
-        del carried  # carried files stay active simply by not being removed
 
     def read_files(self, entries: list[FileEntry]) -> DataFrame:
         return self._read_file_subset(entries)
@@ -2671,13 +2724,7 @@ class LogTable:
         schema = self.schema()
         rt_on = self.properties().get(RT_PROP) == "true"
         old = self._read_file_subset(touched, with_row_tracking=rt_on)
-        # one pass: count matched rows via Observation during the write
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        updated = old.withColumn("__hit", pred).observe(
-            obs, F.coalesce(F.sum(F.when(F.col("__hit"), 1).otherwise(0)), F.lit(0)).alias("n")
-        ).withColumns(
+        updated = old.withColumn("__hit", pred).withColumns(
             {
                 c: F.when(F.col("__hit"), F.expr(e)).otherwise(F.col(c))
                 for c, e in set_exprs.items()
@@ -2698,13 +2745,17 @@ class LogTable:
                     F.col(ROW_COMMIT_COL)
                 ),
             )
-        updated = updated.drop("__hit")
-        self._check_constraints(updated)
+        # one pass: the write job counts matched rows and CHECK
+        # violations (carried rows included) via Observation
+        checks = self._all_checks()
+        updated, obs = self._observe(
+            updated, [_count_if(F.col("__hit")).alias("n")], checks
+        )
         entries = self._write_files(
             self._align(updated, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)),
             partition_by,
         )
-        n_updated = obs.get["n"]
+        n_updated = self._observed(obs, checks, entries)["n"]
         version = self._commit_dml(
             "UPDATE",
             entries,
@@ -2742,8 +2793,6 @@ class LogTable:
         old = self._read_file_subset(touched, with_row_tracking=rt_on)
         # one pass: deleted rows are counted by the observe node, then
         # filtered out before the sink.
-        from pyspark.sql import Observation
-
         obs = Observation()
         survivors = (
             old.withColumn("__del", pred)
@@ -4068,8 +4117,6 @@ class MergeBuilder:
         # rewrite are all collected by a single write action via
         # Observation; deleted rows flow through the observe node, then
         # are filtered out before the sink.
-        from pyspark.sql import Observation
-
         tagged = reduce(DataFrame.unionByName, out_parts)
         # Recompute generated columns on update-tagged rows (insert
         # parts already computed theirs): a MERGE UPDATE that edits base
@@ -4101,18 +4148,12 @@ class MergeBuilder:
                 }
             )
         checks = t._all_checks()
-        count_if = lambda c: F.coalesce(  # noqa: E731
-            F.sum(F.when(c, 1).otherwise(0)), F.lit(0)
-        )
         metrics = [
-            count_if(F.col(TAG) == "u").alias("u"),
-            count_if(F.col(TAG) == "d").alias("d"),
-            count_if(F.col(TAG) == "i").alias("i"),
-            count_if(F.col(TAG).isin("u", "d", "k", "t")).alias("tgt_rows"),
-        ] + [
-            count_if((F.col(TAG) != "d") & ~F.expr(pred)).alias(f"__check_{name}")
-            for name, pred in checks.items()
-        ]
+            _count_if(F.col(TAG) == "u").alias("u"),
+            _count_if(F.col(TAG) == "d").alias("d"),
+            _count_if(F.col(TAG) == "i").alias("i"),
+            _count_if(F.col(TAG).isin("u", "d", "k", "t")).alias("tgt_rows"),
+        ] + _check_aggs(checks, rows=F.col(TAG) != "d")
         obs = Observation()
         result = (
             tagged.observe(obs, *metrics)
@@ -4121,21 +4162,12 @@ class MergeBuilder:
         )
         entries = t._write_files(result, partition_by)
         m = obs.get
-
-        def _rollback():
-            # uncommitted files — nothing references them yet
-            for e in entries:
-                t.fs.delete(os.path.join(t.path, e.path))
-
         if skip_probe and m["tgt_rows"] != sum(f.num_records for f in touched):
-            _rollback()
+            t._discard(entries)
             raise ValueError(
                 "MERGE: multiple source rows matched the same target row"
             )
-        bad = {n: m[f"__check_{n}"] for n in checks if m[f"__check_{n}"] > 0}
-        if bad:
-            _rollback()
-            raise ConstraintViolationError(f"CHECK constraint violations: {bad}")
+        t._observed(obs, checks, entries)
         n_updated, n_deleted, n_inserted = m["u"], m["d"], m["i"]
         version = t._commit_dml(
             "MERGE",

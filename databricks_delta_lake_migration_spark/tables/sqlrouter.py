@@ -515,7 +515,7 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
 
     if m := _ADD_CONSTRAINT.match(query):
         # Delta semantics: existing rows must already satisfy the
-        # predicate (NULL passes, as in _check_constraints) or the DDL
+        # predicate (NULL passes, as in write-time CHECK enforcement) or the DDL
         # fails — a constraint must never be born violated.
         from pyspark.sql import functions as F
 

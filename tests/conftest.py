@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,24 @@ def spark():
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def job_ids(spark):
+    """``job_ids(fn)`` runs ``fn`` under a fresh Spark job group set on
+    the calling thread and returns the sorted ids of the jobs counted
+    in that group."""
+    sc = spark.sparkContext
+
+    def run(fn) -> list[int]:
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -173,6 +173,104 @@ def test_replace_where_rejects_out_of_scope_rows(spark, table):
         table.overwrite(bad, replace_where="day = 'd1'")
 
 
+def _uncommitted_files(t):
+    """Data files and bloom sidecars under the table root that no
+    commit ever added (change-feed files excluded)."""
+    committed = set()
+    for c in t.commits():
+        for e in c.add:
+            committed.add(os.path.normpath(e.path))
+            if e.bloom:
+                committed.add(os.path.normpath(e.bloom))
+    out = []
+    for d, _, names in os.walk(t.path):
+        for n in names:
+            rel = os.path.relpath(os.path.join(d, n), t.path)
+            if rel.startswith("_changes"):
+                continue
+            if n.endswith((".parquet", ".bloom.json")) and rel not in committed:
+                out.append(rel)
+    return out
+
+
+def test_replace_where_overwrite_is_one_job(spark, tmp_path, job_ids):
+    """The replaceWhere check rides the write job: the input is
+    computed once (a separate violation count made it two jobs)."""
+    t = LogTable.create(spark, str(tmp_path / "t"), SCHEMA, partition_by=["day"])
+    df = rows_df(spark, [(1, "A", 1.0, "d1"), (2, "B", 2.0, "d1")])
+    assert len(job_ids(lambda: t.overwrite(df, replace_where="day = 'd1'"))) == 1
+    assert state(t) == {(1, "A", 1.0, "d1"), (2, "B", 2.0, "d1")}
+
+
+def test_rejected_writes_commit_nothing_and_leave_no_files(spark, tmp_path, table):
+    """A replaceWhere or CHECK violation is found by the write job
+    itself; the just-written files (and bloom sidecars) are deleted and
+    the version does not move."""
+    v = table.version()
+    mixed = rows_df(spark, [(100, "GOLD", 1.0, "d1"), (101, "GOLD", 2.0, "d2")])
+    with pytest.raises(ValueError, match="1 input rows violate"):
+        table.overwrite(mixed, replace_where="day = 'd1'")
+    assert table.version() == v
+    assert _uncommitted_files(table) == []
+
+    t = LogTable.create(
+        spark,
+        str(tmp_path / "c"),
+        SCHEMA,
+        properties={
+            "constraint.valid_amount": "amount > 0",
+            "bloomfilter.columns": '["id"]',
+        },
+    )
+    t.append(rows_df(spark, [(1, "OK", 5.0, "d1")]))
+    v = t.version()
+    bad = rows_df(spark, [(2, "OK", 1.0, "d1"), (3, "BAD", -1.0, "d1")])
+    for write in (
+        lambda: t.append(bad),
+        lambda: t.overwrite(bad),
+        lambda: t.overwrite(bad, replace_range="day"),
+        lambda: t.update("id = 1", {"amount": "-5.0"}),
+    ):
+        with pytest.raises(ConstraintViolationError, match="valid_amount"):
+            write()
+        assert t.version() == v
+        assert _uncommitted_files(t) == []
+    assert {tuple(r) for r in t.read().collect()} == {(1, "OK", 5.0, "d1")}
+
+
+def test_replace_range_empty_or_null_key_batch_commits_nothing(spark, table):
+    v, before = table.version(), state(table)
+    table.overwrite(rows_df(spark, []), replace_range="day")
+    table.overwrite(rows_df(spark, [(7, "N", 7.0, None)]), replace_range="day")
+    assert table.version() == v
+    assert state(table) == before
+    assert _uncommitted_files(table) == []
+
+
+def test_replace_range_replaces_batch_range_and_carries_survivors(spark, tmp_path):
+    """The replaced range is the batch's own [min, max] of the key;
+    rows outside it that share a file with replaced rows survive, and a
+    re-run of the same batch changes nothing."""
+    t = LogTable.create(spark, str(tmp_path / "r"), SCHEMA)  # one file
+    t.append(
+        rows_df(spark, [(i, "OLD", float(i), f"d{i}") for i in range(1, 5)])
+    )
+    batch = rows_df(spark, [(20, "NEW", 2.0, "d2"), (30, "NEW", 3.0, "d3")])
+    want = {
+        (1, "OLD", 1.0, "d1"),
+        (20, "NEW", 2.0, "d2"),
+        (30, "NEW", 3.0, "d3"),
+        (4, "OLD", 4.0, "d4"),
+    }
+    for _ in range(2):
+        t.overwrite(batch, replace_range="day")
+        assert state(t) == want
+        assert t.commits()[-1].parameters == {
+            "mode": "Overwrite",
+            "replaceWhere": "day >= 'd2' AND day <= 'd3'",
+        }
+
+
 def test_cdf_insert_update_delete(spark, table):
     table.update("id = 1", {"amount": "amount + 5"})
     table.delete("id = 2")

@@ -29,6 +29,27 @@ def pipeline(spark, tmp_path_factory):
     return pipe, gold
 
 
+@pytest.fixture(scope="module")
+def first_run_jobs(spark, tmp_path_factory, job_ids):
+    """Spark job ids of a first run of silver transactions and of the
+    gold products on a fresh root, plus those of a one-job marker run
+    just before and just after the gold products."""
+    pipe = MedallionPipeline(spark, str(tmp_path_factory.mktemp("medallion_jobs")))
+    pipe.run_bronze(load_table(spark, SF_DIR, "events"), T1)
+    pipe.run_silver()
+    pipe.run_bronze_transactions(load_table(spark, SF_DIR, "orders"), T1)
+    jobs = {"silver_tx": job_ids(pipe.run_silver_transactions)}
+    pipe.run_silver_users(load_table(spark, SF_DIR, "customer"), T1)
+
+    def marker():
+        spark.sparkContext.parallelize([0], 1).count()
+
+    jobs["marker_before"] = job_ids(marker)
+    jobs["gold_products"] = job_ids(pipe.run_gold_products)
+    jobs["marker_after"] = job_ids(marker)
+    return jobs
+
+
 def _snap(t: LogTable):
     df = t.read()
     return sorted(tuple(str(x) for x in r) for r in df.collect())
@@ -107,3 +128,49 @@ def test_scd2_two_run_state(spark, pipeline):
     pipe.run_silver_users(snap2, "2024-03-03 00:00:00")
     assert users_t.read().filter(~F.col("is_current")).count() == n_changed
     assert users_t.read().count() == n_users + n_changed
+
+
+def test_gold_wave_jobs_run_under_callers_job_group(first_run_jobs):
+    """The concurrent product writes inherit the caller's job group:
+    every job between the two markers is counted in it."""
+    (before,), (after,) = first_run_jobs["marker_before"], first_run_jobs["marker_after"]
+    assert first_run_jobs["gold_products"] == list(range(before + 1, after))
+
+
+# Upper bounds on the Spark jobs of a first run on the sf0.001 fixture,
+# measured at 2 (silver_tx) and 19 (gold_products) jobs, the same on
+# every run. Each date-keyed product is computed by its write job
+# alone; a bounds query or a separate replaceWhere check adds jobs and
+# fails here.
+SILVER_TX_MAX_JOBS = 2
+GOLD_PRODUCTS_MAX_JOBS = 19
+
+
+def test_single_pass_job_counts(first_run_jobs):
+    assert len(first_run_jobs["silver_tx"]) <= SILVER_TX_MAX_JOBS
+    assert len(first_run_jobs["gold_products"]) <= GOLD_PRODUCTS_MAX_JOBS
+
+
+def test_gold_wave_failure_keeps_other_products(spark, pipeline, monkeypatch):
+    """One product's failed write does not stop the others from
+    committing; the failure reaches the caller."""
+    pipe, gold = pipeline
+
+    def version(name: str) -> int:
+        return LogTable(spark, pipe._table(name)).version()
+
+    before = {name: version(name) for name in gold}
+    overwrite = LogTable.overwrite
+
+    def failing(self, df, **kw):
+        if self.path.endswith("gold_cohort_analysis"):
+            raise RuntimeError("injected write failure")
+        return overwrite(self, df, **kw)
+
+    monkeypatch.setattr(LogTable, "overwrite", failing)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        pipe.run_gold_products()
+    after = {name: version(name) for name in gold}
+    assert after == {
+        name: v + (name != "gold_cohort_analysis") for name, v in before.items()
+    }
