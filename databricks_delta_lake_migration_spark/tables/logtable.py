@@ -173,6 +173,14 @@ CT_UPDATE_PRE = "update_preimage"
 CT_UPDATE_POST = "update_postimage"
 CT_DELETE = "delete"
 
+# The one copy-on-write rewrite (LogTable._rewrite) labels every row it
+# writes or drops with one action; a deleted or inserted row's action
+# is also its change type. An UPDATE row carries its pre-image struct
+# beside it only when the change feed is on.
+ACTION_COL = "__action"
+PRE_IMAGE_COL = "__pre_image"
+KEEP, UPDATE, DELETE, INSERT = "keep", "update", CT_DELETE, CT_INSERT
+
 
 class ConcurrentWriteError(RuntimeError):
     pass
@@ -1833,11 +1841,13 @@ class LogTable:
                 out = out.withColumn(c, F.lit(None).cast("long"))
         return out.drop("__pid", "__mono"), props
 
-    def _generated_columns(self) -> dict[str, str]:
+    def _generated_columns(
+        self, props: dict[str, str] | None = None
+    ) -> dict[str, str]:
         """``generated.<col>`` properties → {col: sql expr}."""
         return {
             k.removeprefix("generated."): v
-            for k, v in self.properties().items()
+            for k, v in (props if props is not None else self.properties()).items()
             if k.startswith("generated.")
         }
 
@@ -1875,10 +1885,11 @@ class LogTable:
                 df = df.withColumn(c, F.expr(e))
         return df
 
-    def _all_checks(self) -> dict[str, str]:
+    def _all_checks(self, props: dict[str, str] | None = None) -> dict[str, str]:
         """Every write-time predicate: explicit CHECK constraints plus
         the implicit ``col <=> (expr)`` contract of generated columns."""
-        props = self.properties()
+        if props is None:
+            props = self.properties()
         checks = {
             k.removeprefix("constraint."): v
             for k, v in props.items()
@@ -2069,12 +2080,12 @@ class LogTable:
         self.fs.delete_tree(stage)
         return entries
 
-    def _write_changes(self, version: int, change_df: DataFrame | None) -> None:
-        if change_df is None:
-            return
-        if self.properties().get(CDF_PROP, "false") != "true":
-            return
-        mapping = self._column_mapping()
+    def _write_changes(
+        self, version: int, change_df: DataFrame, props: dict[str, str]
+    ) -> None:
+        """Write ``version``'s change-feed rows; callers call it only when
+        ``props`` (the snapshot the write replayed) has CDF on."""
+        mapping = self._column_mapping(props)
         if mapping:
             # CDF files use physical names too, so pre-rename change
             # files and post-rename ones read back uniformly
@@ -2155,10 +2166,12 @@ class LogTable:
                 },
             )
         )
-        self._write_changes(
-            version,
-            self._cdf_frame(self.read_files(entries), CT_INSERT, version),
-        )
+        if props.get(CDF_PROP) == "true":
+            self._write_changes(
+                version,
+                self._cdf_frame(self.read_files(entries), CT_INSERT, version),
+                props,
+            )
         self._maybe_autocompact(entries)
 
     def _maybe_optimize_write(
@@ -2317,10 +2330,12 @@ class LogTable:
                 metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
             )
         )
-        self._write_changes(
-            version,
-            self._cdf_frame(self.read_files(entries), CT_INSERT, version),
-        )
+        if props.get(CDF_PROP) == "true":
+            self._write_changes(
+                version,
+                self._cdf_frame(self.read_files(entries), CT_INSERT, version),
+                props,
+            )
         self._maybe_autocompact(entries)
         return {"numLoadedFiles": len(new), "numCopiedRows": n_rows}
 
@@ -2350,9 +2365,12 @@ class LogTable:
         ``replace_where`` rows that violate the predicate (a NULL
         predicate is not a violation) and the range are all counted by
         the write job itself. A violation deletes the just-written
-        files and raises before anything is committed. Rows of replaced
-        files that fall outside the predicate are rewritten (a second
-        job, only when such files exist)."""
+        files and raises before anything is committed. The rows of the
+        replaced files are tagged DELETE where ``replace_where`` is TRUE
+        and KEEP otherwise (FALSE or NULL), and the DML rewrite
+        (:meth:`_rewrite`) carries the KEEP rows into new files (a
+        second job, only when such files exist). An overwrite writes no
+        change feed."""
         if dynamic and (replace_where is not None or replace_range is not None):
             raise ValueError("dynamic excludes replace_where and replace_range")
         if replace_where is not None and replace_range is not None:
@@ -2391,6 +2409,31 @@ class LogTable:
                 f"{replace_range} >= '{m['__lo']}' AND {replace_range} <= '{m['__hi']}'"
             )
 
+        def commit(survivors: list[FileEntry], _n_changed: int = 0) -> int:
+            added = entries + survivors
+            return self._commit_tx(
+                Commit(
+                    version=self._next_version(),
+                    timestamp=time.time(),
+                    operation="WRITE",
+                    add=added,
+                    remove=removed,
+                    schema_json=schema.json() if overwrite_schema else None,
+                    # extra_properties ride the SAME commit as the data
+                    # change (atomic watermark pattern — see with_commit_props)
+                    properties={**ident_props, **(extra_properties or {})} or None,
+                    parameters={
+                        "mode": "Overwrite",
+                        **({"replaceWhere": replace_where} if replace_where else {}),
+                    },
+                    metrics={
+                        "numOutputRows": sum(e.num_records for e in added),
+                        "numAddedFiles": len(added),
+                        "numRemovedFiles": len(removed),
+                    },
+                )
+            )
+
         removed: list[str]
         if dynamic:
             phys_parts = [
@@ -2410,42 +2453,28 @@ class LogTable:
             pred = F.expr(replace_where)
             touched, _ = self._split_files_by_predicate(files, pred, replace_where)
             removed = [f.path for f in touched]
-            # rows in touched files that do NOT match the predicate survive
             if touched:
-                rt_on = props.get(RT_PROP) == "true"
-                survivors = self._read_file_subset(
-                    touched, with_row_tracking=rt_on
-                ).filter(~pred)
-                entries += self._write_files(
-                    self._align(
-                        survivors,
-                        schema,
-                        keep=(ROW_ID_COL, ROW_COMMIT_COL),
-                    ),
-                    partition_by,
+                # the replaced files' rows the predicate does not select
+                # (FALSE or NULL) are KEEP rows of one rewrite, projected
+                # onto the written schema (overwrite_schema may change it)
+                rows = self._tag_rows(
+                    touched,
+                    T.StructType.fromJson(json.loads(schema_json)),
+                    props,
+                    pred,
+                    DELETE,
                 )
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="WRITE",
-                add=entries,
-                remove=removed,
-                schema_json=schema.json() if overwrite_schema else None,
-                # extra_properties ride the SAME commit as the data
-                # change (atomic watermark pattern — see with_commit_props)
-                properties={**ident_props, **(extra_properties or {})} or None,
-                parameters={
-                    "mode": "Overwrite",
-                    **({"replaceWhere": replace_where} if replace_where else {}),
-                },
-                metrics={
-                    "numOutputRows": sum(e.num_records for e in entries),
-                    "numAddedFiles": len(entries),
-                    "numRemovedFiles": len(removed),
-                },
-            )
-        )
+                keep = (ROW_ID_COL, ROW_COMMIT_COL, ACTION_COL)
+                self._rewrite(
+                    self._align(rows, schema, keep=keep).alias("target"),
+                    schema,
+                    partition_by,
+                    props,
+                    commit,
+                    cdf=False,
+                )
+                return
+        commit([])
 
     def read_files(self, entries: list[FileEntry]) -> DataFrame:
         return self._read_file_subset(entries)
@@ -2697,137 +2726,229 @@ class LogTable:
             "_commit_version", F.lit(version).cast("long")
         ).withColumn("_commit_timestamp", ts)
 
+    def _tag_rows(
+        self,
+        touched: list[FileEntry],
+        schema: T.StructType,
+        props: dict[str, str],
+        pred: Column,
+        action: str,
+    ) -> DataFrame:
+        """The rows of ``touched`` (row tracking included when on),
+        aliased ``target`` and tagged ``action`` where ``pred`` is TRUE,
+        KEEP where it is FALSE or NULL — the input of :meth:`_rewrite`."""
+        return (
+            self._read_entries(
+                touched, schema, with_row_tracking=props.get(RT_PROP) == "true"
+            )
+            .alias("target")
+            .withColumn(ACTION_COL, F.when(pred, action).otherwise(KEEP))
+        )
+
+    def _rewrite(
+        self,
+        rows: DataFrame | None,
+        schema: T.StructType,
+        partition_by: list[str],
+        props: dict[str, str],
+        commit: Callable[[list[FileEntry], int], int],
+        *,
+        cdf: bool,
+        sets: dict[str, Column] | None = None,
+        inserts: DataFrame | None = None,
+        checks: dict[str, str] | None = None,
+        verify: Callable[[dict[str, Any], list[FileEntry]], None] | None = None,
+    ) -> dict[str, Any]:
+        """The one copy-on-write rewrite behind UPDATE, DELETE, the
+        replaceWhere survivors and MERGE (the Delta paper's DML: find
+        the touched files, rewrite their rows, commit adds and removes).
+
+        ``rows`` are the rows of the touched files, aliased ``target``
+        (MERGE: joined to its source), tagged in :data:`ACTION_COL` with
+        KEEP, UPDATE or DELETE by ``F.when(pred, ...)``, so a row whose
+        predicate is NULL is kept. ``sets`` maps each column the op
+        assigns to its value on UPDATE rows; the generated columns it
+        does not assign are recomputed from the new values. ``inserts``
+        (MERGE) are new rows already projected onto ``schema``.
+
+        One write job counts the rows per action and the CHECK
+        violations of the rows it keeps, drops the DELETE rows and
+        writes the rest; ``verify`` may still reject the written files
+        before ``commit(entries, n_changed)`` lands them. With ``cdf``,
+        the change feed is a projection of the same tagged rows: UPDATE
+        rows give their post-image and the pre-image struct carried
+        beside them, DELETE and INSERT rows give themselves. Returns the
+        observed metrics, keyed by action."""
+        sets = sets or {}
+        rt = props.get(RT_PROP) == "true"
+        action = F.col(ACTION_COL)
+        updated = action == UPDATE
+        parts = []
+        if rows is not None:
+            # projected onto ``schema`` here, so the sink only drops the
+            # tag columns (each Column call is a JVM round trip)
+            cols = [
+                (
+                    F.when(updated, sets[f.name]).otherwise(F.col(f"target.{f.name}"))
+                    if f.name in sets
+                    else F.col(f"target.{f.name}")
+                )
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in schema.fields
+            ] + [action]
+            if rt:
+                # the stable id rides the rewrite; updated rows reset
+                # their commit version (NULL → the new file's default,
+                # this commit), carried rows keep theirs
+                cols += [
+                    F.col(f"target.{ROW_ID_COL}").alias(ROW_ID_COL),
+                    F.when(updated, F.lit(None).cast("long"))
+                    .otherwise(F.col(f"target.{ROW_COMMIT_COL}"))
+                    .alias(ROW_COMMIT_COL),
+                ]
+            if cdf:
+                pre = F.struct(
+                    *[F.col(f"target.{f.name}").alias(f.name) for f in schema.fields]
+                )
+                cols.append(F.when(updated, pre).alias(PRE_IMAGE_COL))
+            parts.append(rows.select(*cols))
+        if inserts is not None:
+            ins = inserts.withColumn(ACTION_COL, F.lit(INSERT))
+            if rt:
+                # NULL tracking columns: the new file's defaults give the
+                # row a fresh id and this commit's version
+                ins = ins.withColumns(
+                    {c: F.lit(None).cast("long") for c in (ROW_ID_COL, ROW_COMMIT_COL)}
+                )
+            if cdf:
+                ins = ins.withColumn(PRE_IMAGE_COL, F.lit(None).cast(schema))
+            parts.append(ins)
+        tagged = reduce(DataFrame.unionByName, parts)
+        types = {f.name: f.dataType for f in schema.fields}
+        regen = {
+            c: F.when(updated, F.expr(e).cast(types[c])).otherwise(F.col(c))
+            for c, e in self._generated_columns(props).items()
+            if sets and c in types and c not in sets
+        }
+        if regen:
+            tagged = tagged.withColumns(regen)
+        checks = checks or {}
+        obs = Observation()
+        written = tagged.observe(
+            obs,
+            *[
+                F.expr(f"count_if({ACTION_COL} = '{a}') AS `{a}`")
+                for a in (KEEP, UPDATE, DELETE, INSERT)
+            ],
+            *_check_aggs(checks, rows=action != DELETE),
+        ).filter(action != DELETE)
+        entries = self._write_files(
+            written.drop(ACTION_COL, PRE_IMAGE_COL), partition_by
+        )
+        if verify is not None:
+            verify(obs.get, entries)
+        m = self._observed(obs, checks, entries)
+        n_changed = m[UPDATE] + m[DELETE] + m[INSERT]
+        version = commit(entries, n_changed)
+        if cdf and n_changed:
+            names = [f.name for f in schema.fields]
+            images = tagged.filter(action != KEEP).select(
+                *names,
+                F.when(updated, F.lit(CT_UPDATE_POST))
+                .otherwise(action)
+                .alias("_change_type"),
+            )
+            pre_images = tagged.filter(updated).select(
+                *[F.col(f"{PRE_IMAGE_COL}.{c}").alias(c) for c in names],
+                F.lit(CT_UPDATE_PRE).alias("_change_type"),
+            )
+            self._write_changes(
+                version,
+                self._cdf_frame(
+                    images.unionByName(pre_images), F.col("_change_type"), version
+                ),
+                props,
+            )
+        return m
+
     def update(self, condition: str, set_exprs: dict[str, str]) -> dict:
         """UPDATE with predicate (D3 — 04_acid_operations.py:128-139).
-        ``set_exprs`` maps column → SQL expression. Generated columns
-        not explicitly assigned are recomputed on the updated rows in a
-        second pass — AFTER the user's assignments land, so the
-        expression sees the new base values (Delta's UPDATE semantics —
-        base-column edits can't leave a generated column stale)."""
+        ``set_exprs`` maps column → SQL expression.
+
+        The rows of the touched files are tagged UPDATE where
+        ``condition`` is TRUE and KEEP otherwise, and one rewrite
+        (:meth:`_rewrite`) writes them: generated columns not explicitly
+        assigned are recomputed from the new base values (Delta's UPDATE
+        semantics — base-column edits can't leave a generated column
+        stale). The change feed's post-images are the rows written, and
+        its pre-images the same rows' values before the assignment."""
         bad_ids = [c for c in self._identity_columns() if c in set_exprs]
         if bad_ids:
             raise ValueError(
                 f"identity columns {bad_ids} are GENERATED ALWAYS — UPDATE "
                 "cannot assign them"
             )
-        gen_recompute = {
-            c: e
-            for c, e in self._generated_columns().items()
-            if c not in set_exprs
-        }
-        files, _, partition_by, _, _ = self._replay()
+        files, schema_json, partition_by, props, _ = self._replay()
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(files, pred, condition)
+        params = {"predicate": condition}
         if not touched:
-            self._commit_dml("UPDATE", [], [], {"predicate": condition}, 0)
+            self._commit_dml("UPDATE", [], [], params, 0)
             return {"numUpdatedRows": 0}
-        schema = self.schema()
-        rt_on = self.properties().get(RT_PROP) == "true"
-        old = self._read_file_subset(touched, with_row_tracking=rt_on)
-        updated = old.withColumn("__hit", pred).withColumns(
-            {
-                c: F.when(F.col("__hit"), F.expr(e)).otherwise(F.col(c))
-                for c, e in set_exprs.items()
-            }
-        ).withColumns(
-            {
-                c: F.when(F.col("__hit"), F.expr(e)).otherwise(F.col(c))
-                for c, e in gen_recompute.items()
-            }
-        )
-        if rt_on:
-            # updated rows: keep the stable row id, reset the commit
-            # version (NULL → the new file's default = this UPDATE);
-            # carried rows keep their materialized version
-            updated = updated.withColumn(
-                ROW_COMMIT_COL,
-                F.when(F.col("__hit"), F.lit(None).cast("long")).otherwise(
-                    F.col(ROW_COMMIT_COL)
-                ),
-            )
-        # one pass: the write job counts matched rows and CHECK
-        # violations (carried rows included) via Observation
-        checks = self._all_checks()
-        updated, obs = self._observe(
-            updated, [_count_if(F.col("__hit")).alias("n")], checks
-        )
-        entries = self._write_files(
-            self._align(updated, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)),
+        schema = T.StructType.fromJson(json.loads(schema_json))
+        m = self._rewrite(
+            self._tag_rows(touched, schema, props, pred, UPDATE),
+            schema,
             partition_by,
+            props,
+            lambda entries, n: self._commit_dml(
+                "UPDATE", entries, [f.path for f in touched], params, n
+            ),
+            cdf=props.get(CDF_PROP) == "true",
+            sets={c: F.expr(e) for c, e in set_exprs.items()},
+            checks=self._all_checks(props),
         )
-        n_updated = self._observed(obs, checks, entries)["n"]
-        version = self._commit_dml(
-            "UPDATE",
-            entries,
-            [f.path for f in touched],
-            {"predicate": condition},
-            n_updated,
-        )
-        if self.properties().get(CDF_PROP) == "true":
-            # filter BEFORE applying set-exprs: the update may rewrite
-            # the very columns the predicate tests.
-            matched_old = old.drop(ROW_ID_COL, ROW_COMMIT_COL).filter(pred)
-            pre = self._cdf_frame(matched_old, CT_UPDATE_PRE, version)
-            post = self._cdf_frame(
-                matched_old.withColumns(
-                    {c: F.expr(e) for c, e in set_exprs.items()}
-                ).withColumns({c: F.expr(e) for c, e in gen_recompute.items()}),
-                CT_UPDATE_POST,
-                version,
-            )
-            self._write_changes(version, pre.unionByName(post))
-        return {"numUpdatedRows": n_updated}
+        return {"numUpdatedRows": m[UPDATE]}
 
     def delete(self, condition: str) -> dict:
-        """DELETE with predicate (D4 — 04_acid_operations.py:170-175)."""
-        files, _, partition_by, _, _ = self._replay()
+        """DELETE with predicate (D4 — 04_acid_operations.py:170-175).
+
+        With deletion vectors on, the matched rows are tombstoned
+        (:meth:`_delete_with_dvs`). Otherwise the rows of the touched
+        files are tagged DELETE where ``condition`` is TRUE and KEEP
+        otherwise (FALSE or NULL), one rewrite (:meth:`_rewrite`) writes
+        the KEEP rows, and the change feed's delete rows are the DELETE
+        rows of that same frame."""
+        files, schema_json, partition_by, props, _ = self._replay()
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(files, pred, condition)
+        params = {"predicate": condition}
         if not touched:
-            self._commit_dml("DELETE", [], [], {"predicate": condition}, 0)
+            self._commit_dml("DELETE", [], [], params, 0)
             return {"numDeletedRows": 0}
-        if self.properties().get(DV_PROP) == "true":
-            return self._delete_with_dvs(condition, pred, touched)
-        schema = self.schema()
-        rt_on = self.properties().get(RT_PROP) == "true"
-        old = self._read_file_subset(touched, with_row_tracking=rt_on)
-        # one pass: deleted rows are counted by the observe node, then
-        # filtered out before the sink.
-        obs = Observation()
-        survivors = (
-            old.withColumn("__del", pred)
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.when(F.col("__del"), 1).otherwise(0)), F.lit(0)).alias("n"),
-            )
-            .filter(~F.col("__del") | F.col("__del").isNull())
-            .drop("__del")
-        )
-        entries = self._write_files(
-            self._align(survivors, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)),
+        schema = T.StructType.fromJson(json.loads(schema_json))
+        if props.get(DV_PROP) == "true":
+            return self._delete_with_dvs(condition, pred, touched, schema, props)
+        m = self._rewrite(
+            self._tag_rows(touched, schema, props, pred, DELETE),
+            schema,
             partition_by,
+            props,
+            lambda entries, n: self._commit_dml(
+                "DELETE", entries, [f.path for f in touched], params, n
+            ),
+            cdf=props.get(CDF_PROP) == "true",
         )
-        n_deleted = obs.get["n"]
-        version = self._commit_dml(
-            "DELETE",
-            entries,
-            [f.path for f in touched],
-            {"predicate": condition},
-            n_deleted,
-        )
-        if self.properties().get(CDF_PROP) == "true":
-            self._write_changes(
-                version,
-                self._cdf_frame(
-                    old.drop(ROW_ID_COL, ROW_COMMIT_COL).filter(pred),
-                    CT_DELETE,
-                    version,
-                ),
-            )
-        return {"numDeletedRows": n_deleted}
+        return {"numDeletedRows": m[DELETE]}
 
     def _delete_with_dvs(
-        self, condition: str, pred: Column, touched: list[FileEntry]
+        self,
+        condition: str,
+        pred: Column,
+        touched: list[FileEntry],
+        schema: T.StructType,
+        props: dict[str, str],
     ) -> dict:
         """Merge-on-read DELETE: write (file, row_index) tombstones for
         the matched rows instead of rewriting the touched files. The
@@ -2836,7 +2957,6 @@ class LogTable:
         tombstones. One executor job writes the DV; the per-file hit
         map collected on the driver is bounded by the touched-file
         count (metadata-sized)."""
-        schema = self.schema()
         scan = self._read_entries(touched, schema, with_dv_key=True)
         hits = scan.filter(pred)
         dv_rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
@@ -2882,12 +3002,13 @@ class LogTable:
                 },
             )
         )
-        if self.properties().get(CDF_PROP) == "true":
+        if props.get(CDF_PROP) == "true":
             self._write_changes(
                 version,
                 self._cdf_frame(
                     hits.drop("__dv_key", "__dv_ridx"), CT_DELETE, version
                 ),
+                props,
             )
         return {"numDeletedRows": n_deleted}
 
@@ -3681,6 +3802,16 @@ class MergeBuilder:
     def execute(self) -> dict:
         """Run the MERGE.
 
+        After the probe picks the touched files, every row of those
+        files is tagged with one action — KEEP, UPDATE or DELETE, by the
+        first matched or by-source clause whose condition is TRUE — and
+        the unmatched source rows that an insert clause selects are
+        tagged INSERT. The table's one copy-on-write rewrite
+        (:meth:`LogTable._rewrite`) writes that tagged frame, and the
+        change feed is a projection of it: post-images and inserts are
+        the rows written, deletes the rows dropped, pre-images the
+        target values carried beside each UPDATE row.
+
         Measured non-trade (r12): materializing the source once
         (public Delta's merge source materialization — persist
         MEMORY_AND_DISK around the pruning-bounds / probe / rewrite /
@@ -3799,456 +3930,194 @@ class MergeBuilder:
             hit = t._norm_paths({r.fp for r in probe})
             touched = [f for f in candidates if f.path in hit]
 
-        tgt = (
-            t._read_entries(touched, schema, with_row_tracking=rt_on)
-            .withColumn("__tgt", F.lit(1))
-            .alias("target")
-            if touched
-            else None
-        )
+        types = {f.name: f.dataType for f in schema.fields}
 
-        out_parts: list[DataFrame] = []
-
-        def _apply_matched(
-            joined: DataFrame,
-        ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-            """rows → (updated rows, deleted pre-images, untouched-matched,
-            pre-images of clause-affected rows)"""
-            # first-clause-wins: tag each row with the clause index that fires
-            clause_idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.matched))):
+        def first_true(conds: list[str | None]) -> Column:
+            """Index of the first clause whose condition is TRUE (no
+            condition is TRUE), NULL when none is: first clause wins."""
+            idx = F.lit(None).cast("int")
+            for i, c in reversed(list(enumerate(conds))):
                 fire = F.lit(True) if c is None else F.expr(c)
-                clause_idx = F.when(fire, F.lit(i)).otherwise(clause_idx)
-            tagged = joined.withColumn("__clause", clause_idx)
-            updated_parts, deleted_parts = [], []
-            for i, (kind, set_exprs, _) in enumerate(self.matched):
-                rows = tagged.filter(F.col("__clause") == i)
-                if kind == "update":
-                    if set_exprs is None:  # UPDATE ALL
-                        proj = [
-                            F.expr(f"source.{c}").alias(c)
-                            if c in self.source.columns
-                            else F.col(f"target.{c}").alias(c)
-                            for c in tcols
-                        ]
-                    else:
-                        proj = [
-                            F.expr(set_exprs[c]).alias(c)
-                            if c in set_exprs
-                            else F.col(f"target.{c}").alias(c)
-                            for c in tcols
-                        ]
-                    updated_parts.append(rows.select(*proj))
-                else:  # delete
-                    deleted_parts.append(
-                        rows.select(*[F.col(f"target.{c}").alias(c) for c in tcols])
-                    )
-            untouched_matched = tagged.filter(F.col("__clause").isNull()).select(
-                *[F.col(f"target.{c}").alias(c) for c in tcols]
-            )
-            # update pre-images selected by the FIRING CLAUSE's kind —
-            # never by anti-joining pre against deletes on all columns,
-            # which NULL equality breaks (a deleted NULL-bearing row
-            # would emit a spurious update_preimage)
-            upd_idx = [
-                i for i, (kind, _, _) in enumerate(self.matched) if kind == "update"
-            ]
-            update_pre = tagged.filter(F.col("__clause").isin(upd_idx)).select(
-                *[F.col(f"target.{c}").alias(c) for c in tcols]
-            )
-            empty = t.spark.createDataFrame([], schema)
-            upd = reduce(DataFrame.unionByName, updated_parts) if updated_parts else empty
-            dele = reduce(DataFrame.unionByName, deleted_parts) if deleted_parts else empty
-            return upd, dele, untouched_matched, update_pre
+                idx = F.when(fire, F.lit(i)).otherwise(idx)
+            return idx
 
-        TAG = "__merge_action"
-
-        def _tag(df: DataFrame, tag: str) -> DataFrame:
-            out = t._align(
-                df, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)
-            ).withColumn(TAG, F.lit(tag))
-            if rt_on:
-                # insert rows carry NULL tracking columns: their id and
-                # commit version default to the new file's brid/rcv —
-                # fresh ids for genuinely new rows, no allocation job
-                for c in (ROW_ID_COL, ROW_COMMIT_COL):
-                    if c not in out.columns:
-                        out = out.withColumn(c, F.lit(None).cast("long"))
-            return out
-
-        def _insert_value(cname: str, values: dict[str, str] | None):
-            if values is None:  # INSERT ALL
-                return (
-                    F.expr(f"source.{cname}")
-                    if cname in self.source.columns
-                    else F.lit(None)
-                )
-            return F.expr(values[cname]) if cname in values else F.lit(None)
-
-        gen_cols = t._generated_columns()
-
-        def _build_insert_parts(unmatched_src: DataFrame) -> list[DataFrame]:
-            """Standalone insert-clause chain over unmatched source rows
-            (used when there is no rewrite join to piggyback on).
-            Generated columns the clause leaves unassigned are computed
-            over the projected (single-sided, unambiguous) insert rows."""
-            parts, remaining = [], unmatched_src
-            for values, c in self.not_matched:
-                rows = remaining.filter(F.expr(c)) if c else remaining
-                part = rows.select(
-                    *[_insert_value(c2, values).alias(c2) for c2 in tcols]
-                )
-                for gc, ge in gen_cols.items():
-                    unassigned = (
-                        gc not in self.source.columns
-                        if values is None
-                        else gc not in values
-                    )
-                    if unassigned and gc in part.columns:
-                        part = part.withColumn(gc, F.expr(ge))
-                parts.append(part)
-                if c:
-                    remaining = remaining.filter(~F.expr(c) | F.expr(c).isNull())
+        # One action per target row and one value per assigned column,
+        # built over both clause lists: ``__clause`` indexes the matched
+        # clause that fires on a matched row, ``__nmbs`` the by-source
+        # clause on an unmatched one; either is NULL when none fires.
+        action = F.lit(KEEP)
+        sets: dict[str, Column] = {}
+        for idx, clauses in (
+            ("__clause", self.matched),
+            ("__nmbs", self.not_matched_by_source),
+        ):
+            for i, (kind, set_exprs, _) in enumerate(clauses):
+                fires = F.col(idx) == i
+                if kind == "delete":
+                    action = F.when(fires, F.lit(DELETE)).otherwise(action)
+                    continue
+                action = F.when(fires, F.lit(UPDATE)).otherwise(action)
+                if set_exprs is None:  # UPDATE ALL
+                    assigned = {
+                        c: F.col(f"source.{c}") for c in tcols if c in self.source.columns
+                    }
                 else:
-                    remaining = remaining.limit(0)
-            return parts
+                    assigned = {c: F.expr(e) for c, e in set_exprs.items()}
+                for c, v in assigned.items():
+                    sets[c] = F.when(fires, v).otherwise(
+                        sets.get(c, F.col(f"target.{c}"))
+                    )
 
+        rows: DataFrame | None = None
+        if touched:
+            tgt = t._read_entries(touched, schema, with_row_tracking=rt_on)
+            tgt = tgt.alias("target")
+            nmbs = first_true([c for *_, c in self.not_matched_by_source])
+            if self.matched:
+                # Rewrite join: touched files ⟕ source. Left-outer — NOT
+                # full-outer — so the planner stays free to broadcast the
+                # source side (Spark can never broadcast a full-outer
+                # join; it would force a two-sided shuffle sort-merge
+                # even for a tiny update batch against a pruned file
+                # set). INSERT rows come from a separate anti join below:
+                # its shuffles hash on the same keys, so at scale exchange
+                # reuse/AQE shares them with the rewrite join, and at
+                # small scale both broadcast.
+                src_marked = self.source.withColumn("__src", F.lit(1)).alias("source")
+                unmatched = F.col("source.__src").isNull()
+                matched_idx = first_true([c for *_, c in self.matched])
+                rows = (
+                    tgt.join(src_marked, cond, "left_outer")
+                    .withColumn("__clause", F.when(~unmatched, matched_idx))
+                    .withColumn("__nmbs", F.when(unmatched, nmbs))
+                )
+            else:
+                # NOT-MATCHED-BY-SOURCE without matched clauses: a multi-
+                # match source can't corrupt anything, so no probe — split
+                # target into matched (kept verbatim, semi join) and
+                # unmatched (clauses apply, anti join). Both joins hash on
+                # the same keys → AQE/exchange reuse shares the shuffle.
+                rows = (
+                    tgt.join(src, cond, "left_semi")
+                    .withColumn("__nmbs", F.lit(None).cast("int"))
+                    .unionByName(
+                        tgt.join(src, cond, "left_anti").withColumn("__nmbs", nmbs)
+                    )
+                    .alias("target")
+                )
+            rows = rows.withColumn(ACTION_COL, action)
+
+        gen_cols = t._generated_columns(tprops)
+
+        def insert_rows(unmatched_src: DataFrame) -> DataFrame:
+            """Each unmatched source row projected onto the schema by the
+            first insert clause whose condition is TRUE. A generated
+            column that clause leaves unassigned is computed over the
+            projected (single-sided, unambiguous) row."""
+            tagged = unmatched_src.withColumn(
+                "__ins", first_true([c for _, c in self.not_matched])
+            ).filter(F.col("__ins").isNotNull())
+            cols = []
+            for f in schema.fields:
+                v = F.lit(None)
+                for i, (values, _) in enumerate(self.not_matched):
+                    if values is None:  # INSERT ALL
+                        assigned = f.name in self.source.columns
+                        x = F.col(f"source.{f.name}") if assigned else F.lit(None)
+                    else:
+                        x = F.expr(values[f.name]) if f.name in values else F.lit(None)
+                    v = F.when(F.col("__ins") == i, x.cast(f.dataType)).otherwise(v)
+                cols.append(v.cast(f.dataType).alias(f.name))
+            out = tagged.select(*cols, "__ins")
+            for gc, ge in gen_cols.items():
+                own = [
+                    i
+                    for i, (values, _) in enumerate(self.not_matched)
+                    if gc not in (self.source.columns if values is None else values)
+                ]
+                if own and gc in types:
+                    out = out.withColumn(
+                        gc,
+                        F.when(F.col("__ins").isin(own), F.expr(ge).cast(types[gc]))
+                        .otherwise(F.col(gc)),
+                    )
+            return out.drop("__ins")
+
+        inserts: DataFrame | None = None
         ident_props: dict[str, str] = {}
-        insert_frames: list[DataFrame] = []
-
-        def _insert_frame(unmatched_src: DataFrame) -> DataFrame | None:
-            """Insert-clause rows, tagged, with identity columns stamped
-            from the watermark (one extra metadata-sized count job over
-            the unmatched slice; the advanced watermark commits WITH the
-            merge, so concurrent identity writers OCC-conflict instead
-            of double-allocating)."""
-            parts = _build_insert_parts(unmatched_src)
-            if not parts:
-                return None
-            ins = _tag(reduce(DataFrame.unionByName, parts), "i")
+        if self.not_matched:
+            # a source row unmatched in the touched files is unmatched
+            # in the whole table: pruning only drops files whose key
+            # ranges provably exclude every source key. With no touched
+            # file, an insert-only merge anti-joins the whole table;
+            # otherwise the probe proved that no source row matches.
+            against = touched or ([] if self.matched else files)
+            unmatched_src = (
+                src.join(t._read_entries(against, schema).alias("target"), cond, "left_anti")
+                if against
+                else src
+            )
+            inserts = insert_rows(unmatched_src)
             if idents:
-                ins, ip = t._allocate_identity(ins, idents)
-                ident_props.update(ip)
+                # fresh contiguous identity values stamped from the
+                # watermark (one extra metadata-sized count job over the
+                # unmatched slice; the advanced watermark commits WITH
+                # the merge, so concurrent identity writers OCC-conflict
+                # instead of double-allocating)
+                inserts, ident_props = t._allocate_identity(inserts, idents)
                 # pin the evaluated allocation: identity values derive
                 # from spark_partition_id + monotonically_increasing_id,
                 # so the CDF job re-executing this plan later could see
                 # a DIFFERENT AQE partitioning and stamp different (or
                 # NULL-offset) values than the committed table data —
                 # localCheckpoint makes both jobs read the same rows
-                ins = ins.localCheckpoint(eager=False)
-            insert_frames.append(ins)
-            return ins
+                inserts = inserts.localCheckpoint(eager=False)
 
-        # ---- WHEN NOT MATCHED BY SOURCE helpers (clause selection over
-        # target rows with no source match; conditions/sets are
-        # target.*-only expressions) --------------------------------------
-        def _nmbs_idx() -> Column:
-            idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.not_matched_by_source))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                idx = F.when(fire, F.lit(i)).otherwise(idx)
-            return idx
-
-        def _nmbs_val(cname: str, base: Column) -> Column:
-            expr = base
-            for i, (kind, set_exprs, _) in enumerate(self.not_matched_by_source):
-                if kind != "update":
-                    continue
-                val = (
-                    F.expr(set_exprs[cname])
-                    if cname in set_exprs
-                    else F.col(f"target.{cname}")
-                )
-                expr = F.when(F.col("__nmbs") == i, val).otherwise(expr)
-            return expr
-
-        def _nmbs_kind_tag() -> Column:
-            kt = F.lit("u")
-            for i, (kind, _, _) in enumerate(self.not_matched_by_source):
-                if kind == "delete":
-                    kt = F.when(F.col("__nmbs") == i, "d").otherwise(kt)
-            return kt
-
-        if tgt is not None and self.matched:
-            # Rewrite join: touched files ⟕ source. Left-outer — NOT
-            # full-outer — so the planner stays free to broadcast the
-            # source side (Spark can never broadcast a full-outer join;
-            # it would force a two-sided shuffle sort-merge even for a
-            # tiny update batch against a pruned file set). INSERT rows
-            # come from a separate anti join below: its shuffles hash on
-            # the same keys, so at scale exchange reuse/AQE shares them
-            # with the rewrite join, and at small scale both broadcast.
-            src_marked = self.source.withColumn("__src", F.lit(1)).alias("source")
-            j = tgt.join(src_marked, cond, "left_outer")
-            matched = F.col("source.__src").isNotNull()
-
-            clause_idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.matched))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                clause_idx = F.when(fire, F.lit(i)).otherwise(clause_idx)
-            j = j.withColumn("__clause", F.when(matched, clause_idx))
-            j = j.withColumn(
-                "__nmbs", F.when(F.col("source.__src").isNull(), _nmbs_idx())
-            )
-
-            proj = []
-            for fld in schema.fields:
-                cname = fld.name
-                expr = F.col(f"target.{cname}")
-                for i, (kind, set_exprs, _) in enumerate(self.matched):
-                    if kind != "update":
-                        continue
-                    if set_exprs is None:  # UPDATE ALL
-                        val = (
-                            F.expr(f"source.{cname}")
-                            if cname in self.source.columns
-                            else F.col(f"target.{cname}")
-                        )
-                    else:
-                        val = (
-                            F.expr(set_exprs[cname])
-                            if cname in set_exprs
-                            else F.col(f"target.{cname}")
-                        )
-                    expr = F.when(F.col("__clause") == i, val).otherwise(expr)
-                expr = _nmbs_val(cname, expr)
-                proj.append(expr.cast(fld.dataType).alias(cname))
-
-            kind_tag = F.lit("u")
-            for i, (kind, _, _) in enumerate(self.matched):
-                if kind == "delete":
-                    kind_tag = F.when(F.col("__clause") == i, "d").otherwise(kind_tag)
-            tag = (
-                F.when(F.col("__clause").isNotNull(), kind_tag)
-                .when(F.col("__nmbs").isNotNull(), _nmbs_kind_tag())
-                .when(matched, F.lit("k"))
-                .otherwise(F.lit("t"))
-            )
-            rt_cols = (
-                [
-                    # stable id rides the rewrite; updated rows reset
-                    # their commit version (→ the MERGE's version via
-                    # the new file's rcv), carried rows keep theirs
-                    F.col(f"target.{ROW_ID_COL}").alias(ROW_ID_COL),
-                    F.when(tag == "u", F.lit(None).cast("long"))
-                    .otherwise(F.col(f"target.{ROW_COMMIT_COL}"))
-                    .alias(ROW_COMMIT_COL),
-                ]
-                if rt_on
-                else []
-            )
-            out_parts.append(j.select(*proj, tag.alias(TAG), *rt_cols))
-            if self.not_matched:
-                # a source row unmatched in the touched files is
-                # unmatched in the whole table: pruning only drops files
-                # whose key ranges provably exclude every source key.
-                unmatched_src = src.join(
-                    t._read_entries(touched, schema).alias("target"), cond, "left_anti"
-                )
-                ins = _insert_frame(unmatched_src)
-                if ins is not None:
-                    out_parts.append(ins)
-        elif tgt is not None:
-            # NOT-MATCHED-BY-SOURCE without matched clauses: a multi-
-            # match source can't corrupt anything, so no probe — split
-            # target into matched (kept verbatim, semi join) and
-            # unmatched (clauses apply, anti join). Both joins hash on
-            # the same keys → AQE/exchange reuse shares the shuffle.
-            tgt_all = t._read_entries(
-                touched, schema, with_row_tracking=rt_on
-            ).alias("target")
-            out_parts.append(_tag(tgt_all.join(src, cond, "left_semi"), "k"))
-            unm = tgt_all.join(src, cond, "left_anti").withColumn(
-                "__nmbs", _nmbs_idx()
-            )
-            proj = [
-                _nmbs_val(fld.name, F.col(f"target.{fld.name}"))
-                .cast(fld.dataType)
-                .alias(fld.name)
-                for fld in schema.fields
-            ]
-            tag = (
-                F.when(F.col("__nmbs").isNotNull(), _nmbs_kind_tag())
-                .otherwise(F.lit("t"))
-            )
-            rt_cols = (
-                [
-                    F.col(f"target.{ROW_ID_COL}").alias(ROW_ID_COL),
-                    F.when(tag == "u", F.lit(None).cast("long"))
-                    .otherwise(F.col(f"target.{ROW_COMMIT_COL}"))
-                    .alias(ROW_COMMIT_COL),
-                ]
-                if rt_on
-                else []
-            )
-            out_parts.append(unm.select(*proj, tag.alias(TAG), *rt_cols))
-            if self.not_matched:
-                unmatched_src = src.join(tgt_all, cond, "left_anti")
-                ins = _insert_frame(unmatched_src)
-                if ins is not None:
-                    out_parts.append(ins)
-        elif self.not_matched:
-            # no rewrite join to piggyback on: unmatched source rows are
-            # ALL source rows when the probe proved no matches (or the
-            # table is empty); insert-only merges against existing files
-            # still need the anti-join.
-            if files and not self.matched:
-                tgt_full = t._read_entries(files, schema).alias("target")
-                unmatched_src = src.join(tgt_full, cond, "left_anti")
-            else:
-                unmatched_src = src
-            ins = _insert_frame(unmatched_src)
-            if ins is not None:
-                out_parts.append(ins)
-
-        if not out_parts:
+        params = {"predicate": self.condition, **self.extra_params}
+        if rows is None and inserts is None:
             t._commit_dml(
                 "MERGE",
                 [],
                 [],
-                {"predicate": self.condition, **self.extra_params},
+                params,
                 0,
                 schema_json=evolved_json,
                 properties=self.extra_props or None,
             )
             return {"numUpdatedRows": 0, "numDeletedRows": 0, "numInsertedRows": 0}
 
-        # Job 2 — ONE pass: clause metrics, constraint checks, and the
-        # rewrite are all collected by a single write action via
-        # Observation; deleted rows flow through the observe node, then
-        # are filtered out before the sink.
-        tagged = reduce(DataFrame.unionByName, out_parts)
-        # Recompute generated columns on update-tagged rows (insert
-        # parts already computed theirs): a MERGE UPDATE that edits base
-        # columns must not leave a generated column stale. A column any
-        # update clause explicitly assigns is honored verbatim — and
-        # then validated by the generated-column check below.
-        def _explicitly_assigned(gc: str) -> bool:
-            for kind, s, _ in self.matched:
-                if kind == "update" and (
-                    (s is None and gc in self.source.columns)
-                    or (s is not None and gc in s)
-                ):
-                    return True
-            for kind, s, _ in self.not_matched_by_source:
-                if kind == "update" and s is not None and gc in s:
-                    return True
-            return False
+        def verify(m: dict[str, Any], entries: list[FileEntry]) -> None:
+            # without a probe, ambiguity shows in the counts: each row of
+            # the touched files is kept, updated or deleted exactly once
+            n_target = m[KEEP] + m[UPDATE] + m[DELETE]
+            if skip_probe and n_target != sum(f.num_records for f in touched):
+                t._discard(entries)
+                raise ValueError(
+                    "MERGE: multiple source rows matched the same target row"
+                )
 
-        field_types = {f.name: f.dataType for f in schema.fields}
-        recompute = {
-            gc: ge for gc, ge in gen_cols.items() if not _explicitly_assigned(gc)
-        }
-        if recompute:
-            tagged = tagged.withColumns(
-                {
-                    gc: F.when(F.col(TAG) == "u", F.expr(ge).cast(field_types[gc]))
-                    .otherwise(F.col(gc))
-                    for gc, ge in recompute.items()
-                }
-            )
-        checks = t._all_checks()
-        metrics = [
-            _count_if(F.col(TAG) == "u").alias("u"),
-            _count_if(F.col(TAG) == "d").alias("d"),
-            _count_if(F.col(TAG) == "i").alias("i"),
-            _count_if(F.col(TAG).isin("u", "d", "k", "t")).alias("tgt_rows"),
-        ] + _check_aggs(checks, rows=F.col(TAG) != "d")
-        obs = Observation()
-        result = (
-            tagged.observe(obs, *metrics)
-            .filter(~F.col(TAG).isin("d", "x"))
-            .drop(TAG)
+        m = t._rewrite(
+            rows,
+            schema,
+            partition_by,
+            tprops,
+            lambda entries, n: t._commit_dml(
+                "MERGE",
+                entries,
+                [f.path for f in touched],
+                params,
+                n,
+                schema_json=evolved_json,
+                properties={**self.extra_props, **ident_props} or None,
+            ),
+            cdf=tprops.get(CDF_PROP) == "true",
+            sets=sets,
+            inserts=inserts,
+            checks=t._all_checks(tprops),
+            verify=verify,
         )
-        entries = t._write_files(result, partition_by)
-        m = obs.get
-        if skip_probe and m["tgt_rows"] != sum(f.num_records for f in touched):
-            t._discard(entries)
-            raise ValueError(
-                "MERGE: multiple source rows matched the same target row"
-            )
-        t._observed(obs, checks, entries)
-        n_updated, n_deleted, n_inserted = m["u"], m["d"], m["i"]
-        version = t._commit_dml(
-            "MERGE",
-            entries,
-            [f.path for f in touched],
-            {"predicate": self.condition, **self.extra_params},
-            n_updated + n_deleted + n_inserted,
-            schema_json=evolved_json,
-            properties={**(self.extra_props or {}), **ident_props} or None,
-        )
-        # CDF: write pre/post images + inserts/deletes
-        if t.properties().get(CDF_PROP) == "true":
-            parts = []
-            if tgt is not None and self.matched:
-                matched_joined = tgt.join(src, cond, "inner")
-                upd, dele, _, update_pre = _apply_matched(matched_joined)
-                parts += [
-                    t._cdf_frame(upd, CT_UPDATE_POST, version),
-                    t._cdf_frame(update_pre, CT_UPDATE_PRE, version),
-                    t._cdf_frame(dele, CT_DELETE, version),
-                ]
-            if self.not_matched_by_source and touched:
-                unm = (
-                    t._read_entries(touched, schema)
-                    .alias("target")
-                    .join(src, cond, "left_anti")
-                    .withColumn("__nmbs", _nmbs_idx())
-                )
-                upd2_parts, del2_parts = [], []
-                for i, (kind, set_exprs, _) in enumerate(self.not_matched_by_source):
-                    rows = unm.filter(F.col("__nmbs") == i)
-                    if kind == "update":
-                        proj2 = [
-                            (
-                                F.expr(set_exprs[c])
-                                if c in set_exprs
-                                else F.col(f"target.{c}")
-                            )
-                            .cast(schema[c].dataType)
-                            .alias(c)
-                            for c in tcols
-                        ]
-                        upd2_parts.append(rows.select(*proj2))
-                    else:
-                        del2_parts.append(
-                            rows.select(*[F.col(f"target.{c}").alias(c) for c in tcols])
-                        )
-                # update pre-images by firing-clause kind (see
-                # _apply_matched: all-column anti-joins break on NULLs)
-                upd_idx2 = [
-                    i
-                    for i, (kind, _, _) in enumerate(self.not_matched_by_source)
-                    if kind == "update"
-                ]
-                pre2 = unm.filter(F.col("__nmbs").isin(upd_idx2)).select(
-                    *[F.col(f"target.{c}").alias(c) for c in tcols]
-                )
-                empty2 = t.spark.createDataFrame([], schema)
-                upd2 = (
-                    reduce(DataFrame.unionByName, upd2_parts) if upd2_parts else empty2
-                )
-                del2 = (
-                    reduce(DataFrame.unionByName, del2_parts) if del2_parts else empty2
-                )
-                parts += [
-                    t._cdf_frame(upd2, CT_UPDATE_POST, version),
-                    t._cdf_frame(pre2, CT_UPDATE_PRE, version),
-                    t._cdf_frame(del2, CT_DELETE, version),
-                ]
-            if self.not_matched and n_inserted and insert_frames:
-                # reuse the stamped insert plan (identity values and all)
-                # instead of rebuilding — a rebuild would re-derive
-                # identity columns as NULL
-                ins_all = reduce(DataFrame.unionByName, insert_frames).drop(TAG)
-                parts.append(
-                    t._cdf_frame(t._align(ins_all, schema), CT_INSERT, version)
-                )
-            if parts:
-                t._write_changes(version, reduce(DataFrame.unionByName, parts))
         return {
-            "numUpdatedRows": n_updated,
-            "numDeletedRows": n_deleted,
-            "numInsertedRows": n_inserted,
+            "numUpdatedRows": m[UPDATE],
+            "numDeletedRows": m[DELETE],
+            "numInsertedRows": m[INSERT],
         }

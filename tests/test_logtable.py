@@ -300,6 +300,258 @@ def test_cdf_merge(spark, table):
     }
 
 
+_NULL_DAY = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("day", T.StringType())]
+)
+
+
+@pytest.mark.parametrize(
+    "op, want",
+    [
+        (
+            lambda t, s: t.overwrite(
+                s.createDataFrame([(3, "d1")], _NULL_DAY), replace_where="day = 'd1'"
+            ),
+            {(2, None), (3, "d1"), (4, "d2")},
+        ),
+        (lambda t, s: t.delete("day = 'd1'"), {(2, None), (4, "d2")}),
+        (
+            lambda t, s: t.update("day = 'd1'", {"id": "id + 10"}),
+            {(11, "d1"), (2, None), (4, "d2")},
+        ),
+        (
+            lambda t, s: t.merge(
+                s.createDataFrame([(4, "d2")], _NULL_DAY), "target.id = source.id"
+            )
+            .when_not_matched_by_source_delete(condition="target.day = 'd1'")
+            .execute(),
+            {(2, None), (4, "d2")},
+        ),
+    ],
+    ids=["replace_where", "delete", "update", "merge_by_source_delete"],
+)
+def test_null_predicate_row_survives_rewrite(spark, tmp_path, op, want):
+    """A row whose predicate is NULL is neither replaced, deleted nor
+    updated, also when it shares a file with rows that match: only a
+    TRUE predicate selects a row."""
+    t = LogTable.create(spark, str(tmp_path / "t"), _NULL_DAY)
+    t.append(
+        spark.createDataFrame([(1, "d1"), (2, None), (4, "d2")], _NULL_DAY).coalesce(1)
+    )
+    assert len(t._replay()[0]) == 1
+    op(t, spark)
+    assert {tuple(r) for r in t.read().collect()} == want
+
+
+_GOLDEN = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("amount", T.LongType()),
+        T.StructField("amount_x2", T.LongType()),
+    ]
+)
+_GOLDEN_IN = T.StructType(_GOLDEN.fields[:3])
+
+
+def _golden_table(spark, path):
+    t = LogTable.create(
+        spark,
+        path,
+        _GOLDEN,
+        properties={
+            "enableChangeDataFeed": "true",
+            "delta.enableRowTracking": "true",
+        },
+        generated_columns={"amount_x2": "amount * 2"},
+    )
+    t.append(
+        spark.createDataFrame(
+            [
+                (1, "a", 10),
+                (2, None, 20),
+                (3, "c", None),
+                (None, "n", 40),
+                (5, "e", 50),
+                (6, None, 60),
+            ],
+            _GOLDEN_IN,
+        ).coalesce(1)
+    )
+    return t
+
+
+def test_cdf_golden_merge_update_delete(spark, tmp_path):
+    """Exact change rows (every column, type and version) and row ids of
+    a MERGE with every clause kind, an UPDATE of a generated column's
+    base and a copy-on-write DELETE, on a row-tracked table with NULLs
+    in key and value columns. A NULL key never matches; a clause or
+    predicate that is NULL does not fire."""
+    t = _golden_table(spark, str(tmp_path / "g"))
+
+    def rows_and_ids():
+        return {
+            (r.id, r.name, r.amount, r.amount_x2): (r._row_id, r._row_commit_version)
+            for r in t.read(row_tracking=True).collect()
+        }
+
+    assert rows_and_ids() == {
+        (1, "a", 10, 20): (1, 1),
+        (2, None, 20, 40): (2, 1),
+        (3, "c", None, None): (3, 1),
+        (None, "n", 40, 80): (4, 1),
+        (5, "e", 50, 100): (5, 1),
+        (6, None, 60, 120): (6, 1),
+    }
+    src = spark.createDataFrame(
+        [(1, "A", 11), (2, "B", 21), (3, "C", 30), (None, "z", 99), (7, "g", 70)],
+        _GOLDEN_IN,
+    )
+    res = (
+        t.merge(src, "target.id = source.id")
+        .when_matched_delete(condition="target.name IS NULL")
+        .when_matched_update(
+            set={"name": "source.name"}, condition="source.amount > target.amount"
+        )
+        .when_not_matched_by_source_delete(condition="target.name IS NULL")
+        .when_not_matched_by_source_update(
+            set={"name": "'gone'"}, condition="target.amount >= 40"
+        )
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert res == {"numUpdatedRows": 3, "numDeletedRows": 2, "numInsertedRows": 2}
+    after_merge = rows_and_ids()
+    inserted = {after_merge.pop((None, "z", 99, 198)), after_merge.pop((7, "g", 70, 140))}
+    assert after_merge == {
+        (1, "A", 10, 20): (1, 2),
+        (3, "c", None, None): (3, 1),
+        (None, "gone", 40, 80): (4, 2),
+        (5, "gone", 50, 100): (5, 2),
+    }
+    new_ids = {i for i, _ in inserted}
+    assert {v for _, v in inserted} == {2}
+    assert len(new_ids) == 2 and min(new_ids) > 6
+
+    assert t.update("amount < 45", {"amount": "amount + 1"}) == {"numUpdatedRows": 2}
+    after_update = rows_and_ids()
+    assert {after_update.pop((None, "z", 99, 198))[0], after_update.pop((7, "g", 70, 140))[0]} == new_ids
+    assert after_update == {
+        (1, "A", 11, 22): (1, 3),
+        (3, "c", None, None): (3, 1),
+        (None, "gone", 41, 82): (4, 3),
+        (5, "gone", 50, 100): (5, 2),
+    }
+
+    assert t.delete("amount > 45") == {"numDeletedRows": 3}
+    assert rows_and_ids() == {
+        (1, "A", 11, 22): (1, 3),
+        (3, "c", None, None): (3, 1),
+        (None, "gone", 41, 82): (4, 3),
+    }
+
+    ch = t.read_changes(starting_version=1)
+    assert ch.columns == [
+        "id", "name", "amount", "amount_x2",
+        "_change_type", "_commit_version", "_commit_timestamp",
+    ]
+    assert dict(ch.dtypes)["_commit_timestamp"] == "timestamp"
+    got = sorted(
+        (tuple(r) for r in ch.drop("_commit_timestamp").collect()),
+        key=lambda r: (r[5], r[4], -1 if r[0] is None else r[0]),
+    )
+    assert got == [
+        (None, "n", 40, 80, "insert", 1),
+        (1, "a", 10, 20, "insert", 1),
+        (2, None, 20, 40, "insert", 1),
+        (3, "c", None, None, "insert", 1),
+        (5, "e", 50, 100, "insert", 1),
+        (6, None, 60, 120, "insert", 1),
+        (2, None, 20, 40, "delete", 2),
+        (6, None, 60, 120, "delete", 2),
+        (None, "z", 99, 198, "insert", 2),
+        (7, "g", 70, 140, "insert", 2),
+        (None, "gone", 40, 80, "update_postimage", 2),
+        (1, "A", 10, 20, "update_postimage", 2),
+        (5, "gone", 50, 100, "update_postimage", 2),
+        (None, "n", 40, 80, "update_preimage", 2),
+        (1, "a", 10, 20, "update_preimage", 2),
+        (5, "e", 50, 100, "update_preimage", 2),
+        (None, "gone", 41, 82, "update_postimage", 3),
+        (1, "A", 11, 22, "update_postimage", 3),
+        (None, "gone", 40, 80, "update_preimage", 3),
+        (1, "A", 10, 20, "update_preimage", 3),
+        (None, "z", 99, 198, "delete", 4),
+        (5, "gone", 50, 100, "delete", 4),
+        (7, "g", 70, 140, "delete", 4),
+    ]
+    assert ch.filter("_commit_timestamp IS NULL").count() == 0
+
+
+def test_cdf_merge_postimage_carries_recomputed_generated_column(spark, tmp_path):
+    """A MERGE update that changes a generated column's base writes the
+    recomputed value, and its update_postimage is that written row."""
+    t = _golden_table(spark, str(tmp_path / "g"))
+    v = t.version()
+    t.upsert(spark.createDataFrame([(1, "A", 500)], _GOLDEN_IN), ["id"])
+    assert t.read().filter("id = 1").first()["amount_x2"] == 1000
+    got = {
+        (r._change_type, r.amount, r.amount_x2)
+        for r in t.read_changes(starting_version=v + 1).collect()
+    }
+    assert got == {("update_preimage", 10, 20), ("update_postimage", 500, 1000)}
+
+
+def _job_count_table(spark, path, cdf):
+    props = {"enableChangeDataFeed": "true", "delta.enableRowTracking": "true"}
+    t = LogTable.create(spark, path, SCHEMA, properties=props if cdf else None)
+    t.append(
+        rows_df(spark, [(i, "OLD", float(i), f"d{i % 3}") for i in range(12)]).coalesce(2)
+    )
+    return t
+
+
+def _cdf_merge(t, spark):
+    src = rows_df(spark, [(1, "NEW", 1.5, "d1"), (2, "X", 2.0, "d2"), (50, "INS", 5.0, "d0")])
+    return (
+        t.merge(src, "target.id = source.id")
+        .when_matched_delete(condition="source.status = 'X'")
+        .when_matched_update_all()
+        .when_not_matched_by_source_update(set={"status": "'GONE'"}, condition="target.id > 9")
+        .when_not_matched_insert_all()
+        .execute()
+    )
+
+
+@pytest.mark.parametrize(
+    "cdf, op, bound",
+    [
+        (False, lambda t, s: t.update("id < 4", {"status": "'U'"}), 3),
+        (False, lambda t, s: t.delete("id < 4"), 3),
+        (
+            False,
+            lambda t, s: t.upsert(
+                rows_df(s, [(1, "NEW", 1.5, "d1"), (50, "INS", 5.0, "d0")]), ["id"]
+            ),
+            7,
+        ),
+        (True, lambda t, s: t.update("id < 4", {"status": "'U'"}), 6),
+        (True, lambda t, s: t.delete("id < 4"), 6),
+        (True, _cdf_merge, 20),
+    ],
+    ids=["update", "delete", "upsert", "cdf_update", "cdf_delete", "cdf_merge"],
+)
+def test_dml_job_count_bounds(spark, tmp_path, job_ids, cdf, op, bound):
+    """Spark jobs per copy-on-write DML on a small two-file table,
+    counted in the op's job group: the touched-file scan, broadcasts,
+    the rewrite and (with CDF and row tracking on) the change-feed
+    write. The bounds are the counts measured before the DML paths
+    shared one rewrite (the CDF MERGE measured 19 or 20); a rewrite
+    must not add a job."""
+    t = _job_count_table(spark, str(tmp_path / "j"), cdf)
+    assert len(job_ids(lambda: op(t, spark))) <= bound
+
+
 def test_schema_evolution_merge_schema(spark, table):
     evolved = table.read().withColumn("extra", F.lit("x"))
     table.append(evolved, merge_schema=True)
