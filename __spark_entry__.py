@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 The actual query surface lives in
 ``databricks_delta_lake_migration_spark.queries`` — one registration per
@@ -32,12 +32,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver hash-checks the first 50 registrations; ordering is
-# coverage policy. Cumulative state entering round 13: all 219
-# registrations driver-green at their latest check (zero failures
-# ever); CORRECTNESS_r12 = 50/50 so the freshness floor rose to r7 for
-# exactly q185/q186/q187/q191/q195 (the five r12 roll-overs), then the
-# r8 tail — see FRESHNESS.md (generated by tools/freshness.py), whose
-# "Next-window derivation" this window follows. ROUND 13 WINDOW:
+# coverage policy. All 219 registrations passed their latest hash
+# check. The window below was derived from the round-era
+# freshness report (retired; git history keeps it); performance is
+# measured by perfbench/, not by this entry point. ROUND 13 WINDOW:
 #   - the 8 keeper anchors (one per signature tier: MERGE, time
 #     travel, streaming CDC, medallion, cosine top-k, MinHash-LSH,
 #     grouped agg, star join) — cross-round regression sentinels;
@@ -49,15 +47,10 @@ def entry(spark: SparkSession) -> DataFrame:
 #     q91/q98 (corpus_filter O(n log n) bigram mode), q201 (fused
 #     per-doc aggregate)
 #   - the five r7 roll-overs (q185/q186/q187/q191/q195 — the stalest
-#     rows in the corpus, promised to r13 by VERDICT r12)
+#     rows in the corpus)
 #   - the r8 tail in registration order until the window is full
-# 8 + 9 + 5 + 28 = 50. Done-criterion: CORRECTNESS_r13 50/50 green;
-# every r13 plan-changed query has a driver row ≥ r13; freshness floor
-# rises to r8 except the NINE r8-tail rows that roll to r14 (39 r8
-# rows − 28 tail slots − q46/q201, which are r8 rows re-hashed via the
-# plan-changed group). pytest's
-# local DuckDB oracle-parity twin still exercises every registration
-# every round.
+# 8 + 9 + 5 + 28 = 50. pytest's local DuckDB oracle-parity twin still
+# exercises every registration.
 _PRIORITY = [
     # keepers: one anchor per signature tier
     "q60_merge_upsert", "q63_time_travel_diff", "q92_streaming_cdc_apply",
@@ -68,7 +61,7 @@ _PRIORITY = [
     "q133_sq8_topk", "q192_hard_negatives", "q175_knn_graph",
     "q91_corpus_filter", "q98_corpus_pipeline",
     "q201_exact_substring_profile",
-    # the r7 freshness floor (VERDICT r12's promised roll-overs)
+    # the r7 freshness floor (the stalest rows)
     "q185_rolling_zscore", "q186_group_trend",
     "q187_equidepth_histogram", "q191_quantile_profile",
     "q195_time_weighted_average",

@@ -60,40 +60,34 @@ def _append_batch(
     extra_params: dict | None = None,
 ) -> None:
     """The one micro-batch append path shared by every foreachBatch
-    sink in this module: align the batch to the CURRENT table schema,
-    apply the write-tuning seam (optimizeWrite lands one-ish file per
-    partition; a CLUSTER BY key pre-sorts the micro-batch), write, and
-    commit with the stream/batch identity in the parameters — the
-    batch-id idempotence every sink's replay guard reads back. One
-    implementation so a fix (or the plan probe) lands everywhere at
-    once instead of drifting across hand-rolled copies."""
-    import time as _time
-
-    from ..tables.logtable import Commit
-
+    sink in this module: read one snapshot, align the batch to its
+    schema, apply the write-tuning seam (optimizeWrite lands one-ish
+    file per partition; a CLUSTER BY key pre-sorts the micro-batch),
+    write, and commit against that snapshot with the stream/batch
+    identity in the parameters — the batch-id idempotence every sink's
+    replay guard reads back. The commit rebases like any blind append;
+    a racing commit of the same batch is refused. One implementation
+    so a fix (or the plan probe) lands everywhere at once instead of
+    drifting across hand-rolled copies."""
+    snap = tbl._replay()
     aligned = df.select(
-        *[F.col(f.name).cast(f.dataType) for f in tbl.schema().fields]
+        *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
     )
     if _SINK_PLAN_PROBE is not None:
         _SINK_PLAN_PROBE.append(
             aligned._jdf.queryExecution().executedPlan().toString()
         )
-    aligned = tbl._maybe_optimize_write(
-        aligned, tbl.partition_columns(), tbl.properties()
-    )
-    entries = tbl._write_files(aligned, tbl.partition_columns())
+    aligned = tbl._maybe_optimize_write(aligned, snap.partition_by, snap.properties)
+    entries = tbl._write_files(aligned, snap.partition_by, snap.properties)
     params = {"streamId": stream_id, "batchId": int(batch_id)}
     if extra_params:
         params.update(extra_params)
-    tbl._commit(
-        Commit(
-            version=tbl._next_version(),
-            timestamp=_time.time(),
-            operation=operation,
-            add=entries,
-            parameters=params,
-            metrics={"numOutputRows": sum(e.num_records for e in entries)},
-        )
+    tbl._commit_op(
+        snap,
+        operation,
+        add=entries,
+        parameters=params,
+        metrics={"numOutputRows": sum(e.num_records for e in entries)},
     )
 
 
@@ -1312,10 +1306,6 @@ def stream_pit_enrich(
     dkeys = dim_key_columns or key_columns
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        from ..tables.logtable import Commit
-
         dim = LogTable(spark, dim_path).read().drop("record_hash")
         attr_cols = [
             c for c in dim.columns
@@ -1345,20 +1335,7 @@ def stream_pit_enrich(
             tbl = LogTable.create(spark, table_path, enriched.schema)
         if batch_id <= _last_committed_batch(tbl, stream_id):
             return
-        aligned = enriched.select(
-            *[F.col(f.name).cast(f.dataType) for f in tbl.schema().fields]
-        )
-        entries = tbl._write_files(aligned, tbl.partition_columns())
-        tbl._commit(
-            Commit(
-                version=tbl._next_version(),
-                timestamp=_time.time(),
-                operation="STREAMING UPDATE",
-                add=entries,
-                parameters={"streamId": stream_id, "batchId": int(batch_id)},
-                metrics={"numOutputRows": sum(e.num_records for e in entries)},
-            )
-        )
+        _append_batch(tbl, enriched, stream_id, batch_id)
 
     reader = (
         spark.readStream.schema(schema)

@@ -621,8 +621,8 @@ class Catalog:
         columns from an explicit file-list parquet scan, partition
         columns inlined as typed literals (folded → branch pruning).
         Falls back to a single-scan body past MAX_MANIFEST_BRANCHES."""
-        files, schema_json, partition_by, _, _ = t._replay()
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        snap = t._replay()
+        files, partition_by, schema = snap.files, snap.partition_by, snap.schema
         if not files:
             cols = ", ".join(
                 f"CAST(NULL AS {f.dataType.simpleString()}) AS {_q(f.name)}"

@@ -18,7 +18,9 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field, replace
-from typing import Any, Iterator
+from typing import Any, Iterator, NamedTuple
+
+from pyspark.sql import types as T
 
 from .fsio import LOCAL_FS, FileSystem
 
@@ -152,6 +154,22 @@ class Commit:
         )
 
 
+class Snapshot(NamedTuple):
+    """The table state at ``version``: one read of the log. A write
+    transaction reads one snapshot and commits at ``version + 1``
+    against it (see ``LogTable._commit_tx``)."""
+
+    files: list[FileEntry]
+    schema_json: str | None
+    partition_by: list[str]
+    properties: dict[str, str]
+    version: int
+
+    @property
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.schema_json))
+
+
 def fold_properties(props: dict[str, str], c: Commit) -> dict[str, str]:
     """The table properties after ``c``, given those before it."""
     if c.properties is None:
@@ -239,9 +257,9 @@ class CommitLog:
                 continue
         return None  # no readable checkpoint → replay from the first commit
 
-    def snapshot(self, version: int | None = None):
-        """(active file entries, schema_json, partition_by, properties,
-        version) at ``version`` (default: the newest). Starts from the
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """The :class:`Snapshot` at ``version`` (default: the newest),
+        from one listing. Starts from the
         newest readable checkpoint at or below it and applies only the
         commit tail after it, so the cost is O(files + commits since
         the checkpoint), not O(all commits)."""
@@ -280,7 +298,7 @@ class CommitLog:
             if c.partition_by is not None:
                 partition_by = c.partition_by
             props = fold_properties(props, c)
-        return list(active.values()), schema_json, partition_by, props, target
+        return Snapshot(list(active.values()), schema_json, partition_by, props, target)
 
     def walk(self) -> Iterator[tuple[Commit, dict[str, str]]]:
         """Yield ``(commit, properties after it)`` for every listed
@@ -298,26 +316,16 @@ class CommitLog:
             props = fold_properties(props, c)
             yield c, props
 
-    def properties_at(self, version: int) -> dict[str, str]:
-        """Properties as of ``version``; empty if it is before the
-        oldest listed commit."""
-        props: dict[str, str] = {}
-        for c, after in self.walk():
-            if c.version > version:
-                break
-            props = after
-        return props
-
     def write_checkpoint(self, version: int) -> None:
         """Materialize the snapshot at ``version`` so later snapshots
         replay only the commit tail after it."""
-        files, schema_json, partition_by, props, v = self.snapshot(version)
+        snap = self.snapshot(version)
         state = {
-            "version": v,
-            "add": [f.to_json() for f in files],
-            "schema": schema_json,
-            "partitionBy": partition_by,
-            "properties": props,
+            "version": snap.version,
+            "add": [f.to_json() for f in snap.files],
+            "schema": snap.schema_json,
+            "partitionBy": snap.partition_by,
+            "properties": snap.properties,
         }
         self.fs.write_text(self._path(version, "checkpoint"), json.dumps(state))
 

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fsio import LOCAL_FS, FileSystem
-from .log import LOG_DIR, Commit, CommitLog, FileEntry, fold_properties
+from .log import LOG_DIR, Commit, CommitLog, FileEntry, Snapshot, fold_properties
 
 CHANGES_DIR = "_changes"
 STAGING_DIR = "_staging"
@@ -155,6 +155,10 @@ def _enabled_features(props: dict[str, str]) -> set[str]:
         for k, v in props.items()
         if k.startswith(FEATURE_PROP_PREFIX) and v == "supported"
     }
+
+
+def _cluster_columns(props: dict[str, str]) -> list[str]:
+    return [c for c in props.get(CLUSTERING_PROP, "").split(",") if c]
 
 
 # Below this total table size, MERGE rewrites every file instead of
@@ -616,15 +620,16 @@ class LogTable:
                 need.add("defaultColumns")
         return need
 
-    def _stamp_protocol(self, commit: Commit) -> None:
+    def _stamp_protocol(self, commit: Commit, props: dict[str, str]) -> None:
         """Write gate + implicit protocol upgrade (Delta table
         features): refuse to write a table whose enabled features this
         engine does not implement, and stamp ``delta.feature.*`` /
         min-version properties into the SAME commit that first uses a
         capability. Steady-state commits see no missing features and
         are left untouched — only the first enabling commit becomes a
-        metadata commit (matching Delta's one-time protocol upgrade)."""
-        eff = fold_properties(self.log.properties_at(commit.version - 1), commit)
+        metadata commit (matching Delta's one-time protocol upgrade).
+        ``props`` are the table properties before ``commit``."""
+        eff = fold_properties(props, commit)
         enabled = _enabled_features(eff)
         unknown = enabled - WRITER_FEATURES
         if unknown:
@@ -642,21 +647,21 @@ class LogTable:
             add[MIN_WRITER_PROP] = "7"
             commit.properties = {**(commit.properties or {}), **add}
 
-    def _commit(self, commit: Commit) -> None:
-        """Atomic optimistic commit: create-exclusive the version file."""
-        self._stamp_protocol(commit)
+    def _commit(self, commit: Commit, props: dict[str, str]) -> None:
+        """Atomic optimistic commit: create-exclusive the version file.
+        ``props`` are the table properties before ``commit``."""
+        self._stamp_protocol(commit, props)
         # in-commit-timestamp monotonicity (Delta's inCommitTimestamp
         # guarantee): the stamped timestamp lives IN the commit record
         # (never file mtime), and must strictly increase with version —
         # a backwards clock step would otherwise make TIMESTAMP AS OF
         # resolve to the wrong version (`_replay` picks the last commit
         # with ts <= target, which assumes sorted timestamps). Clamp to
-        # predecessor + 1ms, exactly Delta's ICT rule.
-        prev = self.commits()
-        if prev and prev[-1].version < commit.version:
-            commit.timestamp = max(
-                commit.timestamp, prev[-1].timestamp + 0.001
-            )
+        # predecessor + 1ms, exactly Delta's ICT rule. The predecessor
+        # is cached: the snapshot or the rebase listing read it.
+        prev = self.log.cache.get(commit.version - 1)
+        if prev is not None:
+            commit.timestamp = max(commit.timestamp, prev.timestamp + 0.001)
         # put-if-absent is the whole commit protocol: optimistic
         # concurrency without a lock service (local: atomic hard link;
         # object stores: conditional PUT — see fsio.py). It also refuses
@@ -665,33 +670,30 @@ class LogTable:
             raise ConcurrentWriteError(
                 f"version {commit.version} already committed or pruned at {self.path}"
             )
+        after = fold_properties(props, commit)
         try:
             # interval from delta.checkpointInterval when set (per-table
             # tuning for high-commit-rate workloads), Delta's 10 default
-            interval = int(
-                self.log.properties_at(commit.version).get(
-                    "delta.checkpointInterval", CHECKPOINT_INTERVAL
-                )
-            )
-        except Exception:
+            interval = int(after.get("delta.checkpointInterval", CHECKPOINT_INTERVAL))
+        except ValueError:
             interval = CHECKPOINT_INTERVAL
         if commit.version > 0 and commit.version % max(1, interval) == 0:
             try:
                 self.log.write_checkpoint(commit.version)
-                self._prune_log()
+                self._prune_log(after)
             except Exception:
                 pass  # optimization only — never fail a landed commit
 
-    def _next_version(self) -> int:
-        vs = self.log.versions()
-        return (vs[-1] + 1) if vs else 0
-
-    def _commit_tx(self, commit: Commit, attempts: int = 15) -> int:
-        """Commit with optimistic conflict resolution (WriteSerializable,
-        Delta's default isolation): on a version collision, replay the
-        commits that won the race, check them for *logical* conflicts
-        against ours, and — when the operations commute — rebase onto
-        the new head and retry.
+    def _commit_tx(self, commit: Commit, snap: Snapshot, attempts: int = 15) -> int:
+        """Commit a transaction that read ``snap`` (WriteSerializable,
+        Delta's default isolation, VLDB 2020 §3). Read-version rule: the
+        commit is proposed at ``snap.version + 1``, so every commit that
+        landed after the read — also while the op scanned and wrote
+        data — collides with it. On a collision the commits after the
+        read version are checked for *logical* conflicts against ours
+        and their properties are folded into the snapshot's (the table
+        state is not read again); when the operations commute, the
+        commit is rebased onto the newest of them and retried.
 
         The conflict matrix (file-granular, matching Delta's public
         semantics at https://docs.delta.io/latest/concurrency-control.html):
@@ -724,6 +726,8 @@ class LogTable:
                 )
             commit.user_metadata = um
         self._pending_user_metadata = None
+        props = snap.properties
+        commit.version = snap.version + 1
         # row tracking: stamp fresh add entries with their default row
         # commit version (the version this commit actually lands at)
         # and allocate their base-row-id ranges from the high
@@ -732,20 +736,15 @@ class LogTable:
         # Entries arriving with rcv/brid set (RESTORE replays, clones)
         # are preserved verbatim.
         rt_fresh: list[FileEntry] = []
-        if commit.add:
-            try:
-                rt_now = self.properties().get(RT_PROP) == "true" or (
-                    # the commit itself may be the one enabling row
-                    # tracking (SET TBLPROPERTIES backfill)
-                    (commit.properties or {}).get(RT_PROP) == "true"
-                )
-                if rt_now:
-                    rt_fresh = [f for f in commit.add if f.rcv is None]
-            except FileNotFoundError:
-                pass
+        if props.get(RT_PROP) == "true" or (
+            # the commit itself may be the one enabling row tracking
+            # (SET TBLPROPERTIES backfill)
+            (commit.properties or {}).get(RT_PROP) == "true"
+        ):
+            rt_fresh = [f for f in commit.add if f.rcv is None]
         for _ in range(attempts):
             if rt_fresh:
-                wm = int(self.properties().get(RT_WATERMARK_PROP, "0"))
+                wm = int(props.get(RT_WATERMARK_PROP, "0"))
                 for f in rt_fresh:
                     f.rcv = commit.version
                     f.brid = wm + 1
@@ -755,17 +754,25 @@ class LogTable:
                     RT_WATERMARK_PROP: str(wm),
                 }
             try:
-                self._commit(commit)
+                self._commit(commit, props)
                 return commit.version
             except ConcurrentWriteError:
-                intervening = [
-                    c for c in self.commits() if c.version >= commit.version
-                ]
-                self._check_rebase_conflicts(commit, intervening)
-                commit.version = self._next_version()
+                theirs = [c for c in self.commits() if c.version >= commit.version]
+                self._check_rebase_conflicts(commit, theirs)
+                for c in theirs:
+                    props = fold_properties(props, c)
+                if theirs:
+                    commit.version = theirs[-1].version + 1
                 commit.timestamp = time.time()
         raise ConcurrentWriteError(
             f"commit to {self.path} lost {attempts} consecutive races; giving up"
+        )
+
+    def _commit_op(self, snap: Snapshot, operation: str, **fields: Any) -> int:
+        """Commit a new ``operation`` (``fields`` as in :class:`Commit`)
+        against ``snap``, the snapshot the operation read."""
+        return self._commit_tx(
+            Commit(snap.version + 1, time.time(), operation, **fields), snap
         )
 
     def _check_rebase_conflicts(self, ours: Commit, theirs: list[Commit]) -> None:
@@ -821,6 +828,17 @@ class LogTable:
                         f"{ours.parameters.get('source')!r} already loaded "
                         "overlapping files; re-run to pick up the remainder"
                     )
+        # the same for a streaming micro-batch: a racing commit of the
+        # same stream already wrote this batch (or a later one)
+        sid, bid = ours.parameters.get("streamId"), ours.parameters.get("batchId")
+        if sid is not None and bid is not None and any(
+            c.parameters.get("streamId") == sid and c.parameters.get("batchId", -1) >= bid
+            for c in theirs
+        ):
+            raise ConcurrentTransactionError(
+                f"{self.path}: batch {bid} of stream {sid!r} was already "
+                "committed by a concurrent writer"
+            )
         their_removed = {p for c in theirs for p in c.remove}
         overlap = set(ours.remove) & their_removed
         if overlap:
@@ -847,7 +865,7 @@ class LogTable:
 
     # ---- log retention -------------------------------------------------
 
-    def _prune_log(self) -> None:
+    def _prune_log(self, props: dict[str, str]) -> None:
         """Delta's log cleanup (``delta.logRetentionDuration``, 30-day
         default): at checkpoint time, delete commit JSONs that are (a)
         older than the retention horizon AND (b) strictly below the
@@ -857,12 +875,13 @@ class LogTable:
         kept pair are deleted with their commits. Bounds log growth on
         a long-lived table (a year of minutely commits is ~0.5 M log
         files without this); time travel beyond retention reports
-        'version not found', exactly like Delta."""
+        'version not found', exactly like Delta. ``props`` are the
+        table properties at the checkpoint."""
         cps = self.log.checkpoint_versions()
         if len(cps) < 2:
             return
         hours = self._parse_interval_hours(
-            self.properties().get("delta.logRetentionDuration", ""), 720.0
+            props.get("delta.logRetentionDuration", ""), 720.0
         )
         horizon = time.time() - hours * 3600
         ts = {c.version: c.timestamp for c in self.commits()}
@@ -878,10 +897,12 @@ class LogTable:
 
     # ---- snapshot state ------------------------------------------------
 
-    def _replay(self, version: int | None = None, timestamp: float | None = None):
-        """Snapshot → (active file entries, schema_json, partition_by,
-        properties, version); see :meth:`CommitLog.snapshot`. A
-        ``timestamp`` selects the last commit at or before it."""
+    def _replay(
+        self, version: int | None = None, timestamp: float | None = None
+    ) -> Snapshot:
+        """The :class:`Snapshot` at ``version`` (default: the newest);
+        see :meth:`CommitLog.snapshot`. A ``timestamp`` selects the last
+        commit at or before it."""
         if timestamp is not None:
             eligible = [c.version for c in self.commits() if c.timestamp <= timestamp]
             if not eligible:
@@ -890,50 +911,45 @@ class LogTable:
         return self.log.snapshot(version)
 
     def schema(self) -> T.StructType:
-        _, schema_json, _, _, _ = self._replay()
-        return T.StructType.fromJson(json.loads(schema_json))
+        return self._replay().schema
 
     def partition_columns(self) -> list[str]:
-        return self._replay()[2]
+        return self._replay().partition_by
 
     def properties(self) -> dict[str, str]:
-        return self._replay()[3]
+        return self._replay().properties
 
     def add_columns(self, new_fields: list[T.StructField]) -> None:
         """ALTER TABLE ADD COLUMNS (K9 — 04_acid_operations.py:288-296):
         additive schema evolution as a metadata-only commit; existing
         files surface NULL for the new columns on read."""
-        current = self.schema()
+        snap = self._replay()
+        current = snap.schema
         names = {f.name for f in current.fields}
         dup = [f.name for f in new_fields if f.name in names]
         if dup:
             raise ValueError(f"columns already exist: {dup}")
-        self._guard_new_columns([f.name for f in new_fields])
+        self._guard_new_columns([f.name for f in new_fields], snap.properties)
         evolved = T.StructType(list(current.fields) + list(new_fields))
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ADD COLUMNS",
-                schema_json=evolved.json(),
-                parameters={"columns": [f.name for f in new_fields]},
-            )
+        self._commit_op(
+            snap,
+            "ADD COLUMNS",
+            schema_json=evolved.json(),
+            parameters={"columns": [f.name for f in new_fields]},
         )
 
     def unset_properties(self, keys: list[str]) -> None:
         """ALTER TABLE UNSET TBLPROPERTIES — also the mechanism behind
         DROP CONSTRAINT (constraints live as ``constraint.*`` props)."""
+        snap = self._replay()
         remaining = {
-            k: v for k, v in self.properties().items() if k not in set(keys)
+            k: v for k, v in snap.properties.items() if k not in set(keys)
         }
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="UNSET TBLPROPERTIES",
-                properties=remaining,
-                parameters={"unset": list(keys)},
-            )
+        self._commit_op(
+            snap,
+            "UNSET TBLPROPERTIES",
+            properties=remaining,
+            parameters={"unset": list(keys)},
         )
 
     def drop_feature(self, name: str) -> None:
@@ -943,13 +959,14 @@ class LogTable:
         every DV via ``REORG TABLE ... APPLY (PURGE)``. Refuses while
         the capability is still in use; min reader/writer versions are
         recomputed from the remaining feature set."""
-        props = self.properties()
+        snap = self._replay()
+        props = snap.properties
         key = FEATURE_PROP_PREFIX + name
         if key not in props:
             raise KeyError(f"feature not enabled on {self.path}: {name}")
         in_use = {
             "deletionVectors": lambda: props.get(DV_PROP) == "true"
-            or any(f.dv for f in self._replay()[0]),
+            or any(f.dv for f in snap.files),
             "changeDataFeed": lambda: props.get(CDF_PROP) == "true",
             "rowTracking": lambda: props.get(RT_PROP) == "true",
             "columnMapping": lambda: bool(
@@ -987,14 +1004,11 @@ class LogTable:
         enabled = _enabled_features(remaining)
         remaining[MIN_READER_PROP] = "3" if (enabled & READER_FEATURES) else "1"
         remaining[MIN_WRITER_PROP] = "7" if enabled else "2"
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DROP FEATURE",
-                properties=remaining,
-                parameters={"feature": name},
-            )
+        self._commit_op(
+            snap,
+            "DROP FEATURE",
+            properties=remaining,
+            parameters={"feature": name},
         )
 
     def set_properties(self, props: dict[str, str]) -> None:
@@ -1004,22 +1018,20 @@ class LogTable:
         ids for every active file in the same commit (Delta's enable
         backfill) — metadata-only: ids derive from brid + row_index, no
         file is rewritten at any table size."""
-        cur = self.properties()
+        snap = self._replay()
+        cur = snap.properties
         merged = {**cur, **props}
         backfill: list[FileEntry] = []
         if props.get(RT_PROP) == "true" and cur.get(RT_PROP) != "true":
             # re-add every unstamped active entry; _commit_tx assigns
             # brid ranges + rcv with the version the commit lands at
-            backfill = [f for f in self._replay()[0] if f.brid is None]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="SET TBLPROPERTIES",
-                add=backfill,
-                properties=merged,
-                parameters={"properties": props},
-            )
+            backfill = [f for f in snap.files if f.brid is None]
+        self._commit_op(
+            snap,
+            "SET TBLPROPERTIES",
+            add=backfill,
+            properties=merged,
+            parameters={"properties": props},
         )
 
     # ------------------------------------------------------------------
@@ -1050,7 +1062,8 @@ class LogTable:
         it) — Delta's row-tracking metadata columns. Rows ingested
         before row tracking was enabled surface NULL ids.
         """
-        files, schema_json, partition_by, props, _ = self._replay(version, timestamp)
+        snap = self._replay(version, timestamp)
+        files, props = snap.files, snap.properties
         unknown = _enabled_features(props) - WRITER_FEATURES
         if unknown:
             # reader gate: an unknown feature may change read semantics
@@ -1059,15 +1072,10 @@ class LogTable:
                 f"{self.path} requires table feature(s) {sorted(unknown)} "
                 "this engine does not implement — refusing to read"
             )
-        schema = T.StructType.fromJson(json.loads(schema_json))
         if where is not None:
-            mapping = self._column_mapping(props)
-            conj = [
-                (mapping.get(c, c), op, v) for c, op, v in _parse_conjuncts(where)
-            ]
-            files = self._skip_files(files, conj)
+            files = self._skip_files(files, self._physical_conjuncts(where, props))
         df = self._read_entries(
-            files, schema, props=props, with_row_tracking=row_tracking
+            files, snap.schema, props, with_row_tracking=row_tracking
         )
         if row_tracking:
             df = df.withColumnRenamed(ROW_ID_COL, "_row_id").withColumnRenamed(
@@ -1085,9 +1093,7 @@ class LogTable:
         (round-3 false positive, round-4 true zero) — this is the
         direct observable."""
         files, _, _, props, _ = self._replay(version)
-        mapping = self._column_mapping(props)
-        conj = [(mapping.get(c, c), op, v) for c, op, v in _parse_conjuncts(where)]
-        kept = self._skip_files(files, conj)
+        kept = self._skip_files(files, self._physical_conjuncts(where, props))
         return {
             "files_total": len(files),
             "files_read": len(kept),
@@ -1191,10 +1197,11 @@ class LogTable:
         """CDF scan (S9 — delta_utils.py:387-416): rows with
         ``_change_type`` ∈ {insert, update_preimage, update_postimage,
         delete}, ``_commit_version``, ``_commit_timestamp``."""
-        if self.properties().get(CDF_PROP, "false") != "true":
+        snap = self._replay()
+        if snap.properties.get(CDF_PROP, "false") != "true":
             raise ValueError(f"{CDF_PROP} is not enabled on {self.path}")
-        end = ending_version if ending_version is not None else self.version()
-        schema = self.schema()
+        end = ending_version if ending_version is not None else snap.version
+        schema = snap.schema
         cdf_schema = T.StructType(
             list(schema.fields)
             + [
@@ -1213,7 +1220,7 @@ class LogTable:
                     dirs.append(d)
         if not dirs:
             return self.spark.createDataFrame([], cdf_schema)
-        mapping = self._column_mapping()
+        mapping = self._column_mapping(snap.properties)
         df = self.spark.read.parquet(*dirs)
         return df.select(
             *[
@@ -1351,26 +1358,22 @@ class LogTable:
                 schema_json=schema.json(),
                 partition_by=partition_by or [],
                 properties=props,
-            )
+            ),
+            {},
         )
         return t
 
     # ---- column mapping (rename/drop without rewrite) -----------------
 
-    def _column_mapping(self, props: dict[str, str] | None = None) -> dict[str, str]:
+    @staticmethod
+    def _column_mapping(props: dict[str, str]) -> dict[str, str]:
         """{logical: physical} for renamed columns (identity omitted)."""
-        if props is None:
-            try:
-                props = self.properties()
-            except FileNotFoundError:
-                # pre-first-commit write paths (deep-clone purge) have
-                # no log yet — and trivially no mapping
-                return {}
         raw = props.get(MAPPING_PROP)
         return json.loads(raw) if raw else {}
 
-    def _reserved_physicals(self, props: dict[str, str] | None = None) -> set[str]:
-        raw = (props if props is not None else self.properties()).get(RESERVED_PROP)
+    @staticmethod
+    def _reserved_physicals(props: dict[str, str]) -> set[str]:
+        raw = props.get(RESERVED_PROP)
         return set(json.loads(raw)) if raw else set()
 
     def _check_prop_references(self, col: str, props: dict[str, str]) -> None:
@@ -1393,8 +1396,8 @@ class LogTable:
         mapping, name mode): the physical parquet column name is frozen
         at first write; only the logical schema and the mapping change.
         No data rewrite at any table size."""
-        files, schema_json, partition_by, props, _ = self._replay()
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        snap = self._replay()
+        schema, partition_by, props = snap.schema, snap.partition_by, snap.properties
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"no such column: {old}")
@@ -1430,24 +1433,21 @@ class LogTable:
             T.StructField(new if f.name == old else f.name, f.dataType, f.nullable, f.metadata)
             for f in schema.fields
         ]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="RENAME COLUMN",
-                schema_json=T.StructType(fields).json(),
-                partition_by=[new if c == old else c for c in partition_by],
-                properties=new_props,
-                parameters={"from": old, "to": new},
-            )
+        self._commit_op(
+            snap,
+            "RENAME COLUMN",
+            schema_json=T.StructType(fields).json(),
+            partition_by=[new if c == old else c for c in partition_by],
+            properties=new_props,
+            parameters={"from": old, "to": new},
         )
 
     def drop_column(self, name: str) -> None:
         """ALTER TABLE DROP COLUMN — metadata-only: the physical column
         stays in the data files (reserved against reuse); the logical
         schema simply stops projecting it."""
-        files, schema_json, partition_by, props, _ = self._replay()
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        snap = self._replay()
+        schema, partition_by, props = snap.schema, snap.partition_by, snap.properties
         if name not in [f.name for f in schema.fields]:
             raise ValueError(f"no such column: {name}")
         if name in partition_by:
@@ -1471,17 +1471,14 @@ class LogTable:
         new_props.pop(f"identity.{name}", None)
         new_props.pop(f"notnull.{name}", None)
         new_props.pop(f"default.{name}", None)
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DROP COLUMN",
-                schema_json=T.StructType(
-                    [f for f in schema.fields if f.name != name]
-                ).json(),
-                properties=new_props,
-                parameters={"column": name},
-            )
+        self._commit_op(
+            snap,
+            "DROP COLUMN",
+            schema_json=T.StructType(
+                [f for f in schema.fields if f.name != name]
+            ).json(),
+            properties=new_props,
+            parameters={"column": name},
         )
 
     @staticmethod
@@ -1551,8 +1548,8 @@ class LogTable:
         at any table size); rewrites after the change (UPDATE, MERGE,
         OPTIMIZE) naturally land the wide type. Identity and generated
         columns keep their declared contract types and are refused."""
-        files, schema_json, partition_by, props, _ = self._replay()
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        snap = self._replay()
+        schema, props = snap.schema, snap.properties
         by_name = {f.name: f for f in schema.fields}
         if name not in by_name:
             raise ValueError(f"no such column: {name}")
@@ -1575,29 +1572,26 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                schema_json=T.StructType(fields).json(),
-                # widening leaves narrow-typed files behind forever —
-                # a reader must upcast at scan time, so the protocol
-                # gains the reader-required typeWidening feature in
-                # this same commit (undetectable from properties alone,
-                # hence stamped at the site, not in _stamp_protocol)
-                properties={
-                    **self.properties(),
-                    FEATURE_PROP_PREFIX + "typeWidening": "supported",
-                    MIN_READER_PROP: "3",
-                    MIN_WRITER_PROP: "7",
-                },
-                parameters={
-                    "column": name,
-                    "from": old_type.simpleString(),
-                    "to": new_type.simpleString(),
-                },
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            schema_json=T.StructType(fields).json(),
+            # widening leaves narrow-typed files behind forever —
+            # a reader must upcast at scan time, so the protocol
+            # gains the reader-required typeWidening feature in
+            # this same commit (undetectable from properties alone,
+            # hence stamped at the site, not in _stamp_protocol)
+            properties={
+                **props,
+                FEATURE_PROP_PREFIX + "typeWidening": "supported",
+                MIN_READER_PROP: "3",
+                MIN_WRITER_PROP: "7",
+            },
+            parameters={
+                "column": name,
+                "from": old_type.simpleString(),
+                "to": new_type.simpleString(),
+            },
         )
 
     def set_not_null(self, name: str) -> None:
@@ -1605,10 +1599,12 @@ class LogTable:
         satisfy the contract (a constraint is never born violated),
         then every subsequent write enforces it. The schema field flips
         to non-nullable so DESCRIBE/SHOW CREATE reflect the contract."""
-        schema = self.schema()
+        snap = self._replay()
+        schema = snap.schema
         if name not in [f.name for f in schema.fields]:
             raise ValueError(f"no such column: {name}")
-        n_bad = self.read().filter(F.col(name).isNull()).count()
+        rows = self._read_entries(snap.files, schema, snap.properties)
+        n_bad = rows.filter(F.col(name).isNull()).count()
         if n_bad:
             raise ValueError(
                 f"cannot SET NOT NULL on {name!r}: {n_bad} existing NULL rows"
@@ -1620,24 +1616,22 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                schema_json=T.StructType(fields).json(),
-                properties={**self.properties(), f"notnull.{name}": "true"},
-                parameters={"column": name, "notNull": "set"},
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            schema_json=T.StructType(fields).json(),
+            properties={**snap.properties, f"notnull.{name}": "true"},
+            parameters={"column": name, "notNull": "set"},
         )
 
     def drop_not_null(self, name: str) -> None:
         """ALTER COLUMN ... DROP NOT NULL: stop enforcing; the schema
         field goes back to nullable."""
-        schema = self.schema()
+        snap = self._replay()
+        schema = snap.schema
         if name not in [f.name for f in schema.fields]:
             raise ValueError(f"no such column: {name}")
-        props = dict(self.properties())
+        props = dict(snap.properties)
         props.pop(f"notnull.{name}", None)
         fields = [
             T.StructField(
@@ -1646,15 +1640,12 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                schema_json=T.StructType(fields).json(),
-                properties=props,
-                parameters={"column": name, "notNull": "dropped"},
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            schema_json=T.StructType(fields).json(),
+            properties=props,
+            parameters={"column": name, "notNull": "dropped"},
         )
 
     def set_column_default(self, name: str, expr: str) -> None:
@@ -1665,47 +1656,43 @@ class LogTable:
         of NULL. Existing rows are untouched (no rewrite at any table
         size) — exactly Delta's semantics, where ALTER ... SET DEFAULT
         affects only future writes."""
-        schema = self.schema()
-        field = next((f for f in schema.fields if f.name == name), None)
+        snap = self._replay()
+        field = next((f for f in snap.schema.fields if f.name == name), None)
         if field is None:
             raise ValueError(f"no such column: {name}")
-        if f"identity.{name}" in self.properties() or f"generated.{name}" in self.properties():
+        if f"identity.{name}" in snap.properties or f"generated.{name}" in snap.properties:
             raise ValueError(
                 f"column {name!r} is identity/generated — it already has "
                 "a value contract; DEFAULT would conflict"
             )
         self._validate_default(self.spark, name, expr, field.dataType)
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                properties={**self.properties(), f"default.{name}": expr},
-                parameters={"column": name, "default": expr},
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            properties={**snap.properties, f"default.{name}": expr},
+            parameters={"column": name, "default": expr},
         )
 
     def drop_column_default(self, name: str) -> None:
         """ALTER COLUMN ... DROP DEFAULT: omitted values go back to
         NULL on future writes."""
-        if name not in [f.name for f in self.schema().fields]:
+        snap = self._replay()
+        if name not in [f.name for f in snap.schema.fields]:
             raise ValueError(f"no such column: {name}")
-        props = dict(self.properties())
+        props = dict(snap.properties)
         props.pop(f"default.{name}", None)
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                properties=props,
-                parameters={"column": name, "default": "dropped"},
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            properties=props,
+            parameters={"column": name, "default": "dropped"},
         )
 
     def alter_column_comment(self, name: str, comment: str | None) -> None:
         """ALTER COLUMN ... COMMENT — metadata-only commit updating the
         field's comment (``None`` clears it)."""
-        schema = self.schema()
+        snap = self._replay()
+        schema = snap.schema
         if name not in [f.name for f in schema.fields]:
             raise ValueError(f"no such column: {name}")
         fields = []
@@ -1719,31 +1706,26 @@ class LogTable:
             fields.append(
                 T.StructField(f.name, f.dataType, f.nullable, meta or None)
             )
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="ALTER COLUMN",
-                schema_json=T.StructType(fields).json(),
-                parameters={"column": name, "comment": comment or ""},
-            )
+        self._commit_op(
+            snap,
+            "ALTER COLUMN",
+            schema_json=T.StructType(fields).json(),
+            parameters={"column": name, "comment": comment or ""},
         )
 
     def _physical_conjuncts(
-        self, conjuncts: list[tuple[str, str, Any]]
+        self, condition: str, props: dict[str, str]
     ) -> list[tuple[str, str, Any]]:
-        """Translate predicate column names logical → physical so they
-        line up with file stats / partition paths (both physical)."""
-        mapping = self._column_mapping()
-        if not mapping:
-            return conjuncts
-        return [(mapping.get(c, c), op, v) for c, op, v in conjuncts]
+        """The conjuncts of ``condition`` with column names translated
+        logical → physical so they line up with file stats / partition
+        paths (both physical)."""
+        mapping = self._column_mapping(props)
+        return [(mapping.get(c, c), op, v) for c, op, v in _parse_conjuncts(condition)]
 
-    def _guard_new_columns(self, new_names: list[str]) -> None:
+    def _guard_new_columns(self, new_names: list[str], props: dict[str, str]) -> None:
         """A new logical column must not collide with the frozen
         physical name of a renamed or dropped column — the parquet
         files already carry data under that name."""
-        props = self.properties()
         taken = set(self._column_mapping(props).values()) | self._reserved_physicals(
             props
         )
@@ -1756,16 +1738,17 @@ class LogTable:
 
     # ---- identity columns (GENERATED ALWAYS AS IDENTITY) ---------------
 
-    def _identity_columns(self) -> dict[str, dict]:
+    @staticmethod
+    def _identity_columns(props: dict[str, str]) -> dict[str, dict]:
         """``identity.<col>`` properties → {col: {start, step, high}}."""
         out = {}
-        for k, v in self.properties().items():
+        for k, v in props.items():
             if k.startswith("identity."):
                 out[k.removeprefix("identity.")] = json.loads(v)
         return out
 
     def _apply_identity(
-        self, df: DataFrame
+        self, df: DataFrame, props: dict[str, str]
     ) -> tuple[DataFrame, dict[str, str]]:
         """Assign identity values to a write batch (GENERATED ALWAYS —
         explicit values rejected; contiguous from the high watermark).
@@ -1783,7 +1766,7 @@ class LogTable:
         silently allocating overlapping ranges. Assumes the input
         frame's partition contents are deterministic between the two
         jobs (true for any deterministic plan)."""
-        idents = self._identity_columns()
+        idents = self._identity_columns(props)
         if not idents:
             return df, {}
         for c in idents:
@@ -1841,13 +1824,12 @@ class LogTable:
                 out = out.withColumn(c, F.lit(None).cast("long"))
         return out.drop("__pid", "__mono"), props
 
-    def _generated_columns(
-        self, props: dict[str, str] | None = None
-    ) -> dict[str, str]:
+    @staticmethod
+    def _generated_columns(props: dict[str, str]) -> dict[str, str]:
         """``generated.<col>`` properties → {col: sql expr}."""
         return {
             k.removeprefix("generated."): v
-            for k, v in (props if props is not None else self.properties()).items()
+            for k, v in props.items()
             if k.startswith("generated.")
         }
 
@@ -1877,19 +1859,18 @@ class LogTable:
                 f"invalid DEFAULT for column {col!r}: {expr!r} ({e})"
             ) from None
 
-    def _apply_generated(self, df: DataFrame) -> DataFrame:
+    def _apply_generated(self, df: DataFrame, props: dict[str, str]) -> DataFrame:
         """Compute generated columns the incoming frame omits; columns
         it supplies are left alone (validated by :meth:`_all_checks`)."""
-        for c, e in self._generated_columns().items():
+        for c, e in self._generated_columns(props).items():
             if c not in df.columns:
                 df = df.withColumn(c, F.expr(e))
         return df
 
-    def _all_checks(self, props: dict[str, str] | None = None) -> dict[str, str]:
+    @staticmethod
+    def _all_checks(props: dict[str, str]) -> dict[str, str]:
         """Every write-time predicate: explicit CHECK constraints plus
         the implicit ``col <=> (expr)`` contract of generated columns."""
-        if props is None:
-            props = self.properties()
         checks = {
             k.removeprefix("constraint."): v
             for k, v in props.items()
@@ -1978,7 +1959,8 @@ class LogTable:
                     "numConvertedFiles": len(entries),
                     "numRecords": sum(e.num_records for e in entries),
                 },
-            )
+            ),
+            {},
         )
         return t
 
@@ -2020,20 +2002,16 @@ class LogTable:
                 self.fs.delete(os.path.join(self.path, e.bloom))
 
     def _write_files(
-        self, df: DataFrame, partition_by: list[str]
+        self, df: DataFrame, partition_by: list[str], props: dict[str, str]
     ) -> list[FileEntry]:
         """Materialize ``df`` as parquet under the table root, returning
         entries. Data is written by executors to a staging dir; the
         driver then *renames* files into place (metadata-only).
 
-        Column mapping: data lands under PHYSICAL names (frozen at
-        first write), so files stay homogeneous across renames."""
-        try:
-            props = self.properties()
-        except FileNotFoundError:
-            # pre-first-commit write paths (deep-clone purge) have no
-            # log yet — no mapping, no bloom config
-            props = {}
+        ``props`` (the snapshot's) give the column mapping, the bloom
+        columns and the stats width. Column mapping: data lands under
+        PHYSICAL names (frozen at first write), so files stay
+        homogeneous across renames."""
         mapping = self._column_mapping(props)
         bloom_phys = [
             mapping.get(c, c) for c in json.loads(props.get(BLOOM_PROP, "[]"))
@@ -2128,51 +2106,69 @@ class LogTable:
                 cols.append(F.col(c))
         return df.select(*cols)
 
-    def _evolve_schema(self, df: DataFrame, merge_schema: bool) -> T.StructType:
-        current = self.schema()
+    def _evolve_schema(
+        self, df: DataFrame, merge_schema: bool, snap: Snapshot
+    ) -> T.StructType:
+        current = snap.schema
         if not merge_schema:
             return current
         names = {f.name for f in current.fields}
         extra = [f for f in df.schema.fields if f.name not in names]
         if extra:
-            self._guard_new_columns([f.name for f in extra])
+            self._guard_new_columns([f.name for f in extra], snap.properties)
         return T.StructType(list(current.fields) + extra)
+
+    def _ingest(
+        self, df: DataFrame, snap: Snapshot, merge_schema: bool = False
+    ) -> tuple[list[FileEntry], dict[str, str], T.StructType]:
+        """The write half of append and COPY INTO: identity values,
+        generated columns, defaults, CHECKs counted by the write job
+        itself, optimizeWrite. Returns the written entries, the identity
+        watermark properties their commit must carry, and the schema
+        written."""
+        props, partition_by = snap.properties, snap.partition_by
+        df, ident_props = self._apply_identity(df, props)
+        df = self._apply_generated(df, props)
+        schema = self._evolve_schema(df, merge_schema, snap)
+        data = self._align(df, schema, defaults=self._column_defaults(props))
+        checks = self._all_checks(props)
+        data, obs = self._observe(data, [], checks)
+        data = self._maybe_optimize_write(data, partition_by, props)
+        entries = self._write_files(data, partition_by, props)
+        self._observed(obs, checks, entries)
+        return entries, ident_props, schema
+
+    def _ingested(
+        self,
+        version: int,
+        entries: list[FileEntry],
+        schema: T.StructType,
+        props: dict[str, str],
+    ) -> None:
+        """After an ingest commit: its change feed, then autoCompact."""
+        if props.get(CDF_PROP) == "true":
+            rows = self._read_entries(entries, schema, props)
+            self._write_changes(version, self._cdf_frame(rows, CT_INSERT, version), props)
+        self._maybe_autocompact(entries, props)
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> None:
         """Delta append (K1), optional mergeSchema evolution
         (delta_utils.py:107-147)."""
-        df, ident_props = self._apply_identity(df)
-        df = self._apply_generated(df)
-        schema = self._evolve_schema(df, merge_schema)
-        _, _, partition_by, props, _ = self._replay()
-        data = self._align(df, schema, defaults=self._column_defaults(props))
-        checks = self._all_checks()
-        data, obs = self._observe(data, [], checks)
-        data = self._maybe_optimize_write(data, partition_by, props)
-        entries = self._write_files(data, partition_by)
-        self._observed(obs, checks, entries)
-        version = self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="WRITE",
-                add=entries,
-                schema_json=schema.json() if merge_schema else None,
-                properties=ident_props or None,
-                parameters={"mode": "Append", "mergeSchema": merge_schema},
-                metrics={
-                    "numOutputRows": sum(e.num_records for e in entries),
-                    "numAddedFiles": len(entries),
-                },
-            )
+        snap = self._replay()
+        entries, ident_props, schema = self._ingest(df, snap, merge_schema)
+        version = self._commit_op(
+            snap,
+            "WRITE",
+            add=entries,
+            schema_json=schema.json() if merge_schema else None,
+            properties=ident_props or None,
+            parameters={"mode": "Append", "mergeSchema": merge_schema},
+            metrics={
+                "numOutputRows": sum(e.num_records for e in entries),
+                "numAddedFiles": len(entries),
+            },
         )
-        if props.get(CDF_PROP) == "true":
-            self._write_changes(
-                version,
-                self._cdf_frame(self.read_files(entries), CT_INSERT, version),
-                props,
-            )
-        self._maybe_autocompact(entries)
+        self._ingested(version, entries, schema, snap.properties)
 
     def _maybe_optimize_write(
         self, data: DataFrame, partition_by: list[str], props: dict[str, str]
@@ -2185,11 +2181,7 @@ class LogTable:
         within-partition sort)."""
         if props.get(OPTWRITE_PROP, "false") != "true":
             return data
-        cluster = [
-            c
-            for c in props.get(CLUSTERING_PROP, "").split(",")
-            if c and c in data.columns
-        ]
+        cluster = [c for c in _cluster_columns(props) if c in data.columns]
         if partition_by:
             out = data.repartition(*partition_by)
             # cluster-on-write: inside each hive partition the batch
@@ -2206,7 +2198,9 @@ class LogTable:
             )
         return data
 
-    def _maybe_autocompact(self, new_entries: list[FileEntry]) -> None:
+    def _maybe_autocompact(
+        self, new_entries: list[FileEntry], props: dict[str, str]
+    ) -> None:
         """autoCompact: if a write leaves any of its target partition
         directories holding ≥ minNumFiles small files, bin-pack exactly
         those directories inline (a scoped OPTIMIZE commit). Bounded
@@ -2216,13 +2210,14 @@ class LogTable:
         re-sorting, so on a Z-ORDERed table it gradually dilutes
         clustering in hot partitions — schedule a periodic scoped
         ``zorder(..., where=)`` (see ``MaintenanceConfig.incremental``)
-        to restore it, exactly as Delta users re-OPTIMIZE ZORDER."""
-        props = self.properties()
+        to restore it, exactly as Delta users re-OPTIMIZE ZORDER.
+        ``props`` are the write's; the compaction reads its own
+        snapshot, which includes the write."""
         if props.get(AUTOCOMPACT_PROP, "false") != "true":
             return
         min_files = int(props.get(AUTOCOMPACT_MIN_FILES_PROP, "8"))
         touched_dirs = {os.path.dirname(e.path) for e in new_entries}
-        files, _, partition_by, _, _ = self._replay()
+        files, _, partition_by, props, _ = self._replay()
         by_dir: dict[str, int] = {}
         for f in files:
             d = os.path.dirname(f.path)
@@ -2234,7 +2229,7 @@ class LogTable:
         if not partition_by:
             self.optimize()
             return
-        phys = [self._column_mapping().get(c, c) for c in partition_by]
+        phys = [self._column_mapping(props).get(c, c) for c in partition_by]
         for d in hot:
             pv = _partition_values(os.path.join(d, "x"))
             conj = [
@@ -2277,6 +2272,9 @@ class LogTable:
         over just the new files."""
         if file_format not in self._COPY_EXTS:
             raise ValueError(f"unsupported COPY INTO format {file_format!r}")
+        # read first: a COPY INTO landing after this read is either in
+        # the loaded set below or checked at commit (ConcurrentTransactionError)
+        snap = self._replay()
         loaded: set[tuple] = set()
         if not force:
             for c in self.commits():
@@ -2297,46 +2295,28 @@ class LogTable:
                 new.append(ident)
         if not new:
             return {"numLoadedFiles": 0, "numCopiedRows": 0}
-        schema = self.schema()
-        reader = self.spark.read.schema(schema).options(**(options or {}))
+        reader = self.spark.read.schema(snap.schema).options(**(options or {}))
         if file_format == "csv":
             reader = reader.option("header", options.get("header", "true") if options else "true")
         # basePath keeps hive-partition columns resolvable when loading
         # a subset of a partitioned directory
         reader = reader.option("basePath", source_path).format(file_format)
         df = reader.load([os.path.join(source_path, rel) for rel, _, _ in new])
-        df, ident_props = self._apply_identity(df)
-        df = self._apply_generated(df)
-        _, _, partition_by, props, _ = self._replay()
-        data = self._align(df, schema, defaults=self._column_defaults(props))
-        checks = self._all_checks()
-        data, obs = self._observe(data, [], checks)
-        data = self._maybe_optimize_write(data, partition_by, props)
-        entries = self._write_files(data, partition_by)
-        self._observed(obs, checks, entries)
+        entries, ident_props, schema = self._ingest(df, snap)
         n_rows = sum(e.num_records for e in entries)
-        version = self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="COPY INTO",
-                add=entries,
-                properties=ident_props or None,
-                parameters={
-                    "source": source_path,
-                    "fileFormat": file_format,
-                    "sourceFiles": [list(x) for x in sorted(new)],
-                },
-                metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
-            )
+        version = self._commit_op(
+            snap,
+            "COPY INTO",
+            add=entries,
+            properties=ident_props or None,
+            parameters={
+                "source": source_path,
+                "fileFormat": file_format,
+                "sourceFiles": [list(x) for x in sorted(new)],
+            },
+            metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
         )
-        if props.get(CDF_PROP) == "true":
-            self._write_changes(
-                version,
-                self._cdf_frame(self.read_files(entries), CT_INSERT, version),
-                props,
-            )
-        self._maybe_autocompact(entries)
+        self._ingested(version, entries, schema, snap.properties)
         return {"numLoadedFiles": len(new), "numCopiedRows": n_rows}
 
     def overwrite(
@@ -2369,22 +2349,22 @@ class LogTable:
         replaced files are tagged DELETE where ``replace_where`` is TRUE
         and KEEP otherwise (FALSE or NULL), and the DML rewrite
         (:meth:`_rewrite`) carries the KEEP rows into new files (a
-        second job, only when such files exist). An overwrite writes no
-        change feed."""
+        second job, only when such files exist). With the change feed
+        on, the removed rows (``replace_where``: those where it is TRUE)
+        are its delete rows and the written rows its insert rows."""
         if dynamic and (replace_where is not None or replace_range is not None):
             raise ValueError("dynamic excludes replace_where and replace_range")
         if replace_where is not None and replace_range is not None:
             raise ValueError("replace_where and replace_range are mutually exclusive")
-        files, schema_json, partition_by, props, _ = self._replay()
+        snap = self._replay()
+        files, partition_by, props = snap.files, snap.partition_by, snap.properties
         if dynamic and not partition_by:
             raise ValueError("dynamic overwrite requires a partitioned table")
-        df, ident_props = self._apply_identity(df)
-        df = self._apply_generated(df)
-        schema = (
-            df.schema if overwrite_schema else T.StructType.fromJson(json.loads(schema_json))
-        )
+        df, ident_props = self._apply_identity(df, props)
+        df = self._apply_generated(df, props)
+        schema = df.schema if overwrite_schema else snap.schema
         data = self._align(df, schema, defaults=self._column_defaults(props))
-        checks = self._all_checks()
+        checks = self._all_checks(props)
         metrics = []
         if replace_where is not None:
             metrics.append(_count_if(~F.expr(replace_where)).alias("__bad"))
@@ -2393,7 +2373,7 @@ class LogTable:
             metrics += [F.min(k).alias("__lo"), F.max(k).alias("__hi")]
         data, obs = self._observe(data, metrics, checks)
         data = self._maybe_optimize_write(data, partition_by, props)
-        entries = self._write_files(data, partition_by)
+        entries = self._write_files(data, partition_by, props)
         m = self._observed(obs, checks, entries)
         if m.get("__bad"):
             # new data must satisfy the predicate (delta semantics)
@@ -2408,36 +2388,49 @@ class LogTable:
             replace_where = (
                 f"{replace_range} >= '{m['__lo']}' AND {replace_range} <= '{m['__hi']}'"
             )
+        pred = None if replace_where is None else F.expr(replace_where)
 
         def commit(survivors: list[FileEntry], _n_changed: int = 0) -> int:
             added = entries + survivors
-            return self._commit_tx(
-                Commit(
-                    version=self._next_version(),
-                    timestamp=time.time(),
-                    operation="WRITE",
-                    add=added,
-                    remove=removed,
-                    schema_json=schema.json() if overwrite_schema else None,
-                    # extra_properties ride the SAME commit as the data
-                    # change (atomic watermark pattern — see with_commit_props)
-                    properties={**ident_props, **(extra_properties or {})} or None,
-                    parameters={
-                        "mode": "Overwrite",
-                        **({"replaceWhere": replace_where} if replace_where else {}),
-                    },
-                    metrics={
-                        "numOutputRows": sum(e.num_records for e in added),
-                        "numAddedFiles": len(added),
-                        "numRemovedFiles": len(removed),
-                    },
-                )
+            version = self._commit_op(
+                snap,
+                "WRITE",
+                add=added,
+                remove=[f.path for f in removed],
+                schema_json=schema.json() if overwrite_schema else None,
+                # extra_properties ride the SAME commit as the data
+                # change (atomic watermark pattern — see with_commit_props)
+                properties={**ident_props, **(extra_properties or {})} or None,
+                parameters={
+                    "mode": "Overwrite",
+                    **({"replaceWhere": replace_where} if replace_where else {}),
+                },
+                metrics={
+                    "numOutputRows": sum(e.num_records for e in added),
+                    "numAddedFiles": len(added),
+                    "numRemovedFiles": len(removed),
+                },
             )
+            if props.get(CDF_PROP) == "true":
+                gone = self._read_entries(removed, snap.schema, props)
+                if pred is not None:
+                    gone = gone.filter(pred)
+                ct = "_change_type"
+                changes = self._align(gone, schema).withColumn(ct, F.lit(CT_DELETE))
+                changes = changes.unionByName(
+                    self._read_entries(entries, schema, props).withColumn(
+                        ct, F.lit(CT_INSERT)
+                    )
+                )
+                self._write_changes(
+                    version, self._cdf_frame(changes, F.col(ct), version), props
+                )
+            return version
 
-        removed: list[str]
+        removed: list[FileEntry]
         if dynamic:
             phys_parts = [
-                self._column_mapping().get(c, c) for c in partition_by
+                self._column_mapping(props).get(c, c) for c in partition_by
             ]  # paths carry physical names
             # the same decoder reads old and new paths, so NULL, boolean
             # and escaped partition values compare equal by construction
@@ -2446,24 +2439,16 @@ class LogTable:
                 return tuple(pv.get(c) for c in phys_parts)
 
             new_parts = {part_key(e.path) for e in entries}
-            removed = [f.path for f in files if part_key(f.path) in new_parts]
-        elif replace_where is None:
-            removed = [f.path for f in files]
+            removed = [f for f in files if part_key(f.path) in new_parts]
+        elif pred is None:
+            removed = list(files)
         else:
-            pred = F.expr(replace_where)
-            touched, _ = self._split_files_by_predicate(files, pred, replace_where)
-            removed = [f.path for f in touched]
-            if touched:
+            removed, _ = self._split_files_by_predicate(snap, pred, replace_where)
+            if removed:
                 # the replaced files' rows the predicate does not select
                 # (FALSE or NULL) are KEEP rows of one rewrite, projected
                 # onto the written schema (overwrite_schema may change it)
-                rows = self._tag_rows(
-                    touched,
-                    T.StructType.fromJson(json.loads(schema_json)),
-                    props,
-                    pred,
-                    DELETE,
-                )
+                rows = self._tag_rows(removed, snap.schema, props, pred, DELETE)
                 keep = (ROW_ID_COL, ROW_COMMIT_COL, ACTION_COL)
                 self._rewrite(
                     self._align(rows, schema, keep=keep).alias("target"),
@@ -2476,29 +2461,13 @@ class LogTable:
                 return
         commit([])
 
-    def read_files(self, entries: list[FileEntry]) -> DataFrame:
-        return self._read_file_subset(entries)
-
-    def _read_file_subset(
-        self,
-        entries: list[FileEntry],
-        with_file_path: bool = False,
-        with_row_tracking: bool = False,
-    ) -> DataFrame:
-        return self._read_entries(
-            entries,
-            self.schema(),
-            with_file_path,
-            with_row_tracking=with_row_tracking,
-        )
-
     def _read_entries(
         self,
         entries: list[FileEntry],
         schema: T.StructType,
+        props: dict[str, str],
         with_file_path: bool = False,
         with_dv_key: bool = False,
-        props: dict[str, str] | None = None,
         with_row_tracking: bool = False,
     ) -> DataFrame:
         """Scan a file set with the declared schema. Files written before
@@ -2660,9 +2629,10 @@ class LogTable:
     # ---- file pruning helpers -----------------------------------------
 
     def _split_files_by_predicate(
-        self, files: list[FileEntry], pred: Column, text: str | None = None
+        self, snap: Snapshot, pred: Column, text: str
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Files that contain ≥1 row matching ``pred`` vs the rest.
+        """The snapshot's files that contain ≥1 row matching ``pred``
+        (whose SQL is ``text``) vs the rest.
 
         Two-phase, like Delta: (1) metadata-only skipping — evaluate the
         predicate's conjuncts against per-file [min,max] stats and
@@ -2670,19 +2640,17 @@ class LogTable:
         (no job at all); (2) one metadata-sized aggregate job over the
         survivors — group matching rows by ``_metadata.file_path`` —
         for the exact touched set. Never collects data."""
+        files = snap.files
         if not files:
             return [], []
-        candidates = files
-        excluded: list[FileEntry] = []
-        if text:
-            conj = self._physical_conjuncts(_parse_conjuncts(text))
-            if conj:
-                candidates = self._skip_files(files, conj)
-                kept_paths = {f.path for f in candidates}
-                excluded = [f for f in files if f.path not in kept_paths]
+        candidates = self._skip_files(files, self._physical_conjuncts(text, snap.properties))
+        kept_paths = {f.path for f in candidates}
+        excluded = [f for f in files if f.path not in kept_paths]
         if not candidates:
             return [], list(files)
-        df = self._read_file_subset(candidates, with_file_path=True)
+        df = self._read_entries(
+            candidates, snap.schema, snap.properties, with_file_path=True
+        )
         hit = self._norm_paths(
             {
                 r.fp
@@ -2739,7 +2707,7 @@ class LogTable:
         KEEP where it is FALSE or NULL — the input of :meth:`_rewrite`."""
         return (
             self._read_entries(
-                touched, schema, with_row_tracking=props.get(RT_PROP) == "true"
+                touched, schema, props, with_row_tracking=props.get(RT_PROP) == "true"
             )
             .alias("target")
             .withColumn(ACTION_COL, F.when(pred, action).otherwise(KEEP))
@@ -2844,7 +2812,7 @@ class LogTable:
             *_check_aggs(checks, rows=action != DELETE),
         ).filter(action != DELETE)
         entries = self._write_files(
-            written.drop(ACTION_COL, PRE_IMAGE_COL), partition_by
+            written.drop(ACTION_COL, PRE_IMAGE_COL), partition_by, props
         )
         if verify is not None:
             verify(obs.get, entries)
@@ -2883,27 +2851,28 @@ class LogTable:
         semantics — base-column edits can't leave a generated column
         stale). The change feed's post-images are the rows written, and
         its pre-images the same rows' values before the assignment."""
-        bad_ids = [c for c in self._identity_columns() if c in set_exprs]
+        snap = self._replay()
+        props = snap.properties
+        bad_ids = [c for c in self._identity_columns(props) if c in set_exprs]
         if bad_ids:
             raise ValueError(
                 f"identity columns {bad_ids} are GENERATED ALWAYS — UPDATE "
                 "cannot assign them"
             )
-        files, schema_json, partition_by, props, _ = self._replay()
         pred = F.expr(condition)
-        touched, _ = self._split_files_by_predicate(files, pred, condition)
+        touched, _ = self._split_files_by_predicate(snap, pred, condition)
         params = {"predicate": condition}
         if not touched:
-            self._commit_dml("UPDATE", [], [], params, 0)
+            self._commit_dml(snap, "UPDATE", [], [], params, 0)
             return {"numUpdatedRows": 0}
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        schema = snap.schema
         m = self._rewrite(
             self._tag_rows(touched, schema, props, pred, UPDATE),
             schema,
-            partition_by,
+            snap.partition_by,
             props,
             lambda entries, n: self._commit_dml(
-                "UPDATE", entries, [f.path for f in touched], params, n
+                snap, "UPDATE", entries, [f.path for f in touched], params, n
             ),
             cdf=props.get(CDF_PROP) == "true",
             sets={c: F.expr(e) for c, e in set_exprs.items()},
@@ -2920,23 +2889,24 @@ class LogTable:
         otherwise (FALSE or NULL), one rewrite (:meth:`_rewrite`) writes
         the KEEP rows, and the change feed's delete rows are the DELETE
         rows of that same frame."""
-        files, schema_json, partition_by, props, _ = self._replay()
+        snap = self._replay()
+        props = snap.properties
         pred = F.expr(condition)
-        touched, _ = self._split_files_by_predicate(files, pred, condition)
+        touched, _ = self._split_files_by_predicate(snap, pred, condition)
         params = {"predicate": condition}
         if not touched:
-            self._commit_dml("DELETE", [], [], params, 0)
+            self._commit_dml(snap, "DELETE", [], [], params, 0)
             return {"numDeletedRows": 0}
-        schema = T.StructType.fromJson(json.loads(schema_json))
         if props.get(DV_PROP) == "true":
-            return self._delete_with_dvs(condition, pred, touched, schema, props)
+            return self._delete_with_dvs(condition, pred, touched, snap)
+        schema = snap.schema
         m = self._rewrite(
             self._tag_rows(touched, schema, props, pred, DELETE),
             schema,
-            partition_by,
+            snap.partition_by,
             props,
             lambda entries, n: self._commit_dml(
-                "DELETE", entries, [f.path for f in touched], params, n
+                snap, "DELETE", entries, [f.path for f in touched], params, n
             ),
             cdf=props.get(CDF_PROP) == "true",
         )
@@ -2947,8 +2917,7 @@ class LogTable:
         condition: str,
         pred: Column,
         touched: list[FileEntry],
-        schema: T.StructType,
-        props: dict[str, str],
+        snap: Snapshot,
     ) -> dict:
         """Merge-on-read DELETE: write (file, row_index) tombstones for
         the matched rows instead of rewriting the touched files. The
@@ -2957,7 +2926,8 @@ class LogTable:
         tombstones. One executor job writes the DV; the per-file hit
         map collected on the driver is bounded by the touched-file
         count (metadata-sized)."""
-        scan = self._read_entries(touched, schema, with_dv_key=True)
+        props = snap.properties
+        scan = self._read_entries(touched, snap.schema, props, with_dv_key=True)
         hits = scan.filter(pred)
         dv_rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
         dv_abs = os.path.join(self.path, dv_rel)
@@ -2975,7 +2945,7 @@ class LogTable:
         n_deleted = int(sum(per_file.values()))
         if n_deleted == 0:
             self.fs.delete_tree(dv_abs)
-            self._commit_dml("DELETE", [], [], {"predicate": condition}, 0)
+            self._commit_dml(snap, "DELETE", [], [], {"predicate": condition}, 0)
             return {"numDeletedRows": 0}
         # tombstone keys are base-relative; commit dvs are keyed by the
         # entry path the replay's active-file map uses
@@ -2983,24 +2953,21 @@ class LogTable:
             os.path.relpath(e.abspath(self.path), e.base or self.path): e.path
             for e in touched
         }
-        version = self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="DELETE",
-                parameters={"predicate": condition, "deletionVectors": True},
-                metrics={
-                    "numDeletedRows": n_deleted,
-                    "numAddedFiles": 0,
-                    "numRemovedFiles": 0,
-                    "numDeletionVectorFiles": 1,
-                },
-                dvs={
-                    key_to_path[k]: [dv_rel]
-                    for k in per_file
-                    if k in key_to_path
-                },
-            )
+        version = self._commit_op(
+            snap,
+            "DELETE",
+            parameters={"predicate": condition, "deletionVectors": True},
+            metrics={
+                "numDeletedRows": n_deleted,
+                "numAddedFiles": 0,
+                "numRemovedFiles": 0,
+                "numDeletionVectorFiles": 1,
+            },
+            dvs={
+                key_to_path[k]: [dv_rel]
+                for k in per_file
+                if k in key_to_path
+            },
         )
         if props.get(CDF_PROP) == "true":
             self._write_changes(
@@ -3014,6 +2981,7 @@ class LogTable:
 
     def _commit_dml(
         self,
+        snap: Snapshot,
         op: str,
         entries: list[FileEntry],
         removed: list[str],
@@ -3022,22 +2990,19 @@ class LogTable:
         schema_json: str | None = None,
         properties: dict[str, str] | None = None,
     ) -> int:
-        return self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation=op,
-                add=entries,
-                remove=removed,
-                schema_json=schema_json,
-                properties=properties,
-                parameters=params,
-                metrics={
-                    "numAffectedRows": n_affected,
-                    "numAddedFiles": len(entries),
-                    "numRemovedFiles": len(removed),
-                },
-            )
+        return self._commit_op(
+            snap,
+            op,
+            add=entries,
+            remove=removed,
+            schema_json=schema_json,
+            properties=properties,
+            parameters=params,
+            metrics={
+                "numAffectedRows": n_affected,
+                "numAddedFiles": len(entries),
+                "numRemovedFiles": len(removed),
+            },
         )
 
     def merge(self, source: DataFrame, condition: str) -> "MergeBuilder":
@@ -3063,7 +3028,8 @@ class LogTable:
     def restore(self, version: int | None = None, timestamp: float | None = None) -> dict:
         """RESTORE TABLE TO VERSION/TIMESTAMP AS OF (D5)."""
         old_files, old_schema, old_part, old_props, v = self._replay(version, timestamp)
-        cur_files, _, _, cur_props, _ = self._replay()
+        snap = self._replay()
+        cur_files, cur_props = snap.files, snap.properties
         # Schema-coupled properties must travel WITH the restored schema:
         # the column mapping (a renamed column would otherwise read
         # NULL), and the generated./identity./constraint. families (a
@@ -3100,54 +3066,48 @@ class LogTable:
         cur_by_path = {f.path: f for f in cur_files}
         cur_paths = set(cur_by_path)
         old_paths = {f.path for f in old_files}
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="RESTORE",
-                # re-add files missing from the current snapshot AND
-                # files whose deletion-vector state moved since the
-                # target version (a replayed add REPLACES the active
-                # entry, reverting its tombstone list)
-                add=[
-                    f
-                    for f in old_files
-                    if f.path not in cur_paths
-                    or (cur_by_path[f.path].dv or []) != (f.dv or [])
-                ],
-                remove=sorted(cur_paths - old_paths),
-                schema_json=old_schema,
-                partition_by=old_part,
-                properties=props_patch,
-                parameters={"version": v},
-            )
+        self._commit_op(
+            snap,
+            "RESTORE",
+            # re-add files missing from the current snapshot AND
+            # files whose deletion-vector state moved since the
+            # target version (a replayed add REPLACES the active
+            # entry, reverting its tombstone list)
+            add=[
+                f
+                for f in old_files
+                if f.path not in cur_paths
+                or (cur_by_path[f.path].dv or []) != (f.dv or [])
+            ],
+            remove=sorted(cur_paths - old_paths),
+            schema_json=old_schema,
+            partition_by=old_part,
+            properties=props_patch,
+            parameters={"version": v},
         )
         return {"restoredVersion": v}
 
-    def _partition_scope(
-        self, files: list[FileEntry], partition_by: list[str], where: str | None
-    ) -> list[FileEntry]:
+    def _partition_scope(self, snap: Snapshot, where: str | None) -> list[FileEntry]:
         """Restrict a maintenance op to the partitions matching
         ``where`` (Delta's ``OPTIMIZE t WHERE part = ...``). Only
         partition-column predicates are legal — anything else would
         force a data scan just to decide what to rewrite, which is the
         thing partition scoping exists to avoid at 100 TB."""
         if where is None:
-            return files
-        conj = self._physical_conjuncts(_parse_conjuncts(where))
-        mapping = self._column_mapping()
-        phys_parts = {mapping.get(c, c) for c in partition_by}
+            return snap.files
+        conj = self._physical_conjuncts(where, snap.properties)
+        mapping = self._column_mapping(snap.properties)
+        phys_parts = {mapping.get(c, c) for c in snap.partition_by}
         if not conj or not {c for c, _, _ in conj} <= phys_parts:
             raise ValueError(
                 "OPTIMIZE/ZORDER ... WHERE supports only partition-column "
                 f"predicates (partitions: {sorted(phys_parts)}); got {where!r}"
             )
-        return [f for f in files if _stats_may_match(f, conj)]
+        return [f for f in snap.files if _stats_may_match(f, conj)]
 
     def cluster_columns(self) -> list[str]:
         """CLUSTER BY key from the ``clustering.columns`` property."""
-        raw = self.properties().get(CLUSTERING_PROP, "")
-        return [c for c in raw.split(",") if c]
+        return _cluster_columns(self.properties())
 
     def optimize(
         self,
@@ -3166,16 +3126,16 @@ class LogTable:
         ``where=`` scope (the maintenance scheduler's incremental mode
         already passes exactly the partitions touched since its last
         tick)."""
-        files, _, partition_by, _, _ = self._replay()
-        clustered_on = self.cluster_columns()
-        if clustered_on and files:
+        snap = self._replay()
+        props = snap.properties
+        files = self._partition_scope(snap, where)
+        clustered_on = _cluster_columns(props)
+        if clustered_on and snap.files:
             # size the rewrite like compaction would: clustered OPTIMIZE
             # both re-clusters AND bin-packs toward the target file size
-            scoped = self._partition_scope(files, partition_by, where)
-            total = sum(f.size_bytes for f in scoped)
+            total = sum(f.size_bytes for f in files)
             n_out = max(1, int(total // target_file_bytes) or 1)
-            return self.zorder(clustered_on, n_files=n_out, where=where)
-        files = self._partition_scope(files, partition_by, where)
+            return self._zorder(snap, files, clustered_on, 64, n_out, "range")
         by_dir: dict[str, list[FileEntry]] = {}
         for f in files:
             d = os.path.dirname(f.path)
@@ -3191,25 +3151,26 @@ class LogTable:
             return {"numFilesRemoved": 0, "numFilesAdded": 0}
         removed: list[str] = []
         added: list[FileEntry] = []
-        rt_on = self.properties().get(RT_PROP) == "true"
+        rt_on = props.get(RT_PROP) == "true"
         for group in to_compact:
             # row tracking: the rewrite carries the materialized row id
             # and commit version forward — compaction never changes
             # either (Delta's row-tracking preservation contract)
-            df = self._read_file_subset(group, with_row_tracking=rt_on)
+            df = self._read_entries(
+                group, snap.schema, props, with_row_tracking=rt_on
+            )
             total = sum(f.size_bytes for f in group)
             n_out = max(1, total // target_file_bytes)
-            added += self._write_files(df.coalesce(int(n_out)), partition_by)
-            removed += [f.path for f in group]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="OPTIMIZE",
-                add=added,
-                remove=removed,
-                metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
+            added += self._write_files(
+                df.coalesce(int(n_out)), snap.partition_by, props
             )
+            removed += [f.path for f in group]
+        self._commit_op(
+            snap,
+            "OPTIMIZE",
+            add=added,
+            remove=removed,
+            metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
         )
         return {"numFilesRemoved": len(removed), "numFilesAdded": len(added)}
 
@@ -3241,15 +3202,27 @@ class LogTable:
         """
         if string_strategy not in ("range", "hash"):
             raise ValueError(f"string_strategy must be range|hash, got {string_strategy}")
-        files, _, partition_by, _, _ = self._replay()
+        snap = self._replay()
         # partition scoping: re-cluster only the partitions named by
         # ``where`` (files outside the scope keep their layout)
-        files = self._partition_scope(files, partition_by, where)
+        files = self._partition_scope(snap, where)
+        return self._zorder(snap, files, cols, n_buckets, n_files, string_strategy)
+
+    def _zorder(
+        self,
+        snap: Snapshot,
+        files: list[FileEntry],
+        cols: list[str],
+        n_buckets: int,
+        n_files: int | None,
+        string_strategy: str,
+    ) -> dict:
+        """Z-order ``files`` of ``snap`` (see :meth:`zorder`)."""
         if not files:
             return {"numFilesRemoved": 0, "numFilesAdded": 0}
-        df = self._read_file_subset(
-            files,
-            with_row_tracking=self.properties().get(RT_PROP) == "true",
+        props = snap.properties
+        df = self._read_entries(
+            files, snap.schema, props, with_row_tracking=props.get(RT_PROP) == "true"
         )
         bits = max(1, (n_buckets - 1).bit_length())
         numeric = {
@@ -3319,18 +3292,15 @@ class LogTable:
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-        added = self._write_files(clustered, partition_by)
+        added = self._write_files(clustered, snap.partition_by, props)
         removed = [f.path for f in files]
-        self._commit_tx(
-            Commit(
-                version=self._next_version(),
-                timestamp=time.time(),
-                operation="OPTIMIZE",
-                add=added,
-                remove=removed,
-                parameters={"zOrderBy": cols},
-                metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
-            )
+        self._commit_op(
+            snap,
+            "OPTIMIZE",
+            add=added,
+            remove=removed,
+            parameters={"zOrderBy": cols},
+            metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
         )
         return {"numFilesRemoved": len(removed), "numFilesAdded": len(added)}
 
@@ -3468,7 +3438,8 @@ class LogTable:
 
         Returns {"numFilesRemoved": n, "removed": [paths]}; with
         ``dry_run`` only reports."""
-        files, _, _, _, _ = self._replay()
+        snap = self._replay()
+        files = snap.files
         probes: list[tuple[str, str]] = []  # (entry path, probe path)
         for f in files:
             probes.append((f.path, f.abspath(self.path)))
@@ -3508,14 +3479,11 @@ class LogTable:
             }
         dead = sorted(dead_set)
         if dead and not dry_run:
-            self._commit_tx(
-                Commit(
-                    version=self._next_version(),
-                    timestamp=time.time(),
-                    operation="FSCK",
-                    remove=dead,
-                    metrics={"numFilesRemoved": len(dead)},
-                )
+            self._commit_op(
+                snap,
+                "FSCK",
+                remove=dead,
+                metrics={"numFilesRemoved": len(dead)},
             )
         return {"numFilesRemoved": len(dead), "removed": sorted(dead)}
 
@@ -3562,13 +3530,13 @@ class LogTable:
         delta_utils.py:79-105). Shallow references the source's files;
         deep copies them. ``version`` clones a historical snapshot
         (CLONE ... VERSION AS OF)."""
-        files, schema_json, partition_by, props, v = self._replay(version)
+        snap = self._replay(version)
+        files, schema_json, partition_by, props, v = snap
         t = LogTable(self.spark, target_path)
         if t.exists():
             raise FileExistsError(target_path)
         t.fs.makedirs(t.path)
         entries = []
-        schema = T.StructType.fromJson(json.loads(schema_json))
         purge = [f for f in files if not shallow and f.dv]
         for f in files:
             if shallow:
@@ -3613,13 +3581,13 @@ class LogTable:
             # so the source's logical→physical translation is applied
             # here — rewritten files must match the byte-copied ones.
             mapping = self._column_mapping(props)
-            purged = self._read_entries(purge, schema)
+            purged = self._read_entries(purge, snap.schema, props)
             if mapping:
                 purged = purged.select(
                     *[F.col(c).alias(mapping.get(c, c)) for c in purged.columns]
                 )
             entries += t._write_files(
-                purged, [mapping.get(c, c) for c in (partition_by or [])]
+                purged, [mapping.get(c, c) for c in (partition_by or [])], {}
             )
         t._commit(
             Commit(
@@ -3631,7 +3599,8 @@ class LogTable:
                 partition_by=partition_by,
                 properties=props,
                 parameters={"source": self.path, "sourceVersion": v, "shallow": shallow},
-            )
+            ),
+            {},
         )
         return t
 
@@ -3703,7 +3672,9 @@ class MergeBuilder:
         ]
         return pairs
 
-    def _prune_candidates(self, files: list[FileEntry]) -> list[FileEntry]:
+    def _prune_candidates(
+        self, files: list[FileEntry], props: dict[str, str]
+    ) -> list[FileEntry]:
         """Data skipping for MERGE (Delta's stats-based file pruning):
         a file whose [min,max] range for an equi-key column is disjoint
         from the source's global [min,max] for the paired column cannot
@@ -3711,7 +3682,7 @@ class MergeBuilder:
         aggregate job over the source computes the bounds; no target
         data is read. Conservative everywhere: files without stats, or
         non-comparable types, stay candidates."""
-        mapping = self.table._column_mapping()
+        mapping = self.table._column_mapping(props)
         pairs = [
             (mapping.get(tc, tc), sc)
             for tc, sc in self._equi_pairs(self.condition)
@@ -3822,7 +3793,10 @@ class MergeBuilder:
         a cheap source. Callers with an expensive or non-deterministic
         source should persist it themselves before calling merge."""
         t = self.table
-        idents = t._identity_columns()
+        snap = t._replay()
+        files, partition_by, tprops = snap.files, snap.partition_by, snap.properties
+        schema = snap.schema
+        idents = t._identity_columns(tprops)
         if self.not_matched and idents:
             # merge-time allocation (D1 × D19, the upsert-into-
             # dimension-with-surrogate-key composition): NOT-MATCHED
@@ -3858,8 +3832,6 @@ class MergeBuilder:
                     "ALWAYS — MERGE UPDATE cannot assign them (UPDATE SET * "
                     "with the column in the source counts as assignment)"
                 )
-        files, schema_json0, partition_by, tprops, _ = t._replay()
-        schema = T.StructType.fromJson(json.loads(schema_json0))
         rt_on = tprops.get(RT_PROP) == "true"
         # schema evolution is folded into the MERGE commit itself (one
         # atomic commit), never a separate ADD COLUMNS commit upfront —
@@ -3869,7 +3841,7 @@ class MergeBuilder:
             tgt_names = {f.name for f in schema.fields}
             new = [f for f in self.source.schema.fields if f.name not in tgt_names]
             if new:
-                t._guard_new_columns([f.name for f in new])
+                t._guard_new_columns([f.name for f in new], tprops)
                 schema = T.StructType(list(schema.fields) + list(new))
                 evolved_json = schema.json()
         tcols = [f.name for f in schema.fields]
@@ -3888,7 +3860,7 @@ class MergeBuilder:
         touched: list[FileEntry] = []
         skip_probe = False
         candidates = (
-            self._prune_candidates(files)
+            self._prune_candidates(files, tprops)
             if (files and self.matched and not self.not_matched_by_source)
             else list(files)
         )
@@ -3908,7 +3880,7 @@ class MergeBuilder:
         elif candidates and self.matched:
             skip_probe = False
             tgt_probe = (
-                t._read_entries(candidates, schema, with_file_path=True)
+                t._read_entries(candidates, schema, tprops, with_file_path=True)
                 .withColumn("__rid", F.monotonically_increasing_id())
                 .alias("target")
             )
@@ -3970,7 +3942,7 @@ class MergeBuilder:
 
         rows: DataFrame | None = None
         if touched:
-            tgt = t._read_entries(touched, schema, with_row_tracking=rt_on)
+            tgt = t._read_entries(touched, schema, tprops, with_row_tracking=rt_on)
             tgt = tgt.alias("target")
             nmbs = first_true([c for *_, c in self.not_matched_by_source])
             if self.matched:
@@ -4052,11 +4024,10 @@ class MergeBuilder:
             # file, an insert-only merge anti-joins the whole table;
             # otherwise the probe proved that no source row matches.
             against = touched or ([] if self.matched else files)
-            unmatched_src = (
-                src.join(t._read_entries(against, schema).alias("target"), cond, "left_anti")
-                if against
-                else src
-            )
+            unmatched_src = src
+            if against:
+                tgt_rows = t._read_entries(against, schema, tprops).alias("target")
+                unmatched_src = src.join(tgt_rows, cond, "left_anti")
             inserts = insert_rows(unmatched_src)
             if idents:
                 # fresh contiguous identity values stamped from the
@@ -4076,6 +4047,7 @@ class MergeBuilder:
         params = {"predicate": self.condition, **self.extra_params}
         if rows is None and inserts is None:
             t._commit_dml(
+                snap,
                 "MERGE",
                 [],
                 [],
@@ -4102,6 +4074,7 @@ class MergeBuilder:
             partition_by,
             tprops,
             lambda entries, n: t._commit_dml(
+                snap,
                 "MERGE",
                 entries,
                 [f.path for f in touched],

@@ -841,18 +841,19 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
 
     if m := _SHOW_PARTITIONS.match(query):
         t = cat.table(m.group(1))
-        parts = t.partition_columns()
+        snap = t._replay()
+        parts = snap.partition_by
         if not parts:
             raise ValueError(f"{m.group(1)} is not a partitioned table")
         from .logtable import _partition_values
 
-        mapping = t._column_mapping()
+        mapping = t._column_mapping(snap.properties)
         phys = [mapping.get(c, c) for c in parts]
         # metadata-only: values come from the active file paths, no scan
         vals = sorted(
             {
                 tuple(_partition_values(f.path).get(p) for p in phys)
-                for f in t._replay()[0]
+                for f in snap.files
             },
             key=lambda v: tuple((x is None, x or "") for x in v),  # NULLs last
         )

@@ -287,6 +287,43 @@ def test_cdf_insert_update_delete(spark, table):
     assert versions == {2, 3}
 
 
+@pytest.mark.parametrize(
+    "partition_by, kwargs, new_ids, deleted",
+    [
+        (None, {}, [4], {1, 2, 3}),
+        (None, {"replace_where": "day = 'd1'"}, [4], {1}),
+        (None, {"replace_range": "id"}, [1, 2], {1, 2}),
+        (["day"], {"dynamic": True}, [4], {1, 2}),
+    ],
+    ids=["full", "replace_where", "replace_range", "dynamic"],
+)
+def test_cdf_overwrite_records_removed_and_written_rows(
+    spark, tmp_path, partition_by, kwargs, new_ids, deleted
+):
+    """With the change feed on, an overwrite's feed holds a delete row
+    per removed row and an insert row per written row. replaceWhere
+    removes only the rows whose predicate is TRUE: the NULL-day row and
+    the d2 row share its file but are kept, and are not in the feed."""
+    t = LogTable.create(
+        spark, str(tmp_path / "co"), SCHEMA, partition_by=partition_by,
+        properties={"enableChangeDataFeed": "true"},
+    )
+    day2 = "d1" if partition_by else None
+    t.append(
+        rows_df(
+            spark, [(1, "A", 1.0, "d1"), (2, "B", 2.0, day2), (3, "C", 3.0, "d2")]
+        ).coalesce(1)
+    )
+    t.overwrite(rows_df(spark, [(i, "N", 9.0, "d1") for i in new_ids]), **kwargs)
+    v = t.version()
+    got = {
+        (r.id, r._change_type, r._commit_version)
+        for r in t.read_changes(starting_version=v).collect()
+    }
+    want = {(i, "delete", v) for i in deleted} | {(i, "insert", v) for i in new_ids}
+    assert got == want
+
+
 def test_cdf_merge(spark, table):
     table.upsert(
         rows_df(spark, [(2, "REFUNDED", 25.0, "d1"), (9, "NEW", 99.0, "d3")]), ["id"]
@@ -552,6 +589,45 @@ def test_dml_job_count_bounds(spark, tmp_path, job_ids, cdf, op, bound):
     assert len(job_ids(lambda: op(t, spark))) <= bound
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda t, s: t.append(rows_df(s, [(90, "NEW", 9.0, "d1")])),
+        lambda t, s: t.update("id < 4", {"status": "'U'"}),
+        lambda t, s: t.delete("id < 4"),
+        lambda t, s: t.upsert(
+            rows_df(s, [(1, "NEW", 1.5, "d1"), (50, "INS", 5.0, "d0")]), ["id"]
+        ),
+        lambda t, s: t.overwrite(
+            rows_df(s, [(70, "RW", 7.0, "d1")]), replace_where="day = 'd1'"
+        ),
+    ],
+    ids=["append", "update", "delete", "upsert", "replace_where"],
+)
+def test_write_reads_one_snapshot(spark, tmp_path, monkeypatch, op):
+    """A write reads the table state once and commits against it: at
+    most one snapshot, and at most three log listings in all (the
+    snapshot's and the commit's own), for an uncontended commit that
+    is not at a checkpoint version."""
+    from databricks_delta_lake_migration_spark.tables.log import CommitLog
+
+    t = _job_count_table(spark, str(tmp_path / "s"), False)
+    calls = {"snapshot": 0, "listing": 0}
+    for name in calls:
+        inner = getattr(CommitLog, name)
+
+        def counted(self, *args, _name=name, _inner=inner, **kwargs):
+            calls[_name] += 1
+            return _inner(self, *args, **kwargs)
+
+        monkeypatch.setattr(CommitLog, name, counted)
+    v = t.version()
+    op(t, spark)
+    monkeypatch.undo()
+    assert t.version() == v + 1
+    assert calls["snapshot"] <= 1 and calls["listing"] <= 3, calls
+
+
 def test_schema_evolution_merge_schema(spark, table):
     evolved = table.read().withColumn("extra", F.lit("x"))
     table.append(evolved, merge_schema=True)
@@ -689,6 +765,25 @@ def test_null_in_between_file_skipping(spark, tmp_path):
         got = {tuple(r) for r in t.read(where=where).collect()}
         exp = {tuple(r) for r in t.read().filter(F.expr(where)).collect()}
         assert got == exp, where
+
+
+def test_delete_skips_all_null_file(spark, tmp_path):
+    """On the two-file table above, stats skipping keeps the all-NULL
+    file out of a comparison DELETE's rewrite, and an IS NULL DELETE
+    removes that file alone."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
+    )
+    t = LogTable.create(spark, str(tmp_path / "nd"), schema)
+    t.append(spark.createDataFrame([(i, None) for i in range(5)], schema).coalesce(1))
+    (null_file,) = [f.path for f in t._replay().files]
+    t.append(spark.createDataFrame([(i, i) for i in range(1, 11)], schema).coalesce(1))
+    t.delete("v = 3")
+    removed = t.commits()[-1].remove
+    assert len(removed) == 1 and null_file not in removed
+    t.delete("v IS NULL")
+    assert t.commits()[-1].remove == [null_file]
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 4, 5, 6, 7, 8, 9, 10]
 
 
 def test_partition_path_null_and_in_skipping(spark, tmp_path):
@@ -1059,8 +1154,8 @@ def test_optimistic_concurrency_conflict(spark, table):
     # a handle that has read the log, then another writer claims the
     # next version out from under it
     t2 = LogTable(spark, table.path)
-    t2.commits()
-    nxt = table._next_version()
+    props = t2.properties()
+    nxt = table.version() + 1
     path = os.path.join(table.log.dir, f"{nxt:020d}.json")
     with open(path, "w") as fh:
         _json.dump(
@@ -1074,7 +1169,8 @@ def test_optimistic_concurrency_conflict(spark, table):
             __import__(
                 "databricks_delta_lake_migration_spark.tables.logtable",
                 fromlist=["Commit"],
-            ).Commit(version=nxt, timestamp=1.0, operation="WRITE")
+            ).Commit(version=nxt, timestamp=1.0, operation="WRITE"),
+            props,
         )
     # the losing writer's table is still consistent and readable
     assert LogTable(spark, table.path).read().count() == 3
@@ -1976,11 +2072,7 @@ def test_rename_column_stats_skipping_still_prunes(spark, tmp_path):
     t.rename_column("id", "key")
     files, *_ = t._replay()
     assert len(files) == 3
-    conj = t._physical_conjuncts(
-        __import__(
-            "databricks_delta_lake_migration_spark.tables.logtable", fromlist=["x"]
-        )._parse_conjuncts("key >= 200")
-    )
+    conj = t._physical_conjuncts("key >= 200", t.properties())
     from databricks_delta_lake_migration_spark.tables.logtable import _stats_may_match
 
     kept = [f for f in files if _stats_may_match(f, conj)]

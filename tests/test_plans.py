@@ -207,7 +207,8 @@ def test_identity_assignment_broadcasts_offsets_no_sort_merge(spark, tmp_path):
         identity_columns={"uid": {}},
     )
     df, _ = t._apply_identity(
-        spark.range(1000).select(F.col("id").alias("v")).repartition(4)
+        spark.range(1000).select(F.col("id").alias("v")).repartition(4),
+        t.properties(),
     )
     plan = explain(df)
     assert "BroadcastHashJoin" in plan
