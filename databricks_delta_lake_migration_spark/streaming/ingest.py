@@ -24,6 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..tables import LogTable
 from ..tables.fsio import LOCAL_FS
+from ..tables.logtable import _Transaction
 
 
 class SchemaDriftError(ValueError):
@@ -60,35 +61,30 @@ def _append_batch(
     extra_params: dict | None = None,
 ) -> None:
     """The one micro-batch append path shared by every foreachBatch
-    sink in this module: read one snapshot, align the batch to its
-    schema, apply the write-tuning seam (optimizeWrite lands one-ish
-    file per partition; a CLUSTER BY key pre-sorts the micro-batch),
-    write, and commit against that snapshot with the stream/batch
-    identity in the parameters — the batch-id idempotence every sink's
-    replay guard reads back. The commit rebases like any blind append;
-    a racing commit of the same batch is refused. One implementation
-    so a fix (or the plan probe) lands everywhere at once instead of
-    drifting across hand-rolled copies."""
-    snap = tbl._replay()
-    aligned = df.select(
-        *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
-    )
+    sink in this module. A batch is ingested like an append (the
+    table's ``_ingest`` in one ``_Transaction``): it is aligned to the
+    schema with identity, generated-column and default values, checked
+    against CHECK and NOT NULL constraints (a violation fails the batch
+    and deletes its files), written through the write-tuning seam and,
+    on a change-feed table, recorded as insert rows. The commit carries
+    the stream/batch identity in its parameters — the batch-id
+    idempotence every sink's replay guard reads back — and rebases like
+    any blind append; a racing commit of the same batch is refused."""
     if _SINK_PLAN_PROBE is not None:
-        _SINK_PLAN_PROBE.append(
-            aligned._jdf.queryExecution().executedPlan().toString()
+        _SINK_PLAN_PROBE.append(df._jdf.queryExecution().executedPlan().toString())
+    with _Transaction(tbl, tbl._replay()) as tx:
+        entries, fields = tbl._ingest(tx, df)
+        tx.commit(
+            operation,
+            add=entries,
+            parameters={
+                "streamId": stream_id,
+                "batchId": int(batch_id),
+                **(extra_params or {}),
+            },
+            metrics={"numOutputRows": sum(e.num_records for e in entries)},
+            **fields,
         )
-    aligned = tbl._maybe_optimize_write(aligned, snap.partition_by, snap.properties)
-    entries = tbl._write_files(aligned, snap.partition_by, snap.properties)
-    params = {"streamId": stream_id, "batchId": int(batch_id)}
-    if extra_params:
-        params.update(extra_params)
-    tbl._commit_op(
-        snap,
-        operation,
-        add=entries,
-        parameters=params,
-        metrics={"numOutputRows": sum(e.num_records for e in entries)},
-    )
 
 
 def infer_stream_schema(

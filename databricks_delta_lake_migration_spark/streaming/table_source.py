@@ -46,9 +46,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..tables.log import CommitLog
+from ..tables.log import CommitLog, change_dir
 
-CHANGES_DIR = "_changes"
 MAPPING_PROP = "columnmapping.map"
 CDF_PROP = "enableChangeDataFeed"
 CDF_FIELDS = [
@@ -61,7 +60,7 @@ CDF_FIELDS = [
 ]
 
 # rewrite-only maintenance: adds carry no new data (Delta dataChange=false)
-_DATA_UNCHANGED_OPS = {"OPTIMIZE", "ZORDER"}
+_DATA_UNCHANGED_OPS = {"OPTIMIZE"}
 
 class _FileSlice(InputPartition):
     def __init__(self, file_path, part_values, inv_mapping, schema_json):
@@ -203,7 +202,7 @@ class LogTableStreamReader(DataSourceStreamReader):
                     "past it; restart with startingVersion >= "
                     f"{min(commits) if commits else 0}"
                 )
-            d = os.path.join(self.path, CHANGES_DIR, f"v={v:020d}")
+            d = os.path.join(self.path, change_dir(v))
             if not log.fs.isdir(d):
                 c = commits[v]
                 # compaction rewrites (dataChange=false) never emit

@@ -25,6 +25,14 @@ from pyspark.sql import types as T
 from .fsio import LOCAL_FS, FileSystem
 
 LOG_DIR = "_log"
+# change-data-feed files: one directory of parquet files per version
+CHANGES_DIR = "_changes"
+
+
+def change_dir(version: int) -> str:
+    """The table-relative directory of ``version``'s change-feed files."""
+    return os.path.join(CHANGES_DIR, f"v={version:020d}")
+
 
 # Commits whose `properties` payload REPLACES the table's property map
 # wholesale (they carry the full post-op map, and merging would

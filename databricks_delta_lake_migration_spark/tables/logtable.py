@@ -41,17 +41,18 @@ import shutil
 import time
 import urllib.parse
 import uuid
+from contextlib import suppress
 from functools import reduce
-from typing import Any, Callable
+from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fsio import LOCAL_FS, FileSystem
-from .log import LOG_DIR, Commit, CommitLog, FileEntry, Snapshot, fold_properties
+from .log import CHANGES_DIR, LOG_DIR, Commit, CommitLog, FileEntry, Snapshot
+from .log import change_dir, fold_properties
 
-CHANGES_DIR = "_changes"
 STAGING_DIR = "_staging"
 DV_DIR = "_deletion_vectors"
 BLOOM_DIR = "_bloom"
@@ -551,6 +552,102 @@ def _stats_may_match(f: FileEntry, conjuncts: list[tuple[str, str, Any]]) -> boo
     return True
 
 
+class _Transaction:
+    """One transaction of ``table`` against the snapshot ``snap`` it
+    read — the Delta paper's lifecycle (VLDB 2020, §3): :meth:`write`
+    stages data objects under the table root and records them,
+    :meth:`commit` makes them live with one log record and then writes
+    the op's change feed. Every data op runs in a ``with`` block, and
+    leaving it without a landed commit (a CHECK, replaceWhere or MERGE
+    multi-match error, nothing to commit, a refused commit) deletes
+    everything recorded. A metadata-only op just calls :meth:`commit`."""
+
+    def __init__(self, table: "LogTable", snap: Snapshot):
+        self.table, self.snap = table, snap
+        self.cdf = snap.properties.get(CDF_PROP) == "true"
+        self.keep = False  # set once a commit landed or may have
+        self.written: list[str] = []  # table-relative files and DV dirs
+
+    def __enter__(self) -> "_Transaction":
+        return self
+
+    def __exit__(self, *exc: Any) -> None:
+        if self.keep:
+            return
+        # a file that cannot be deleted is left to VACUUM
+        for rel in self.written:
+            with suppress(OSError):
+                path = os.path.join(self.table.path, rel)
+                if rel.startswith(DV_DIR + os.sep):
+                    self.table.fs.delete_tree(path)
+                else:
+                    self.table.fs.delete(path)
+
+    def write(self, df: DataFrame, partition_by: list[str]) -> list[FileEntry]:
+        """Write ``df`` as data files (see :meth:`LogTable._write_files`)."""
+        entries = self.table._write_files(df, partition_by, self.snap.properties)
+        self.written += [p for e in entries for p in (e.path, e.bloom) if p]
+        return entries
+
+    def write_dv(self, hits: DataFrame) -> str:
+        """Write the tombstones of ``hits`` (a scan with its DV key) as
+        one deletion-vector directory; returns its relative path."""
+        rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
+        self.written.append(rel)
+        hits.select(
+            F.col("__dv_key").alias("path"),
+            F.col("__dv_ridx").alias("row_index"),
+        ).write.mode("overwrite").parquet(os.path.join(self.table.path, rel))
+        return rel
+
+    def commit(
+        self, operation: str, changes: DataFrame | None = None, **fields: Any
+    ) -> int:
+        """Land ``operation`` (``fields`` as in :class:`Commit`) through
+        :meth:`LogTable._commit_tx`; then, when the snapshot has the
+        change feed on, write ``changes`` (the op's rows with their
+        ``_change_type``) as the landed version's. Returns that version.
+        Only a refused commit (:class:`ConcurrentWriteError`) provably
+        did not land: any other failure from here on keeps the files."""
+        t = self.table
+        commit = Commit(self.snap.version + 1, time.time(), operation, **fields)
+        self.keep = True
+        try:
+            version = t._commit_tx(commit, self.snap)
+        except ConcurrentWriteError:
+            self.keep = False
+            raise
+        if changes is not None and self.cdf:
+            t._write_changes(version, commit.timestamp, changes, self.snap.properties)
+        return version
+
+    def commit_dml(
+        self,
+        operation: str,
+        params: dict,
+        touched: Sequence[FileEntry] = (),
+        entries: Sequence[FileEntry] = (),
+        m: dict[str, int] | None = None,
+        changes: DataFrame | None = None,
+        **fields: Any,
+    ) -> int:
+        """Commit a DML whose rewrite (metrics ``m``) replaced
+        ``touched`` with ``entries``; without ``m`` no row matched."""
+        return self.commit(
+            operation,
+            changes,
+            add=list(entries),
+            remove=[f.path for f in touched],
+            parameters=params,
+            metrics={
+                "numAffectedRows": m[UPDATE] + m[DELETE] + m[INSERT] if m else 0,
+                "numAddedFiles": len(entries),
+                "numRemovedFiles": len(touched),
+            },
+            **fields,
+        )
+
+
 class LogTable:
     """One log-structured table rooted at ``path``."""
 
@@ -768,13 +865,6 @@ class LogTable:
             f"commit to {self.path} lost {attempts} consecutive races; giving up"
         )
 
-    def _commit_op(self, snap: Snapshot, operation: str, **fields: Any) -> int:
-        """Commit a new ``operation`` (``fields`` as in :class:`Commit`)
-        against ``snap``, the snapshot the operation read."""
-        return self._commit_tx(
-            Commit(snap.version + 1, time.time(), operation, **fields), snap
-        )
-
     def _check_rebase_conflicts(self, ours: Commit, theirs: list[Commit]) -> None:
         """Raise a typed conflict error if ``ours`` cannot be replayed
         on top of ``theirs`` (see :meth:`_commit_tx`)."""
@@ -931,8 +1021,7 @@ class LogTable:
             raise ValueError(f"columns already exist: {dup}")
         self._guard_new_columns([f.name for f in new_fields], snap.properties)
         evolved = T.StructType(list(current.fields) + list(new_fields))
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ADD COLUMNS",
             schema_json=evolved.json(),
             parameters={"columns": [f.name for f in new_fields]},
@@ -945,8 +1034,7 @@ class LogTable:
         remaining = {
             k: v for k, v in snap.properties.items() if k not in set(keys)
         }
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "UNSET TBLPROPERTIES",
             properties=remaining,
             parameters={"unset": list(keys)},
@@ -1004,8 +1092,7 @@ class LogTable:
         enabled = _enabled_features(remaining)
         remaining[MIN_READER_PROP] = "3" if (enabled & READER_FEATURES) else "1"
         remaining[MIN_WRITER_PROP] = "7" if enabled else "2"
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "DROP FEATURE",
             properties=remaining,
             parameters={"feature": name},
@@ -1026,8 +1113,7 @@ class LogTable:
             # re-add every unstamped active entry; _commit_tx assigns
             # brid ranges + rcv with the version the commit lands at
             backfill = [f for f in snap.files if f.brid is None]
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "SET TBLPROPERTIES",
             add=backfill,
             properties=merged,
@@ -1213,7 +1299,7 @@ class LogTable:
         dirs = []
         for c in self.commits():
             if starting_version <= c.version <= end:
-                d = os.path.join(self.path, CHANGES_DIR, f"v={c.version:020d}")
+                d = os.path.join(self.path, change_dir(c.version))
                 if self.fs.isdir(d) and any(
                     n.endswith(".parquet") for n in self.fs.listdir(d)
                 ):
@@ -1433,8 +1519,7 @@ class LogTable:
             T.StructField(new if f.name == old else f.name, f.dataType, f.nullable, f.metadata)
             for f in schema.fields
         ]
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "RENAME COLUMN",
             schema_json=T.StructType(fields).json(),
             partition_by=[new if c == old else c for c in partition_by],
@@ -1471,8 +1556,7 @@ class LogTable:
         new_props.pop(f"identity.{name}", None)
         new_props.pop(f"notnull.{name}", None)
         new_props.pop(f"default.{name}", None)
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "DROP COLUMN",
             schema_json=T.StructType(
                 [f for f in schema.fields if f.name != name]
@@ -1572,8 +1656,7 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             schema_json=T.StructType(fields).json(),
             # widening leaves narrow-typed files behind forever —
@@ -1616,8 +1699,7 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             schema_json=T.StructType(fields).json(),
             properties={**snap.properties, f"notnull.{name}": "true"},
@@ -1640,8 +1722,7 @@ class LogTable:
             )
             for f in schema.fields
         ]
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             schema_json=T.StructType(fields).json(),
             properties=props,
@@ -1666,8 +1747,7 @@ class LogTable:
                 "a value contract; DEFAULT would conflict"
             )
         self._validate_default(self.spark, name, expr, field.dataType)
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             properties={**snap.properties, f"default.{name}": expr},
             parameters={"column": name, "default": expr},
@@ -1681,8 +1761,7 @@ class LogTable:
             raise ValueError(f"no such column: {name}")
         props = dict(snap.properties)
         props.pop(f"default.{name}", None)
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             properties=props,
             parameters={"column": name, "default": "dropped"},
@@ -1706,8 +1785,7 @@ class LogTable:
             fields.append(
                 T.StructField(f.name, f.dataType, f.nullable, meta or None)
             )
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "ALTER COLUMN",
             schema_json=T.StructType(fields).json(),
             parameters={"column": name, "comment": comment or ""},
@@ -1978,28 +2056,15 @@ class LogTable:
         obs = Observation()
         return df.observe(obs, *aggs), obs
 
-    def _observed(
-        self,
-        obs: Observation | None,
-        checks: dict[str, str],
-        entries: list[FileEntry],
-    ) -> dict[str, Any]:
+    @staticmethod
+    def _observed(obs: Observation | None, checks: dict[str, str]) -> dict[str, Any]:
         """The metrics of a finished observed write; a CHECK violation
-        discards the written files and raises."""
+        raises (and the transaction deletes the written files)."""
         m = obs.get if obs is not None else {}
         bad = {n: m[f"__check_{n}"] for n in checks if m[f"__check_{n}"] > 0}
         if bad:
-            self._discard(entries)
             raise ConstraintViolationError(f"CHECK constraint violations: {bad}")
         return m
-
-    def _discard(self, entries: list[FileEntry]) -> None:
-        """Roll back a write that will not commit: delete its data files
-        and bloom sidecars (no commit references them yet)."""
-        for e in entries:
-            self.fs.delete(os.path.join(self.path, e.path))
-            if e.bloom:
-                self.fs.delete(os.path.join(self.path, e.bloom))
 
     def _write_files(
         self, df: DataFrame, partition_by: list[str], props: dict[str, str]
@@ -2031,7 +2096,9 @@ class LogTable:
         # staged files are immutable and unreferenced until the commit
         # lands, so per-file promotion does NOT need atomicity — on an
         # object store fs.rename degrades to copy+delete and the format
-        # stays correct (crash → orphans, collected by VACUUM).
+        # stays correct. A write that does not commit deletes its files
+        # (see _Transaction); only a crash leaves orphans, and VACUUM
+        # collects them.
         for dirpath, name in self.fs.walk_files(stage):
             if not name.endswith(".parquet"):
                 continue
@@ -2059,19 +2126,23 @@ class LogTable:
         return entries
 
     def _write_changes(
-        self, version: int, change_df: DataFrame, props: dict[str, str]
+        self, version: int, timestamp: float, changes: DataFrame, props: dict[str, str]
     ) -> None:
-        """Write ``version``'s change-feed rows; callers call it only when
-        ``props`` (the snapshot the write replayed) has CDF on."""
+        """Write the change-feed rows of the commit that landed at
+        ``version`` with ``timestamp`` (``changes`` carry their
+        ``_change_type``); only :meth:`_Transaction.commit` calls it,
+        when ``props`` (the snapshot the write read) have CDF on."""
+        changes = changes.withColumn("_commit_version", F.lit(version).cast("long"))
+        changes = changes.withColumn("_commit_timestamp", F.timestamp_seconds(F.lit(timestamp)))
         mapping = self._column_mapping(props)
         if mapping:
             # CDF files use physical names too, so pre-rename change
             # files and post-rename ones read back uniformly
-            change_df = change_df.select(
-                *[F.col(c).alias(mapping.get(c, c)) for c in change_df.columns]
+            changes = changes.select(
+                *[F.col(c).alias(mapping.get(c, c)) for c in changes.columns]
             )
-        d = os.path.join(self.path, CHANGES_DIR, f"v={version:020d}")
-        change_df.write.mode("overwrite").parquet(d)
+        d = os.path.join(self.path, change_dir(version))
+        changes.write.mode("overwrite").parquet(d)
 
     def _align(
         self,
@@ -2119,13 +2190,14 @@ class LogTable:
         return T.StructType(list(current.fields) + extra)
 
     def _ingest(
-        self, df: DataFrame, snap: Snapshot, merge_schema: bool = False
-    ) -> tuple[list[FileEntry], dict[str, str], T.StructType]:
-        """The write half of append and COPY INTO: identity values,
-        generated columns, defaults, CHECKs counted by the write job
-        itself, optimizeWrite. Returns the written entries, the identity
-        watermark properties their commit must carry, and the schema
-        written."""
+        self, tx: _Transaction, df: DataFrame, merge_schema: bool = False
+    ) -> tuple[list[FileEntry], dict[str, Any]]:
+        """The write half of append, COPY INTO and the stream sink:
+        identity values, generated columns, defaults, CHECKs counted by
+        the write job itself, optimizeWrite. Returns the written entries
+        and the commit fields the write decides: the identity watermark
+        properties, the evolved schema and the insert change rows."""
+        snap = tx.snap
         props, partition_by = snap.properties, snap.partition_by
         df, ident_props = self._apply_identity(df, props)
         df = self._apply_generated(df, props)
@@ -2134,41 +2206,36 @@ class LogTable:
         checks = self._all_checks(props)
         data, obs = self._observe(data, [], checks)
         data = self._maybe_optimize_write(data, partition_by, props)
-        entries = self._write_files(data, partition_by, props)
-        self._observed(obs, checks, entries)
-        return entries, ident_props, schema
-
-    def _ingested(
-        self,
-        version: int,
-        entries: list[FileEntry],
-        schema: T.StructType,
-        props: dict[str, str],
-    ) -> None:
-        """After an ingest commit: its change feed, then autoCompact."""
-        if props.get(CDF_PROP) == "true":
-            rows = self._read_entries(entries, schema, props)
-            self._write_changes(version, self._cdf_frame(rows, CT_INSERT, version), props)
-        self._maybe_autocompact(entries, props)
+        entries = tx.write(data, partition_by)
+        self._observed(obs, checks)
+        changes = None
+        if tx.cdf:
+            changes = self._read_entries(entries, schema, props).withColumn(
+                "_change_type", F.lit(CT_INSERT)
+            )
+        return entries, {
+            "changes": changes,
+            "properties": ident_props or None,
+            "schema_json": schema.json() if merge_schema else None,
+        }
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> None:
         """Delta append (K1), optional mergeSchema evolution
         (delta_utils.py:107-147)."""
         snap = self._replay()
-        entries, ident_props, schema = self._ingest(df, snap, merge_schema)
-        version = self._commit_op(
-            snap,
-            "WRITE",
-            add=entries,
-            schema_json=schema.json() if merge_schema else None,
-            properties=ident_props or None,
-            parameters={"mode": "Append", "mergeSchema": merge_schema},
-            metrics={
-                "numOutputRows": sum(e.num_records for e in entries),
-                "numAddedFiles": len(entries),
-            },
-        )
-        self._ingested(version, entries, schema, snap.properties)
+        with _Transaction(self, snap) as tx:
+            entries, fields = self._ingest(tx, df, merge_schema)
+            tx.commit(
+                "WRITE",
+                add=entries,
+                parameters={"mode": "Append", "mergeSchema": merge_schema},
+                metrics={
+                    "numOutputRows": sum(e.num_records for e in entries),
+                    "numAddedFiles": len(entries),
+                },
+                **fields,
+            )
+        self._maybe_autocompact(entries, snap.properties)
 
     def _maybe_optimize_write(
         self, data: DataFrame, partition_by: list[str], props: dict[str, str]
@@ -2277,8 +2344,9 @@ class LogTable:
         snap = self._replay()
         loaded: set[tuple] = set()
         if not force:
-            for c in self.commits():
-                if c.operation == "COPY INTO":
+            # the snapshot parsed every listed commit into the log cache
+            for c in self.log.cache.values():
+                if c.operation == "COPY INTO" and c.version <= snap.version:
                     loaded.update(tuple(x) for x in c.parameters.get("sourceFiles", []))
         exts = self._COPY_EXTS[file_format]
         new: list[tuple] = []
@@ -2302,21 +2370,21 @@ class LogTable:
         # a subset of a partitioned directory
         reader = reader.option("basePath", source_path).format(file_format)
         df = reader.load([os.path.join(source_path, rel) for rel, _, _ in new])
-        entries, ident_props, schema = self._ingest(df, snap)
-        n_rows = sum(e.num_records for e in entries)
-        version = self._commit_op(
-            snap,
-            "COPY INTO",
-            add=entries,
-            properties=ident_props or None,
-            parameters={
-                "source": source_path,
-                "fileFormat": file_format,
-                "sourceFiles": [list(x) for x in sorted(new)],
-            },
-            metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
-        )
-        self._ingested(version, entries, schema, snap.properties)
+        with _Transaction(self, snap) as tx:
+            entries, fields = self._ingest(tx, df)
+            n_rows = sum(e.num_records for e in entries)
+            tx.commit(
+                "COPY INTO",
+                add=entries,
+                parameters={
+                    "source": source_path,
+                    "fileFormat": file_format,
+                    "sourceFiles": [list(x) for x in sorted(new)],
+                },
+                metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
+                **fields,
+            )
+        self._maybe_autocompact(entries, snap.properties)
         return {"numLoadedFiles": len(new), "numCopiedRows": n_rows}
 
     def overwrite(
@@ -2344,14 +2412,17 @@ class LogTable:
         Every variant is one pass over ``df``: CHECK constraints, the
         ``replace_where`` rows that violate the predicate (a NULL
         predicate is not a violation) and the range are all counted by
-        the write job itself. A violation deletes the just-written
-        files and raises before anything is committed. The rows of the
-        replaced files are tagged DELETE where ``replace_where`` is TRUE
-        and KEEP otherwise (FALSE or NULL), and the DML rewrite
-        (:meth:`_rewrite`) carries the KEEP rows into new files (a
-        second job, only when such files exist). With the change feed
-        on, the removed rows (``replace_where``: those where it is TRUE)
-        are its delete rows and the written rows its insert rows."""
+        the write job itself. A violation raises before anything is
+        committed, and the transaction (:class:`_Transaction`) deletes
+        the just-written files, as it does for an empty
+        ``replace_range`` batch. The rows of the replaced files are
+        tagged DELETE where ``replace_where`` is TRUE and KEEP otherwise
+        (FALSE or NULL), and the DML rewrite (:meth:`_rewrite`) carries
+        the KEEP rows into new files in the same transaction (a second
+        job, only when such files exist). One commit adds the written
+        and carried files. With the change feed on, the removed rows
+        (``replace_where``: those where it is TRUE) are its delete rows
+        and the written rows its insert rows."""
         if dynamic and (replace_where is not None or replace_range is not None):
             raise ValueError("dynamic excludes replace_where and replace_range")
         if replace_where is not None and replace_range is not None:
@@ -2373,28 +2444,63 @@ class LogTable:
             metrics += [F.min(k).alias("__lo"), F.max(k).alias("__hi")]
         data, obs = self._observe(data, metrics, checks)
         data = self._maybe_optimize_write(data, partition_by, props)
-        entries = self._write_files(data, partition_by, props)
-        m = self._observed(obs, checks, entries)
-        if m.get("__bad"):
-            # new data must satisfy the predicate (delta semantics)
-            self._discard(entries)
-            raise ValueError(
-                f"replaceWhere: {m['__bad']} input rows violate '{replace_where}'"
-            )
-        if replace_range is not None:
-            if m["__lo"] is None:  # no keyed row: nothing to replace
-                self._discard(entries)
-                return
-            replace_where = (
-                f"{replace_range} >= '{m['__lo']}' AND {replace_range} <= '{m['__hi']}'"
-            )
-        pred = None if replace_where is None else F.expr(replace_where)
+        with _Transaction(self, snap) as tx:
+            entries = tx.write(data, partition_by)
+            m = self._observed(obs, checks)
+            if m.get("__bad"):
+                # new data must satisfy the predicate (delta semantics)
+                raise ValueError(
+                    f"replaceWhere: {m['__bad']} input rows violate '{replace_where}'"
+                )
+            if replace_range is not None:
+                if m["__lo"] is None:  # no keyed row: nothing to replace
+                    return
+                replace_where = (
+                    f"{replace_range} >= '{m['__lo']}' AND {replace_range} <= '{m['__hi']}'"
+                )
+            pred = None if replace_where is None else F.expr(replace_where)
+            survivors: list[FileEntry] = []
+            if dynamic:
+                phys_parts = [
+                    self._column_mapping(props).get(c, c) for c in partition_by
+                ]  # paths carry physical names
+                # the same decoder reads old and new paths, so NULL, boolean
+                # and escaped partition values compare equal by construction
+                def part_key(path: str) -> tuple:
+                    pv = _partition_values(path)
+                    return tuple(pv.get(c) for c in phys_parts)
 
-        def commit(survivors: list[FileEntry], _n_changed: int = 0) -> int:
+                new_parts = {part_key(e.path) for e in entries}
+                removed = [f for f in files if part_key(f.path) in new_parts]
+            elif pred is None:
+                removed = list(files)
+            else:
+                removed, _ = self._split_files_by_predicate(snap, pred, replace_where)
+                if removed:
+                    # the replaced files' rows the predicate does not select
+                    # (FALSE or NULL) are KEEP rows of one rewrite, projected
+                    # onto the written schema (overwrite_schema may change it)
+                    rows = self._tag_rows(removed, snap.schema, props, pred, DELETE)
+                    keep = (ROW_ID_COL, ROW_COMMIT_COL, ACTION_COL)
+                    survivors, _, _ = self._rewrite(
+                        tx, self._align(rows, schema, keep=keep).alias("target"), schema
+                    )
+            changes = None
+            if tx.cdf:
+                gone = self._read_entries(removed, snap.schema, props)
+                if pred is not None:
+                    gone = gone.filter(pred)
+                ct = "_change_type"
+                changes = self._align(gone, schema).withColumn(ct, F.lit(CT_DELETE))
+                changes = changes.unionByName(
+                    self._read_entries(entries, schema, props).withColumn(
+                        ct, F.lit(CT_INSERT)
+                    )
+                )
             added = entries + survivors
-            version = self._commit_op(
-                snap,
+            tx.commit(
                 "WRITE",
+                changes,
                 add=added,
                 remove=[f.path for f in removed],
                 schema_json=schema.json() if overwrite_schema else None,
@@ -2411,55 +2517,6 @@ class LogTable:
                     "numRemovedFiles": len(removed),
                 },
             )
-            if props.get(CDF_PROP) == "true":
-                gone = self._read_entries(removed, snap.schema, props)
-                if pred is not None:
-                    gone = gone.filter(pred)
-                ct = "_change_type"
-                changes = self._align(gone, schema).withColumn(ct, F.lit(CT_DELETE))
-                changes = changes.unionByName(
-                    self._read_entries(entries, schema, props).withColumn(
-                        ct, F.lit(CT_INSERT)
-                    )
-                )
-                self._write_changes(
-                    version, self._cdf_frame(changes, F.col(ct), version), props
-                )
-            return version
-
-        removed: list[FileEntry]
-        if dynamic:
-            phys_parts = [
-                self._column_mapping(props).get(c, c) for c in partition_by
-            ]  # paths carry physical names
-            # the same decoder reads old and new paths, so NULL, boolean
-            # and escaped partition values compare equal by construction
-            def part_key(path: str) -> tuple:
-                pv = _partition_values(path)
-                return tuple(pv.get(c) for c in phys_parts)
-
-            new_parts = {part_key(e.path) for e in entries}
-            removed = [f for f in files if part_key(f.path) in new_parts]
-        elif pred is None:
-            removed = list(files)
-        else:
-            removed, _ = self._split_files_by_predicate(snap, pred, replace_where)
-            if removed:
-                # the replaced files' rows the predicate does not select
-                # (FALSE or NULL) are KEEP rows of one rewrite, projected
-                # onto the written schema (overwrite_schema may change it)
-                rows = self._tag_rows(removed, snap.schema, props, pred, DELETE)
-                keep = (ROW_ID_COL, ROW_COMMIT_COL, ACTION_COL)
-                self._rewrite(
-                    self._align(rows, schema, keep=keep).alias("target"),
-                    schema,
-                    partition_by,
-                    props,
-                    commit,
-                    cdf=False,
-                )
-                return
-        commit([])
 
     def _read_entries(
         self,
@@ -2685,15 +2742,6 @@ class LogTable:
     # DML: UPDATE / DELETE / MERGE
     # ------------------------------------------------------------------
 
-    def _cdf_frame(
-        self, df: DataFrame, change_type: str | Column, version: int
-    ) -> DataFrame:
-        ct = F.lit(change_type) if isinstance(change_type, str) else change_type
-        ts = F.timestamp_seconds(F.lit(time.time()))
-        return df.withColumn("_change_type", ct).withColumn(
-            "_commit_version", F.lit(version).cast("long")
-        ).withColumn("_commit_timestamp", ts)
-
     def _tag_rows(
         self,
         touched: list[FileEntry],
@@ -2715,21 +2763,19 @@ class LogTable:
 
     def _rewrite(
         self,
+        tx: _Transaction,
         rows: DataFrame | None,
         schema: T.StructType,
-        partition_by: list[str],
-        props: dict[str, str],
-        commit: Callable[[list[FileEntry], int], int],
         *,
-        cdf: bool,
+        cdf: bool = False,
         sets: dict[str, Column] | None = None,
         inserts: DataFrame | None = None,
         checks: dict[str, str] | None = None,
-        verify: Callable[[dict[str, Any], list[FileEntry]], None] | None = None,
-    ) -> dict[str, Any]:
+    ) -> tuple[list[FileEntry], dict[str, Any], DataFrame | None]:
         """The one copy-on-write rewrite behind UPDATE, DELETE, the
         replaceWhere survivors and MERGE (the Delta paper's DML: find
-        the touched files, rewrite their rows, commit adds and removes).
+        the touched files, rewrite their rows, commit adds and removes),
+        written in the transaction ``tx``.
 
         ``rows`` are the rows of the touched files, aliased ``target``
         (MERGE: joined to its source), tagged in :data:`ACTION_COL` with
@@ -2740,13 +2786,15 @@ class LogTable:
         (MERGE) are new rows already projected onto ``schema``.
 
         One write job counts the rows per action and the CHECK
-        violations of the rows it keeps, drops the DELETE rows and
-        writes the rest; ``verify`` may still reject the written files
-        before ``commit(entries, n_changed)`` lands them. With ``cdf``,
-        the change feed is a projection of the same tagged rows: UPDATE
-        rows give their post-image and the pre-image struct carried
-        beside them, DELETE and INSERT rows give themselves. Returns the
-        observed metrics, keyed by action."""
+        violations of the rows it keeps (a violation raises), drops the
+        DELETE rows and writes the rest. With ``cdf``, the change feed
+        is a projection of the same tagged rows: UPDATE rows give their
+        post-image and the pre-image struct carried beside them, DELETE
+        and INSERT rows give themselves. Returns the written entries,
+        the observed metrics keyed by action and the change rows (None
+        without ``cdf`` or when no row changed); the caller commits them
+        through ``tx``."""
+        props = tx.snap.properties
         sets = sets or {}
         rt = props.get(RT_PROP) == "true"
         action = F.col(ACTION_COL)
@@ -2811,34 +2859,22 @@ class LogTable:
             ],
             *_check_aggs(checks, rows=action != DELETE),
         ).filter(action != DELETE)
-        entries = self._write_files(
-            written.drop(ACTION_COL, PRE_IMAGE_COL), partition_by, props
+        entries = tx.write(
+            written.drop(ACTION_COL, PRE_IMAGE_COL), tx.snap.partition_by
         )
-        if verify is not None:
-            verify(obs.get, entries)
-        m = self._observed(obs, checks, entries)
-        n_changed = m[UPDATE] + m[DELETE] + m[INSERT]
-        version = commit(entries, n_changed)
-        if cdf and n_changed:
-            names = [f.name for f in schema.fields]
-            images = tagged.filter(action != KEEP).select(
-                *names,
-                F.when(updated, F.lit(CT_UPDATE_POST))
-                .otherwise(action)
-                .alias("_change_type"),
-            )
-            pre_images = tagged.filter(updated).select(
-                *[F.col(f"{PRE_IMAGE_COL}.{c}").alias(c) for c in names],
-                F.lit(CT_UPDATE_PRE).alias("_change_type"),
-            )
-            self._write_changes(
-                version,
-                self._cdf_frame(
-                    images.unionByName(pre_images), F.col("_change_type"), version
-                ),
-                props,
-            )
-        return m
+        m = self._observed(obs, checks)
+        if not (cdf and m[UPDATE] + m[DELETE] + m[INSERT]):
+            return entries, m, None
+        names = [f.name for f in schema.fields]
+        images = tagged.filter(action != KEEP).select(
+            *names,
+            F.when(updated, F.lit(CT_UPDATE_POST)).otherwise(action).alias("_change_type"),
+        )
+        pre_images = tagged.filter(updated).select(
+            *[F.col(f"{PRE_IMAGE_COL}.{c}").alias(c) for c in names],
+            F.lit(CT_UPDATE_PRE).alias("_change_type"),
+        )
+        return entries, m, images.unionByName(pre_images)
 
     def update(self, condition: str, set_exprs: dict[str, str]) -> dict:
         """UPDATE with predicate (D3 — 04_acid_operations.py:128-139).
@@ -2862,22 +2898,19 @@ class LogTable:
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(snap, pred, condition)
         params = {"predicate": condition}
-        if not touched:
-            self._commit_dml(snap, "UPDATE", [], [], params, 0)
-            return {"numUpdatedRows": 0}
-        schema = snap.schema
-        m = self._rewrite(
-            self._tag_rows(touched, schema, props, pred, UPDATE),
-            schema,
-            snap.partition_by,
-            props,
-            lambda entries, n: self._commit_dml(
-                snap, "UPDATE", entries, [f.path for f in touched], params, n
-            ),
-            cdf=props.get(CDF_PROP) == "true",
-            sets={c: F.expr(e) for c, e in set_exprs.items()},
-            checks=self._all_checks(props),
-        )
+        with _Transaction(self, snap) as tx:
+            if not touched:
+                tx.commit_dml("UPDATE", params)
+                return {"numUpdatedRows": 0}
+            entries, m, changes = self._rewrite(
+                tx,
+                self._tag_rows(touched, snap.schema, props, pred, UPDATE),
+                snap.schema,
+                cdf=tx.cdf,
+                sets={c: F.expr(e) for c, e in set_exprs.items()},
+                checks=self._all_checks(props),
+            )
+            tx.commit_dml("UPDATE", params, touched, entries, m, changes)
         return {"numUpdatedRows": m[UPDATE]}
 
     def delete(self, condition: str) -> dict:
@@ -2894,116 +2927,70 @@ class LogTable:
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(snap, pred, condition)
         params = {"predicate": condition}
-        if not touched:
-            self._commit_dml(snap, "DELETE", [], [], params, 0)
-            return {"numDeletedRows": 0}
-        if props.get(DV_PROP) == "true":
-            return self._delete_with_dvs(condition, pred, touched, snap)
-        schema = snap.schema
-        m = self._rewrite(
-            self._tag_rows(touched, schema, props, pred, DELETE),
-            schema,
-            snap.partition_by,
-            props,
-            lambda entries, n: self._commit_dml(
-                snap, "DELETE", entries, [f.path for f in touched], params, n
-            ),
-            cdf=props.get(CDF_PROP) == "true",
-        )
-        return {"numDeletedRows": m[DELETE]}
+        with _Transaction(self, snap) as tx:
+            if touched and props.get(DV_PROP) == "true":
+                n = self._delete_with_dvs(tx, params, pred, touched)
+                if n:
+                    return {"numDeletedRows": n}
+            elif touched:
+                entries, m, changes = self._rewrite(
+                    tx,
+                    self._tag_rows(touched, snap.schema, props, pred, DELETE),
+                    snap.schema,
+                    cdf=tx.cdf,
+                )
+                tx.commit_dml("DELETE", params, touched, entries, m, changes)
+                return {"numDeletedRows": m[DELETE]}
+        # no row matched (a deletion vector written for none went with
+        # the transaction)
+        with _Transaction(self, snap) as tx:
+            tx.commit_dml("DELETE", params)
+        return {"numDeletedRows": 0}
 
     def _delete_with_dvs(
-        self,
-        condition: str,
-        pred: Column,
-        touched: list[FileEntry],
-        snap: Snapshot,
-    ) -> dict:
+        self, tx: _Transaction, params: dict, pred: Column, touched: list[FileEntry]
+    ) -> int:
         """Merge-on-read DELETE: write (file, row_index) tombstones for
         the matched rows instead of rewriting the touched files. The
         scan applies any existing tombstones first, so re-deleting an
         already-deleted row neither double-counts nor duplicates
         tombstones. One executor job writes the DV; the per-file hit
         map collected on the driver is bounded by the touched-file
-        count (metadata-sized)."""
-        props = snap.properties
-        scan = self._read_entries(touched, snap.schema, props, with_dv_key=True)
+        count (metadata-sized). Commits through ``tx`` and returns the
+        number of rows deleted; when that is 0 nothing is committed."""
+        snap = tx.snap
+        scan = self._read_entries(touched, snap.schema, snap.properties, with_dv_key=True)
         hits = scan.filter(pred)
-        dv_rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
-        dv_abs = os.path.join(self.path, dv_rel)
-        hits.select(
-            F.col("__dv_key").alias("path"),
-            F.col("__dv_ridx").alias("row_index"),
-        ).write.mode("overwrite").parquet(dv_abs)
+        dv_rel = tx.write_dv(hits)
         per_file = {
             r["path"]: r["n"]
-            for r in self.spark.read.parquet(dv_abs)
+            for r in self.spark.read.parquet(os.path.join(self.path, dv_rel))
             .groupBy("path")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
         n_deleted = int(sum(per_file.values()))
         if n_deleted == 0:
-            self.fs.delete_tree(dv_abs)
-            self._commit_dml(snap, "DELETE", [], [], {"predicate": condition}, 0)
-            return {"numDeletedRows": 0}
+            return 0
         # tombstone keys are base-relative; commit dvs are keyed by the
         # entry path the replay's active-file map uses
         key_to_path = {
             os.path.relpath(e.abspath(self.path), e.base or self.path): e.path
             for e in touched
         }
-        version = self._commit_op(
-            snap,
+        tx.commit(
             "DELETE",
-            parameters={"predicate": condition, "deletionVectors": True},
+            hits.drop("__dv_key", "__dv_ridx").withColumn("_change_type", F.lit(CT_DELETE)),
+            parameters={**params, "deletionVectors": True},
             metrics={
                 "numDeletedRows": n_deleted,
                 "numAddedFiles": 0,
                 "numRemovedFiles": 0,
                 "numDeletionVectorFiles": 1,
             },
-            dvs={
-                key_to_path[k]: [dv_rel]
-                for k in per_file
-                if k in key_to_path
-            },
+            dvs={key_to_path[k]: [dv_rel] for k in per_file if k in key_to_path},
         )
-        if props.get(CDF_PROP) == "true":
-            self._write_changes(
-                version,
-                self._cdf_frame(
-                    hits.drop("__dv_key", "__dv_ridx"), CT_DELETE, version
-                ),
-                props,
-            )
-        return {"numDeletedRows": n_deleted}
-
-    def _commit_dml(
-        self,
-        snap: Snapshot,
-        op: str,
-        entries: list[FileEntry],
-        removed: list[str],
-        params: dict,
-        n_affected: int,
-        schema_json: str | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> int:
-        return self._commit_op(
-            snap,
-            op,
-            add=entries,
-            remove=removed,
-            schema_json=schema_json,
-            properties=properties,
-            parameters=params,
-            metrics={
-                "numAffectedRows": n_affected,
-                "numAddedFiles": len(entries),
-                "numRemovedFiles": len(removed),
-            },
-        )
+        return n_deleted
 
     def merge(self, source: DataFrame, condition: str) -> "MergeBuilder":
         """MERGE builder (D1): ``target`` / ``source`` aliases are bound
@@ -3066,8 +3053,7 @@ class LogTable:
         cur_by_path = {f.path: f for f in cur_files}
         cur_paths = set(cur_by_path)
         old_paths = {f.path for f in old_files}
-        self._commit_op(
-            snap,
+        _Transaction(self, snap).commit(
             "RESTORE",
             # re-add files missing from the current snapshot AND
             # files whose deletion-vector state moved since the
@@ -3152,26 +3138,24 @@ class LogTable:
         removed: list[str] = []
         added: list[FileEntry] = []
         rt_on = props.get(RT_PROP) == "true"
-        for group in to_compact:
-            # row tracking: the rewrite carries the materialized row id
-            # and commit version forward — compaction never changes
-            # either (Delta's row-tracking preservation contract)
-            df = self._read_entries(
-                group, snap.schema, props, with_row_tracking=rt_on
+        with _Transaction(self, snap) as tx:
+            for group in to_compact:
+                # row tracking: the rewrite carries the materialized row id
+                # and commit version forward — compaction never changes
+                # either (Delta's row-tracking preservation contract)
+                df = self._read_entries(
+                    group, snap.schema, props, with_row_tracking=rt_on
+                )
+                total = sum(f.size_bytes for f in group)
+                n_out = max(1, total // target_file_bytes)
+                added += tx.write(df.coalesce(int(n_out)), snap.partition_by)
+                removed += [f.path for f in group]
+            tx.commit(
+                "OPTIMIZE",
+                add=added,
+                remove=removed,
+                metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
             )
-            total = sum(f.size_bytes for f in group)
-            n_out = max(1, total // target_file_bytes)
-            added += self._write_files(
-                df.coalesce(int(n_out)), snap.partition_by, props
-            )
-            removed += [f.path for f in group]
-        self._commit_op(
-            snap,
-            "OPTIMIZE",
-            add=added,
-            remove=removed,
-            metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
-        )
         return {"numFilesRemoved": len(removed), "numFilesAdded": len(added)}
 
     def zorder(
@@ -3292,16 +3276,16 @@ class LogTable:
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-        added = self._write_files(clustered, snap.partition_by, props)
         removed = [f.path for f in files]
-        self._commit_op(
-            snap,
-            "OPTIMIZE",
-            add=added,
-            remove=removed,
-            parameters={"zOrderBy": cols},
-            metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
-        )
+        with _Transaction(self, snap) as tx:
+            added = tx.write(clustered, snap.partition_by)
+            tx.commit(
+                "OPTIMIZE",
+                add=added,
+                remove=removed,
+                parameters={"zOrderBy": cols},
+                metrics={"numFilesRemoved": len(removed), "numFilesAdded": len(added)},
+            )
         return {"numFilesRemoved": len(removed), "numFilesAdded": len(added)}
 
     def vacuum(
@@ -3329,7 +3313,11 @@ class LogTable:
           (the collector `_write_files` promises). As with Delta, a
           zero-retention VACUUM racing an in-flight writer can collect
           its staged (not yet committed) files — keep retention above
-          the longest write when vacuuming live tables."""
+          the longest write when vacuuming live tables.
+
+        A write that does not commit deletes its own files (see
+        :class:`_Transaction`): only a crash, or a failure once its
+        commit may have landed, leaves orphans for this sweep."""
         if retain_hours is None:
             retain_hours = self._retention_hours()
         horizon = time.time() - retain_hours * 3600
@@ -3389,13 +3377,11 @@ class LogTable:
                     candidates.append(os.path.relpath(full, self.path))
         # CDF change files: keep a version's changes only while its
         # commit is inside retention (or is the current version)
-        protected = set(protected_versions)
+        protected = {change_dir(v) for v in protected_versions}
         changes_root = os.path.join(self.path, CHANGES_DIR)
         if self.fs.isdir(changes_root):
             for n in self.fs.listdir(changes_root):
-                if not n.startswith("v="):
-                    continue
-                if int(n.removeprefix("v=")) in protected:
+                if os.path.join(CHANGES_DIR, n) in protected:
                     continue
                 vdir = os.path.join(changes_root, n)
                 candidates += [
@@ -3479,8 +3465,7 @@ class LogTable:
             }
         dead = sorted(dead_set)
         if dead and not dry_run:
-            self._commit_op(
-                snap,
+            _Transaction(self, snap).commit(
                 "FSCK",
                 remove=dead,
                 metrics={"numFilesRemoved": len(dead)},
@@ -3794,7 +3779,7 @@ class MergeBuilder:
         source should persist it themselves before calling merge."""
         t = self.table
         snap = t._replay()
-        files, partition_by, tprops = snap.files, snap.partition_by, snap.properties
+        files, tprops = snap.files, snap.properties
         schema = snap.schema
         idents = t._identity_columns(tprops)
         if self.not_matched and idents:
@@ -4045,50 +4030,33 @@ class MergeBuilder:
                 inserts = inserts.localCheckpoint(eager=False)
 
         params = {"predicate": self.condition, **self.extra_params}
-        if rows is None and inserts is None:
-            t._commit_dml(
-                snap,
-                "MERGE",
-                [],
-                [],
-                params,
-                0,
-                schema_json=evolved_json,
-                properties=self.extra_props or None,
+        with _Transaction(t, snap) as tx:
+            if rows is None and inserts is None:
+                tx.commit_dml(
+                    "MERGE", params, schema_json=evolved_json,
+                    properties=self.extra_props or None,
+                )
+                return {"numUpdatedRows": 0, "numDeletedRows": 0, "numInsertedRows": 0}
+            entries, m, changes = t._rewrite(
+                tx,
+                rows,
+                schema,
+                cdf=tx.cdf,
+                sets=sets,
+                inserts=inserts,
+                checks=t._all_checks(tprops),
             )
-            return {"numUpdatedRows": 0, "numDeletedRows": 0, "numInsertedRows": 0}
-
-        def verify(m: dict[str, Any], entries: list[FileEntry]) -> None:
             # without a probe, ambiguity shows in the counts: each row of
             # the touched files is kept, updated or deleted exactly once
             n_target = m[KEEP] + m[UPDATE] + m[DELETE]
             if skip_probe and n_target != sum(f.num_records for f in touched):
-                t._discard(entries)
                 raise ValueError(
                     "MERGE: multiple source rows matched the same target row"
                 )
-
-        m = t._rewrite(
-            rows,
-            schema,
-            partition_by,
-            tprops,
-            lambda entries, n: t._commit_dml(
-                snap,
-                "MERGE",
-                entries,
-                [f.path for f in touched],
-                params,
-                n,
-                schema_json=evolved_json,
+            tx.commit_dml(
+                "MERGE", params, touched, entries, m, changes, schema_json=evolved_json,
                 properties={**self.extra_props, **ident_props} or None,
-            ),
-            cdf=tprops.get(CDF_PROP) == "true",
-            sets=sets,
-            inserts=inserts,
-            checks=t._all_checks(tprops),
-            verify=verify,
-        )
+            )
         return {
             "numUpdatedRows": m[UPDATE],
             "numDeletedRows": m[DELETE],

@@ -21,12 +21,14 @@ in the window is checked against it.
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from databricks_delta_lake_migration_spark.tables.log import CommitLog
 from databricks_delta_lake_migration_spark.tables.logtable import (
     ConcurrentDeleteError,
     ConcurrentWriteError,
@@ -83,6 +85,33 @@ def _race(t, step, interloper):
         return inner(*args, **kwargs)
 
     setattr(t, step, wrapped)
+
+
+def _assert_no_orphans(path):
+    """Every data file, bloom sidecar and deletion-vector directory under
+    the table root is named by some commit's ``add`` or ``dvs``: a
+    refused write deleted what it wrote. (A winner's removed originals
+    stay, named by the commit that added them, for time travel.)"""
+    named = set()
+    for c in CommitLog(path).commits():
+        for e in c.add:
+            named.update(os.path.normpath(p) for p in (e.path, e.bloom) if p)
+        named.update(os.path.normpath(d) for ds in c.dvs.values() for d in ds)
+    orphans = set()
+    for d, _, names in os.walk(path):
+        rel_dir = os.path.relpath(d, path)
+        top = rel_dir.split(os.sep)[0]
+        if top in ("_log", "_staging", "_changes"):
+            continue
+        for n in names:
+            rel = os.path.normpath(os.path.join(rel_dir, n))
+            if top == "_deletion_vectors":
+                rel = os.path.join(top, rel_dir.split(os.sep)[1])
+            elif not n.endswith((".parquet", ".bloom.json")):
+                continue
+            if rel not in named:
+                orphans.add(rel)
+    assert not orphans, sorted(orphans)
 
 
 def _make(spark, tmp_path, name="t", partition_by=None):
@@ -257,6 +286,7 @@ def test_racing_copy_into_same_source_conflicts_not_duplicates(spark, tmp_path):
             t1.copy_into(src)
     finally:
         LogTable._commit = orig
+    _assert_no_orphans(t1.path)
     # no duplicates; the loser's re-run is a clean no-op
     assert t1.read().count() == 5
     assert t1.copy_into(src)["numLoadedFiles"] == 0
@@ -295,6 +325,7 @@ def test_rewrite_racing_rewrite_of_same_file_conflicts(spark, tmp_path, props, s
     _race(t, step, lambda: other.update("id = 1", {"val": "9.0"}))
     with pytest.raises(ConcurrentDeleteError):
         op(t, spark)
+    _assert_no_orphans(t.path)
     got = sorted((r.id, r.val) for r in LogTable(spark, t.path).read().collect())
     assert got == [(1, 9.0), (2, 1.0), (3, 1.0)]
 
@@ -309,6 +340,7 @@ def test_optimize_racing_delete_conflicts(spark, tmp_path):
     _race(t, "_write_files", lambda: other.delete("id = 1"))
     with pytest.raises(ConcurrentDeleteError):
         t.optimize()
+    _assert_no_orphans(path)
     assert sorted(r.id for r in LogTable(spark, path).read().collect()) == [2, 3]
 
 
@@ -337,6 +369,7 @@ def test_append_racing_add_constraint_conflicts(spark, tmp_path):
     _race(t, "_write_files", lambda: other.set_properties({"constraint.pos": "id > 0"}))
     with pytest.raises(MetadataChangedError):
         t.append(_rows(spark, [-1]))
+    _assert_no_orphans(path)
     assert LogTable(spark, path).read().count() == 0
 
 
@@ -376,4 +409,5 @@ def test_stream_batch_rebases_unless_same_batch_won(spark, tmp_path):
     _race(t, "_write_files", lambda: _append_batch(other, _rows(spark, [2]), "s", 1))
     with pytest.raises(ConcurrentTransactionError):
         _append_batch(t, _rows(spark, [2]), "s", 1)
+    _assert_no_orphans(path)
     assert sorted(r.id for r in LogTable(spark, path).read().collect()) == [1, 2, 100]

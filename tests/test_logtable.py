@@ -560,6 +560,19 @@ def _cdf_merge(t, spark):
     )
 
 
+def _stream_batch(t, df, batch_id):
+    from databricks_delta_lake_migration_spark.streaming.ingest import _append_batch
+
+    _append_batch(t, df, "s", batch_id)
+
+
+def _copy_new_file(t, df):
+    """COPY INTO ``t`` from a fresh landing directory holding ``df``."""
+    src = t.path + "_land"
+    df.coalesce(1).write.mode("append").parquet(src)
+    return t.copy_into(src)
+
+
 @pytest.mark.parametrize(
     "cdf, op, bound",
     [
@@ -601,8 +614,10 @@ def test_dml_job_count_bounds(spark, tmp_path, job_ids, cdf, op, bound):
         lambda t, s: t.overwrite(
             rows_df(s, [(70, "RW", 7.0, "d1")]), replace_where="day = 'd1'"
         ),
+        lambda t, s: _stream_batch(t, rows_df(s, [(91, "S", 9.0, "d1")]), 0),
+        lambda t, s: _copy_new_file(t, rows_df(s, [(92, "C", 9.0, "d1")])),
     ],
-    ids=["append", "update", "delete", "upsert", "replace_where"],
+    ids=["append", "update", "delete", "upsert", "replace_where", "stream", "copy_into"],
 )
 def test_write_reads_one_snapshot(spark, tmp_path, monkeypatch, op):
     """A write reads the table state once and commits against it: at
@@ -626,6 +641,111 @@ def test_write_reads_one_snapshot(spark, tmp_path, monkeypatch, op):
     monkeypatch.undo()
     assert t.version() == v + 1
     assert calls["snapshot"] <= 1 and calls["listing"] <= 3, calls
+
+
+def test_stream_batch_checks_constraints_like_append(spark, tmp_path):
+    """A micro-batch is written like an append: a row that violates a
+    CHECK constraint fails the batch, nothing is committed and the
+    batch leaves no file behind."""
+    t = LogTable.create(
+        spark, str(tmp_path / "sc"), SCHEMA, properties={"constraint.pos": "amount > 0"}
+    )
+    _stream_batch(t, rows_df(spark, [(1, "OK", 5.0, "d1")]), 0)
+    v = t.version()
+    with pytest.raises(ConstraintViolationError, match="pos"):
+        _stream_batch(t, rows_df(spark, [(2, "OK", 1.0, "d1"), (3, "BAD", -1.0, "d1")]), 1)
+    assert t.version() == v
+    assert _uncommitted_files(t) == []
+    assert state(t) == {(1, "OK", 5.0, "d1")}
+
+
+def test_stream_batch_records_change_feed(spark, table):
+    """On a change-feed table a micro-batch's rows are its version's
+    insert rows, as for an append."""
+    _stream_batch(table, rows_df(spark, [(7, "S", 7.0, "d1"), (8, "S", 8.0, "d3")]), 0)
+    v = table.version()
+    got = {
+        (r.id, r._change_type, r._commit_version)
+        for r in table.read_changes(starting_version=v).collect()
+    }
+    assert got == {(7, "insert", v), (8, "insert", v)}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda t, s: t.append(rows_df(s, [(9, "NEW", 9.0, "d3")])),
+        lambda t, s: t.update("id = 1", {"amount": "amount + 5"}),
+        lambda t, s: t.upsert(
+            rows_df(s, [(2, "REFUNDED", 25.0, "d1"), (9, "NEW", 99.0, "d3")]), ["id"]
+        ),
+        lambda t, s: (
+            t.set_properties({"enableDeletionVectors": "true"}),
+            t.delete("id = 2"),
+        ),
+        lambda t, s: t.overwrite(
+            rows_df(s, [(100, "GOLD", 1.0, "d1")]), replace_where="day = 'd1'"
+        ),
+    ],
+    ids=["append", "update", "merge", "dv_delete", "replace_where"],
+)
+def test_cdf_commit_timestamp_is_the_commits(spark, table, op):
+    """Every change row's ``_commit_timestamp`` is the timestamp that
+    DESCRIBE HISTORY shows for its ``_commit_version``."""
+    v = table.version()
+    op(table, spark)
+    history = {r.version: r.timestamp for r in table.history().collect()}
+    rows = table.read_changes(starting_version=v + 1).collect()
+    assert rows
+    for r in rows:
+        assert r._commit_timestamp == history[r._commit_version], r
+
+
+@pytest.mark.parametrize(
+    "op, changed",
+    [
+        (
+            lambda t, s: t.append(rows_df(s, [(9, "NEW", 9.0, "d3")])),
+            {(9, "NEW", 9.0, "d3")},
+        ),
+        (
+            lambda t, s: t.update("id = 1", {"amount": "amount + 5"}),
+            {(1, "PENDING", 15.0, "d1")},
+        ),
+    ],
+    ids=["append", "update"],
+)
+@pytest.mark.parametrize("failure", ["change_feed", "post_link_listing"])
+def test_failure_after_landed_commit_keeps_its_files(
+    spark, table, monkeypatch, op, changed, failure
+):
+    """An error raised once the commit may have landed (the change-feed
+    write, or the log listing that follows the version file's link)
+    propagates, but deletes none of the commit's files: its rows stay
+    readable."""
+    v, before = table.version(), state(table)
+    if failure == "change_feed":
+        def boom(*args, **kwargs):
+            raise OSError("change feed write failed")
+
+        monkeypatch.setattr(table, "_write_changes", boom)
+    else:
+        put = table.log.put
+
+        def put_then_fail(commit):
+            put(commit)
+            raise OSError("listing failed")
+
+        monkeypatch.setattr(table.log, "put", put_then_fail)
+    with pytest.raises(OSError, match="failed"):
+        op(table, spark)
+    monkeypatch.undo()
+    fresh = LogTable(spark, table.path)
+    assert fresh.version() == v + 1
+    for e in fresh.commits()[-1].add:
+        assert os.path.exists(os.path.join(table.path, e.path)), e.path
+    kept = {r for r in before if r[0] not in {c[0] for c in changed}}
+    assert state(fresh) == kept | changed
 
 
 def test_schema_evolution_merge_schema(spark, table):
