@@ -43,7 +43,7 @@ import urllib.parse
 import uuid
 from contextlib import suppress
 from functools import reduce
-from typing import Any, Sequence
+from typing import Any, Collection, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -2419,10 +2419,15 @@ class LogTable:
         tagged DELETE where ``replace_where`` is TRUE and KEEP otherwise
         (FALSE or NULL), and the DML rewrite (:meth:`_rewrite`) carries
         the KEEP rows into new files in the same transaction (a second
-        job, only when such files exist). One commit adds the written
-        and carried files. With the change feed on, the removed rows
-        (``replace_where``: those where it is TRUE) are its delete rows
-        and the written rows its insert rows."""
+        job, only when such files exist). The replaced files are found
+        by the probe job of :meth:`_touched_files` even when stats leave
+        one candidate: the transaction already holds the new data, so a
+        candidate without a matching row could not be dropped from it
+        alone, and the commit would remove that file and add an
+        identical copy. One commit adds the written and carried files.
+        With the change feed on, the removed rows (``replace_where``:
+        those where it is TRUE) are its delete rows and the written rows
+        its insert rows."""
         if dynamic and (replace_where is not None or replace_range is not None):
             raise ValueError("dynamic excludes replace_where and replace_range")
         if replace_where is not None and replace_range is not None:
@@ -2475,7 +2480,7 @@ class LogTable:
             elif pred is None:
                 removed = list(files)
             else:
-                removed, _ = self._split_files_by_predicate(snap, pred, replace_where)
+                removed = self._touched_files(snap, pred, replace_where, probe_one=True)
                 if removed:
                     # the replaced files' rows the predicate does not select
                     # (FALSE or NULL) are KEEP rows of one rewrite, projected
@@ -2545,27 +2550,38 @@ class LogTable:
         properties AS OF the snapshot being read — a time-travel read
         across a rename must use that version's mapping, not today's
         (the logical name `schema` carries is the one that version's
-        mapping knows)."""
+        mapping knows).
+
+        The scan yields the partition columns last; the projection back
+        to the schema's names and order is skipped when it would be the
+        identity (each ``Column`` built costs JVM round trips)."""
         mapping = self._column_mapping(props)
-        phys = {f.name: mapping.get(f.name, f.name) for f in schema.fields}
+        names = [f.name for f in schema.fields]
+        phys = {n: mapping.get(n, n) for n in names}
+        # hidden physical columns; files written before row tracking was
+        # enabled lack them and surface NULLs (explicit schema)
+        hidden = [ROW_ID_COL, ROW_COMMIT_COL] if with_row_tracking else []
         read_schema = T.StructType(
-            [
-                T.StructField(phys[f.name], f.dataType, f.nullable)
-                for f in schema.fields
-            ]
+            [T.StructField(phys[f.name], f.dataType, f.nullable) for f in schema.fields]
+            + [T.StructField(c, T.LongType()) for c in hidden]
         )
-        cols = [F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-        if with_row_tracking:
-            # hidden physical columns; files written before row tracking
-            # was enabled lack them and surface NULLs (explicit schema)
-            read_schema = T.StructType(
-                list(read_schema.fields)
-                + [
-                    T.StructField(ROW_ID_COL, T.LongType()),
-                    T.StructField(ROW_COMMIT_COL, T.LongType()),
-                ]
+        part_keys = {
+            tuple(
+                _partition_values(
+                    e.path if e.base is None
+                    else os.path.relpath(e.abspath(self.path), e.base)
+                )
             )
-            cols = cols + [F.col(ROW_ID_COL), F.col(ROW_COMMIT_COL)]
+            for e in entries
+        }
+        pk = list(next(iter(part_keys))) if len(part_keys) == 1 else []
+        scanned = [n for n in read_schema.fieldNames() if n not in pk] + pk
+        renamed = any(phys[n] != n for n in names)
+        star = len(part_keys) <= 1 and not renamed and scanned == names + hidden
+        if star:
+            cols: list = ["*"]
+        else:
+            cols = [F.col(phys[n]).alias(n) for n in names] + [F.col(c) for c in hidden]
         if with_file_path:
             # _metadata is a scan-time pseudo-column; materialize it here
             # because it doesn't survive projections/joins downstream.
@@ -2608,8 +2624,9 @@ class LogTable:
                 self.spark.read.schema(read_schema)
                 .option("basePath", base)
                 .parquet(*[e.abspath(self.path) for e in group])
-                .select(*gcols)
             )
+            if not star or len(gcols) > 1:
+                part = part.select(*gcols)
             g_dvs = sorted({d for e in group if e.dv for d in e.dv})
             if g_dvs:
                 # apply the tombstones: (file, row_index) anti-join, per
@@ -2685,26 +2702,26 @@ class LogTable:
 
     # ---- file pruning helpers -----------------------------------------
 
-    def _split_files_by_predicate(
-        self, snap: Snapshot, pred: Column, text: str
-    ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """The snapshot's files that contain ≥1 row matching ``pred``
-        (whose SQL is ``text``) vs the rest.
+    def _touched_files(
+        self, snap: Snapshot, pred: Column, text: str, probe_one: bool = False
+    ) -> list[FileEntry]:
+        """The snapshot's files that a DML with predicate ``pred`` (whose
+        SQL is ``text``) rewrites.
 
-        Two-phase, like Delta: (1) metadata-only skipping — evaluate the
-        predicate's conjuncts against per-file [min,max] stats and
-        partition-path values, excluding files that provably can't match
-        (no job at all); (2) one metadata-sized aggregate job over the
-        survivors — group matching rows by ``_metadata.file_path`` —
-        for the exact touched set. Never collects data."""
-        files = snap.files
-        if not files:
-            return [], []
-        candidates = self._skip_files(files, self._physical_conjuncts(text, snap.properties))
-        kept_paths = {f.path for f in candidates}
-        excluded = [f for f in files if f.path not in kept_paths]
-        if not candidates:
-            return [], list(files)
+        Delta's two-step DML: (1) file skipping drops the files whose
+        per-column [min,max] stats or partition-path values provably
+        exclude a conjunct (no job); (2) when more than one candidate is
+        left, one job over them groups the matching rows by
+        ``_metadata.file_path`` for the exact touched set. A lone
+        candidate skips that job unless ``probe_one``: the caller's
+        rewrite is its probe, since its observed counts show whether any
+        row matched, and with none the caller commits no file change and
+        its transaction deletes the copy. Never collects data."""
+        candidates = self._skip_files(
+            snap.files, self._physical_conjuncts(text, snap.properties)
+        )
+        if not candidates or (len(candidates) == 1 and not probe_one):
+            return candidates
         df = self._read_entries(
             candidates, snap.schema, snap.properties, with_file_path=True
         )
@@ -2717,9 +2734,7 @@ class LogTable:
                 .collect()
             }
         )
-        touched = [f for f in candidates if f.path in hit]
-        untouched = [f for f in candidates if f.path not in hit] + excluded
-        return touched, untouched
+        return [f for f in candidates if f.path in hit]
 
     def _norm_paths(self, raw: set[str]) -> set[str]:
         """Normalize scan-reported file URIs to both absolute and
@@ -2802,15 +2817,15 @@ class LogTable:
         parts = []
         if rows is not None:
             # projected onto ``schema`` here, so the sink only drops the
-            # tag columns (each Column call is a JVM round trip)
-            cols = [
-                (
-                    F.when(updated, sets[f.name]).otherwise(F.col(f"target.{f.name}"))
-                    if f.name in sets
-                    else F.col(f"target.{f.name}")
-                )
+            # tag columns (each Column call is a JVM round trip); carried
+            # columns are read with the schema's types already
+            cols: list = [
+                F.when(updated, sets[f.name])
+                .otherwise(F.col(f"target.{f.name}"))
                 .cast(f.dataType)
                 .alias(f.name)
+                if f.name in sets
+                else f"target.{f.name}"
                 for f in schema.fields
             ] + [action]
             if rt:
@@ -2886,7 +2901,9 @@ class LogTable:
         assigned are recomputed from the new base values (Delta's UPDATE
         semantics — base-column edits can't leave a generated column
         stale). The change feed's post-images are the rows written, and
-        its pre-images the same rows' values before the assignment."""
+        its pre-images the same rows' values before the assignment. The
+        touched files are those of :meth:`_touched_files`; when no row
+        was updated, the commit changes no file."""
         snap = self._replay()
         props = snap.properties
         bad_ids = [c for c in self._identity_columns(props) if c in set_exprs]
@@ -2896,22 +2913,26 @@ class LogTable:
                 "cannot assign them"
             )
         pred = F.expr(condition)
-        touched, _ = self._split_files_by_predicate(snap, pred, condition)
+        touched = self._touched_files(snap, pred, condition)
         params = {"predicate": condition}
         with _Transaction(self, snap) as tx:
-            if not touched:
-                tx.commit_dml("UPDATE", params)
-                return {"numUpdatedRows": 0}
-            entries, m, changes = self._rewrite(
-                tx,
-                self._tag_rows(touched, snap.schema, props, pred, UPDATE),
-                snap.schema,
-                cdf=tx.cdf,
-                sets={c: F.expr(e) for c, e in set_exprs.items()},
-                checks=self._all_checks(props),
-            )
-            tx.commit_dml("UPDATE", params, touched, entries, m, changes)
-        return {"numUpdatedRows": m[UPDATE]}
+            if touched:
+                entries, m, changes = self._rewrite(
+                    tx,
+                    self._tag_rows(touched, snap.schema, props, pred, UPDATE),
+                    snap.schema,
+                    cdf=tx.cdf,
+                    sets={c: F.expr(e) for c, e in set_exprs.items()},
+                    checks=self._all_checks(props),
+                )
+                if m[UPDATE]:
+                    tx.commit_dml("UPDATE", params, touched, entries, m, changes)
+                    return {"numUpdatedRows": m[UPDATE]}
+        # no row matched (the copy of an unprobed candidate went with the
+        # transaction)
+        with _Transaction(self, snap) as tx:
+            tx.commit_dml("UPDATE", params)
+        return {"numUpdatedRows": 0}
 
     def delete(self, condition: str) -> dict:
         """DELETE with predicate (D4 — 04_acid_operations.py:170-175).
@@ -2921,11 +2942,13 @@ class LogTable:
         files are tagged DELETE where ``condition`` is TRUE and KEEP
         otherwise (FALSE or NULL), one rewrite (:meth:`_rewrite`) writes
         the KEEP rows, and the change feed's delete rows are the DELETE
-        rows of that same frame."""
+        rows of that same frame. The touched files are those of
+        :meth:`_touched_files`; when no row was deleted, the commit
+        changes no file."""
         snap = self._replay()
         props = snap.properties
         pred = F.expr(condition)
-        touched, _ = self._split_files_by_predicate(snap, pred, condition)
+        touched = self._touched_files(snap, pred, condition)
         params = {"predicate": condition}
         with _Transaction(self, snap) as tx:
             if touched and props.get(DV_PROP) == "true":
@@ -2939,10 +2962,11 @@ class LogTable:
                     snap.schema,
                     cdf=tx.cdf,
                 )
-                tx.commit_dml("DELETE", params, touched, entries, m, changes)
-                return {"numDeletedRows": m[DELETE]}
-        # no row matched (a deletion vector written for none went with
-        # the transaction)
+                if m[DELETE]:
+                    tx.commit_dml("DELETE", params, touched, entries, m, changes)
+                    return {"numDeletedRows": m[DELETE]}
+        # no row matched (a deletion vector written for none, or the copy
+        # of an unprobed candidate, went with the transaction)
         with _Transaction(self, snap) as tx:
             tx.commit_dml("DELETE", params)
         return {"numDeletedRows": 0}
@@ -3658,7 +3682,7 @@ class MergeBuilder:
         return pairs
 
     def _prune_candidates(
-        self, files: list[FileEntry], props: dict[str, str]
+        self, files: list[FileEntry], props: dict[str, str], src_cols: Collection[str]
     ) -> list[FileEntry]:
         """Data skipping for MERGE (Delta's stats-based file pruning):
         a file whose [min,max] range for an equi-key column is disjoint
@@ -3671,7 +3695,7 @@ class MergeBuilder:
         pairs = [
             (mapping.get(tc, tc), sc)
             for tc, sc in self._equi_pairs(self.condition)
-            if sc in self.source.columns
+            if sc in src_cols
         ]
         usable = [
             (tc, sc)
@@ -3781,6 +3805,10 @@ class MergeBuilder:
         snap = t._replay()
         files, tprops = snap.files, snap.properties
         schema = snap.schema
+        # read once: each read of a DataFrame's schema is JVM round
+        # trips and a JSON parse
+        src_fields = self.source.schema.fields
+        src_types = {f.name: f.dataType for f in src_fields}
         idents = t._identity_columns(tprops)
         if self.not_matched and idents:
             # merge-time allocation (D1 × D19, the upsert-into-
@@ -3793,7 +3821,7 @@ class MergeBuilder:
                     c
                     for c in idents
                     for values, _cond in self.not_matched
-                    if (values is None and c in self.source.columns)
+                    if (values is None and c in src_types)
                     or (values is not None and c in values)
                 }
             )
@@ -3809,7 +3837,7 @@ class MergeBuilder:
                 for c in idents
                 for kind, s, _ in (*self.matched, *self.not_matched_by_source)
                 if (s is not None and c in s)
-                or (kind == "update" and s is None and c in self.source.columns)
+                or (kind == "update" and s is None and c in src_types)
             ]
             if assigned:
                 raise ValueError(
@@ -3824,7 +3852,7 @@ class MergeBuilder:
         evolved_json: str | None = None
         if self.auto_evolve:
             tgt_names = {f.name for f in schema.fields}
-            new = [f for f in self.source.schema.fields if f.name not in tgt_names]
+            new = [f for f in src_fields if f.name not in tgt_names]
             if new:
                 t._guard_new_columns([f.name for f in new], tprops)
                 schema = T.StructType(list(schema.fields) + list(new))
@@ -3834,18 +3862,24 @@ class MergeBuilder:
         src = self.source.alias("source")
         cond = F.expr(self.condition)
 
-        # Job 1 — file pruning AND ambiguity detection in ONE metadata
-        # aggregate: per touched file, the max number of source rows
-        # matching any single target row. Skipped entirely for
-        # insert-only merges (no matched clause ⇒ no file rewrite) and
-        # for small tables, where rewriting everything is cheaper than
-        # the probe job; ambiguity is then detected post-hoc from the
-        # observed row counts (matched target rows written must equal
-        # the touched files' metadata row count) with rollback.
+        # The jobs, in order. (1) With a matched clause and no by-source
+        # clause, _prune_candidates' bounds job: one aggregate over the
+        # source, run only when some file has stats on an equi-key.
+        # (2) Above MERGE_PRUNE_THRESHOLD_BYTES of candidates, the probe:
+        # file pruning AND ambiguity detection in one metadata-sized
+        # aggregate (per touched file, the max number of source rows
+        # matching any single target row). Below it every candidate is
+        # rewritten, as is every file with a by-source clause; the
+        # rewrite's observed counts then show ambiguity (each touched
+        # row is kept, updated or deleted exactly once) and the
+        # transaction deletes its files. (3) The rewrite's write job,
+        # with the jobs of its broadcast exchanges; (4) with identity
+        # columns, the count that allocates them; (5) with the change
+        # feed on, its write.
         touched: list[FileEntry] = []
         skip_probe = False
         candidates = (
-            self._prune_candidates(files, tprops)
+            self._prune_candidates(files, tprops, src_types)
             if (files and self.matched and not self.not_matched_by_source)
             else list(files)
         )
@@ -3892,18 +3926,21 @@ class MergeBuilder:
         def first_true(conds: list[str | None]) -> Column:
             """Index of the first clause whose condition is TRUE (no
             condition is TRUE), NULL when none is: first clause wins."""
-            idx = F.lit(None).cast("int")
+            idx = None
             for i, c in reversed(list(enumerate(conds))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                idx = F.when(fire, F.lit(i)).otherwise(idx)
-            return idx
+                if c is None:  # no later clause can fire
+                    idx = F.lit(i)
+                else:
+                    fire = F.when(F.expr(c), F.lit(i))
+                    idx = fire if idx is None else fire.otherwise(idx)
+            return F.lit(None).cast("int") if idx is None else idx
 
         # One action per target row and one value per assigned column,
         # built over both clause lists: ``__clause`` indexes the matched
         # clause that fires on a matched row, ``__nmbs`` the by-source
         # clause on an unmatched one; either is NULL when none fires.
         action = F.lit(KEEP)
-        sets: dict[str, Column] = {}
+        updates: list[tuple[Column, dict[str, Column]]] = []
         for idx, clauses in (
             ("__clause", self.matched),
             ("__nmbs", self.not_matched_by_source),
@@ -3915,21 +3952,23 @@ class MergeBuilder:
                     continue
                 action = F.when(fires, F.lit(UPDATE)).otherwise(action)
                 if set_exprs is None:  # UPDATE ALL
-                    assigned = {
-                        c: F.col(f"source.{c}") for c in tcols if c in self.source.columns
-                    }
+                    assigned = {c: F.col(f"source.{c}") for c in tcols if c in src_types}
                 else:
                     assigned = {c: F.expr(e) for c, e in set_exprs.items()}
-                for c, v in assigned.items():
-                    sets[c] = F.when(fires, v).otherwise(
-                        sets.get(c, F.col(f"target.{c}"))
-                    )
+                updates.append((fires, assigned))
+        # the rewrite takes a set value on UPDATE rows only, where some
+        # update clause fired, so the last one's value needs no condition
+        sets: dict[str, Column] = {}
+        for c in dict.fromkeys(c for _, assigned in updates for c in assigned):
+            for fires, assigned in reversed(updates):
+                v = assigned[c] if c in assigned else F.col(f"target.{c}")
+                sets[c] = F.when(fires, v).otherwise(sets[c]) if c in sets else v
 
         rows: DataFrame | None = None
         if touched:
             tgt = t._read_entries(touched, schema, tprops, with_row_tracking=rt_on)
             tgt = tgt.alias("target")
-            nmbs = first_true([c for *_, c in self.not_matched_by_source])
+            nmbs = [c for *_, c in self.not_matched_by_source]
             if self.matched:
                 # Rewrite join: touched files ⟕ source. Left-outer — NOT
                 # full-outer — so the planner stays free to broadcast the
@@ -3942,12 +3981,12 @@ class MergeBuilder:
                 # small scale both broadcast.
                 src_marked = self.source.withColumn("__src", F.lit(1)).alias("source")
                 unmatched = F.col("source.__src").isNull()
-                matched_idx = first_true([c for *_, c in self.matched])
-                rows = (
-                    tgt.join(src_marked, cond, "left_outer")
-                    .withColumn("__clause", F.when(~unmatched, matched_idx))
-                    .withColumn("__nmbs", F.when(unmatched, nmbs))
-                )
+                idx_cols = {
+                    "__clause": F.when(~unmatched, first_true([c for *_, c in self.matched]))
+                }
+                if nmbs:
+                    idx_cols["__nmbs"] = F.when(unmatched, first_true(nmbs))
+                rows = tgt.join(src_marked, cond, "left_outer").withColumns(idx_cols)
             else:
                 # NOT-MATCHED-BY-SOURCE without matched clauses: a multi-
                 # match source can't corrupt anything, so no probe — split
@@ -3958,7 +3997,9 @@ class MergeBuilder:
                     tgt.join(src, cond, "left_semi")
                     .withColumn("__nmbs", F.lit(None).cast("int"))
                     .unionByName(
-                        tgt.join(src, cond, "left_anti").withColumn("__nmbs", nmbs)
+                        tgt.join(src, cond, "left_anti").withColumn(
+                            "__nmbs", first_true(nmbs)
+                        )
                     )
                     .alias("target")
                 )
@@ -3966,39 +4007,57 @@ class MergeBuilder:
 
         gen_cols = t._generated_columns(tprops)
 
+        def inserted(values: dict[str, str] | None, f: T.StructField) -> Column:
+            """The value an insert clause gives column ``f`` (INSERT ALL:
+            the source's column), NULL when it assigns none."""
+            if values is None:
+                return F.col(f"source.{f.name}") if f.name in src_types else F.lit(None)
+            return F.expr(values[f.name]) if f.name in values else F.lit(None)
+
         def insert_rows(unmatched_src: DataFrame) -> DataFrame:
             """Each unmatched source row projected onto the schema by the
             first insert clause whose condition is TRUE. A generated
             column that clause leaves unassigned is computed over the
             projected (single-sided, unambiguous) row."""
-            tagged = unmatched_src.withColumn(
-                "__ins", first_true([c for _, c in self.not_matched])
-            ).filter(F.col("__ins").isNotNull())
-            cols = []
-            for f in schema.fields:
-                v = F.lit(None)
-                for i, (values, _) in enumerate(self.not_matched):
-                    if values is None:  # INSERT ALL
-                        assigned = f.name in self.source.columns
-                        x = F.col(f"source.{f.name}") if assigned else F.lit(None)
-                    else:
-                        x = F.expr(values[f.name]) if f.name in values else F.lit(None)
-                    v = F.when(F.col("__ins") == i, x.cast(f.dataType)).otherwise(v)
-                cols.append(v.cast(f.dataType).alias(f.name))
-            out = tagged.select(*cols, "__ins")
+            conds = [c for _, c in self.not_matched]
+            # one unconditional clause takes every row: a direct
+            # projection, where a source column of the schema's type
+            # needs no cast
+            direct = conds == [None]
+            if direct:
+                values = self.not_matched[0][0]
+                out = unmatched_src.select(
+                    *[
+                        f"source.{f.name}"
+                        if values is None and src_types.get(f.name) == f.dataType
+                        else inserted(values, f).cast(f.dataType).alias(f.name)
+                        for f in schema.fields
+                    ]
+                )
+            else:
+                tagged = unmatched_src.withColumn("__ins", first_true(conds)).filter(
+                    F.col("__ins").isNotNull()
+                )
+                cols = []
+                for f in schema.fields:
+                    v = F.lit(None)
+                    for i, (values, _) in enumerate(self.not_matched):
+                        x = inserted(values, f).cast(f.dataType)
+                        v = F.when(F.col("__ins") == i, x).otherwise(v)
+                    cols.append(v.cast(f.dataType).alias(f.name))
+                out = tagged.select(*cols, "__ins")
             for gc, ge in gen_cols.items():
                 own = [
                     i
                     for i, (values, _) in enumerate(self.not_matched)
-                    if gc not in (self.source.columns if values is None else values)
+                    if gc not in (src_types if values is None else values)
                 ]
                 if own and gc in types:
-                    out = out.withColumn(
-                        gc,
-                        F.when(F.col("__ins").isin(own), F.expr(ge).cast(types[gc]))
-                        .otherwise(F.col(gc)),
-                    )
-            return out.drop("__ins")
+                    v = F.expr(ge).cast(types[gc])
+                    if not direct:
+                        v = F.when(F.col("__ins").isin(own), v).otherwise(F.col(gc))
+                    out = out.withColumn(gc, v)
+            return out if direct else out.drop("__ins")
 
         inserts: DataFrame | None = None
         ident_props: dict[str, str] = {}

@@ -576,8 +576,8 @@ def _copy_new_file(t, df):
 @pytest.mark.parametrize(
     "cdf, op, bound",
     [
-        (False, lambda t, s: t.update("id < 4", {"status": "'U'"}), 3),
-        (False, lambda t, s: t.delete("id < 4"), 3),
+        (False, lambda t, s: t.update("id < 4", {"status": "'U'"}), 1),
+        (False, lambda t, s: t.delete("id < 4"), 1),
         (
             False,
             lambda t, s: t.upsert(
@@ -585,8 +585,8 @@ def _copy_new_file(t, df):
             ),
             7,
         ),
-        (True, lambda t, s: t.update("id < 4", {"status": "'U'"}), 6),
-        (True, lambda t, s: t.delete("id < 4"), 6),
+        (True, lambda t, s: t.update("id < 4", {"status": "'U'"}), 4),
+        (True, lambda t, s: t.delete("id < 4"), 4),
         (True, _cdf_merge, 20),
     ],
     ids=["update", "delete", "upsert", "cdf_update", "cdf_delete", "cdf_merge"],
@@ -595,11 +595,81 @@ def test_dml_job_count_bounds(spark, tmp_path, job_ids, cdf, op, bound):
     """Spark jobs per copy-on-write DML on a small two-file table,
     counted in the op's job group: the touched-file scan, broadcasts,
     the rewrite and (with CDF and row tracking on) the change-feed
-    write. The bounds are the counts measured before the DML paths
-    shared one rewrite (the CDF MERGE measured 19 or 20); a rewrite
-    must not add a job."""
+    write. The upsert and CDF MERGE bounds are the counts measured
+    before the DML paths shared one rewrite (the CDF MERGE measured 19
+    or 20); a rewrite must not add a job. Stats leave one of the two
+    files for ``id < 4``, so UPDATE and DELETE run no touched-file scan
+    (3 and 6 jobs before): the rewrite is their only job without the
+    change feed."""
     t = _job_count_table(spark, str(tmp_path / "j"), cdf)
+    assert t.prune_stats("id < 4")["files_read"] == 1
     assert len(job_ids(lambda: op(t, spark))) <= bound
+
+
+_NO_MATCH = "id = 3 AND amount = 3.5"
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+@pytest.mark.parametrize("kind", ["plain", "cdf", "dv"])
+def test_unmatched_lone_candidate_commits_no_file_change(spark, tmp_path, kind, op):
+    """Stats keep one file for ``id = 3 AND amount = 3.5`` but no row
+    matches it. The rewrite of that candidate is its probe: one empty
+    DML commit lands, the live files stay as they were, and the
+    rewritten copy (or deletion vector) is deleted."""
+    from test_concurrency import _assert_no_orphans
+
+    t = _job_count_table(spark, str(tmp_path / "z"), kind == "cdf")
+    if kind == "dv":
+        t.set_properties({"enableDeletionVectors": "true"})
+    assert t.prune_stats(_NO_MATCH)["files_read"] == 1
+    v, live, rows = t.version(), {f.path for f in t._replay().files}, state(t)
+    if op == "delete":
+        assert t.delete(_NO_MATCH) == {"numDeletedRows": 0}
+    else:
+        assert t.update(_NO_MATCH, {"status": "'U'"}) == {"numUpdatedRows": 0}
+    assert t.version() == v + 1
+    c = t.commits()[-1]
+    assert (c.operation, c.add, c.remove, c.dvs) == (op.upper(), [], [], {})
+    assert c.metrics["numRemovedFiles"] == 0
+    assert {f.path for f in t._replay().files} == live
+    assert state(t) == rows
+    _assert_no_orphans(t.path)
+
+
+@pytest.mark.parametrize(
+    "op, bound",
+    [
+        (
+            lambda t, s: t.upsert(
+                rows_df(s, [(1, "NEW", 1.5, "d1"), (50, "INS", 5.0, "d0")]), ["id"]
+            ),
+            946,
+        ),
+        (lambda t, s: t.delete("id < 4"), 191),
+    ],
+    ids=["upsert", "delete"],
+)
+def test_dml_py4j_round_trip_bounds(spark, tmp_path, monkeypatch, op, bound):
+    """Python-to-JVM commands sent while one DML builds and runs on the
+    small two-file table, py4j's garbage-collection messages excluded
+    (their number depends on when Python frees its proxies). Before the
+    MERGE build was trimmed an upsert sent 1,420 and a DELETE 575; the
+    bounds are ⅔ and ⅓ of those."""
+    from py4j.clientserver import ClientServerConnection
+
+    t = _job_count_table(spark, str(tmp_path / "p"), False)
+    sent = []
+    inner = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # memory / delete
+            sent.append(command)
+        return inner(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    op(t, spark)
+    monkeypatch.undo()
+    assert len(sent) <= bound, len(sent)
 
 
 @pytest.mark.parametrize(
