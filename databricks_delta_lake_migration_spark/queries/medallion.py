@@ -1740,7 +1740,7 @@ def q220_notification_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference samples only the notified files (no ``zzz`` column, no
     directory listing), wave 1 lands via a RESTART that also
     re-notifies a wave-0 file — the at-least-once duplicate must be a
-    no-op through the sourceFiles commit ledger. The oracle aggregates
+    no-op through the source-file ledger. The oracle aggregates
     exactly the two notified waves, so a decoy leak (listing-mode
     regression), a duplicate double-ingest, or a lost wave all break
     the value hash; both structural verdicts are baked in as literal

@@ -4,11 +4,16 @@
 The reference uses Databricks Auto Loader (``cloudFiles``); the OSS
 replacement is Spark's built-in file streaming source with an explicit
 schema (SURVEY §7.4 item 3) plus ``maxFilesPerTrigger`` rate limiting.
-The sink side writes into a :class:`LogTable` through ``foreachBatch``
-with batch-id idempotence: each micro-batch commit records its
-``batchId`` in the commit parameters, and re-delivered batches (after
-a crash between sink-commit and checkpoint-advance) are skipped — the
-same transactional-sink contract the Delta sink implements.
+Every ``stream_*`` writer starts through one runner, :func:`_run`: a
+checkpointed file stream whose ``foreachBatch`` sink (:func:`_sink`)
+writes into :class:`LogTable` targets exactly once. Each micro-batch
+commit records its stream id and batch id in the table's commit log,
+and the log folds each stream's last batch id into every snapshot and
+checkpoint (Delta's ``txn``; see ``tables/log.py``). A re-delivered
+batch (after a crash between the table commit and the checkpoint
+advance) finds its id in the snapshot and is skipped, also after log
+pruning has deleted its commit — the transactional-sink contract the
+Delta sink implements.
 
 [EXT] streaming analytics (watermarks + event-time windows) is exposed
 via :func:`windowed_counts`; the reference itself is ingest-only
@@ -17,14 +22,21 @@ via :func:`windowed_counts`; the reference itself is ingest-only
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+import uuid
+from typing import Callable
+from urllib.parse import unquote, urlparse
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..tables import LogTable
 from ..tables.fsio import LOCAL_FS
-from ..tables.logtable import _Transaction
+from ..tables.log import Snapshot, stream_params
+from ..tables.logtable import MergeBuilder, _Transaction
 
 
 class SchemaDriftError(ValueError):
@@ -32,14 +44,6 @@ class SchemaDriftError(ValueError):
     stream schema (Auto Loader fails the stream on type change too —
     only brand-new columns are adoptable). Names the offending column
     so the operator can route the bad files or re-pin deliberately."""
-
-
-def _last_committed_batch(table: LogTable, stream_id: str) -> int:
-    for c in reversed(table.commits()):
-        p = c.parameters or {}
-        if p.get("streamId") == stream_id and "batchId" in p:
-            return int(p["batchId"])
-    return -1
 
 
 # Test seam: when a test sets this to a list, every append sink in
@@ -54,37 +58,108 @@ _SINK_PLAN_PROBE: list[str] | None = None
 
 def _append_batch(
     tbl: LogTable,
+    snap: Snapshot,
     df: DataFrame,
     stream_id: str,
     batch_id: int,
     operation: str = "STREAMING UPDATE",
-    extra_params: dict | None = None,
+    source_files: list[str] | None = None,
 ) -> None:
-    """The one micro-batch append path shared by every foreachBatch
-    sink in this module. A batch is ingested like an append (the
-    table's ``_ingest`` in one ``_Transaction``): it is aligned to the
-    schema with identity, generated-column and default values, checked
-    against CHECK and NOT NULL constraints (a violation fails the batch
-    and deletes its files), written through the write-tuning seam and,
-    on a change-feed table, recorded as insert rows. The commit carries
-    the stream/batch identity in its parameters — the batch-id
-    idempotence every sink's replay guard reads back — and rebases like
-    any blind append; a racing commit of the same batch is refused."""
+    """The one micro-batch append path, committed against ``snap``, the
+    snapshot the batch guard read. A batch is ingested like an append
+    (the table's ``_ingest`` in one ``_Transaction``): it is aligned to
+    the schema with identity, generated-column and default values,
+    checked against CHECK and NOT NULL constraints (a violation fails
+    the batch and deletes its files), written through the write-tuning
+    seam and, on a change-feed table, recorded as insert rows. The
+    commit records the batch, and a notification batch's
+    ``source_files``, in the log's exactly-once ledger, and rebases
+    like any blind append; a racing commit of the same batch is
+    refused."""
     if _SINK_PLAN_PROBE is not None:
         _SINK_PLAN_PROBE.append(df._jdf.queryExecution().executedPlan().toString())
-    with _Transaction(tbl, tbl._replay()) as tx:
+    with _Transaction(tbl, snap) as tx:
         entries, fields = tbl._ingest(tx, df)
         tx.commit(
             operation,
             add=entries,
-            parameters={
-                "streamId": stream_id,
-                "batchId": int(batch_id),
-                **(extra_params or {}),
-            },
+            parameters=stream_params(stream_id, batch_id, source_files),
             metrics={"numOutputRows": sum(e.num_records for e in entries)},
             **fields,
         )
+
+
+def _sink(
+    spark: SparkSession, targets: dict[str, str], stream_id: str, batch: Callable
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` function of stream ``stream_id`` into the
+    tables ``targets`` maps to the operation their appends commit as.
+    ``batch(batch_df, *tables)`` returns per target (bare for one) a
+    DataFrame to append, a ``(DataFrame, source files)`` pair for a
+    notification batch, a :class:`MergeBuilder` to execute, or None.
+
+    The batch guard reads each target's snapshot once and skips a
+    target whose ledger holds this batch id or a later one (``batch``
+    is not called when all are skipped); an append commits against
+    that snapshot. A missing target is created from its first append."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        tables = [LogTable(spark, p) for p in targets]
+        snaps: list[Snapshot | None] = []
+        for tbl in tables:
+            try:
+                snaps.append(tbl._replay())
+            except FileNotFoundError:
+                snaps.append(None)
+        due = [s is None or batch_id > s.txns.get(stream_id, -1) for s in snaps]
+        if not any(due):
+            return  # exactly-once: the batch was already committed
+        outs = batch(batch_df, *tables)
+        if len(tables) == 1:
+            outs = (outs,)
+        for tbl, snap, op, out, todo in zip(tables, snaps, targets.values(), outs, due):
+            if not todo or out is None:
+                continue
+            if isinstance(out, MergeBuilder):
+                out.with_commit_params(**stream_params(stream_id, batch_id)).execute()
+                continue
+            df, files = out if isinstance(out, tuple) else (out, None)
+            if snap is None:
+                tbl = LogTable.create(spark, tbl.path, df.schema)
+                snap = tbl._replay()
+            _append_batch(tbl, snap, df, stream_id, batch_id, op, files)
+
+    return sink
+
+
+def _run(
+    spark: SparkSession, source_path: str, schema: T.StructType, file_format: str,
+    max_files_per_trigger: int, checkpoint: str | None, available_now: bool,
+    stream_id: str, targets: dict[str, str], batch: Callable,
+    prepare: Callable[[DataFrame], DataFrame] | None = None, mode: str = "append",
+) -> StreamingQuery:
+    """Start the file stream over ``source_path``, ``prepare`` applied,
+    into :func:`_sink`'s ``targets`` in output ``mode``: drained once
+    with ``available_now``, else on a 30-second processing-time trigger
+    (data_processor.py:190-197)."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .format(file_format)
+        .load(source_path)
+    )
+    if prepare is not None:
+        stream = prepare(stream)
+    writer = stream.writeStream.foreachBatch(
+        _sink(spark, targets, stream_id, batch)
+    ).outputMode(mode)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime="30 seconds")
+    return writer.start()
 
 
 def infer_stream_schema(
@@ -116,9 +191,6 @@ def infer_stream_schema(
     listing ``source_path`` — the notification-discovery mode uses it
     so schema inference never lists the data directory either (Auto
     Loader samples notified files the same way)."""
-    import json
-    import os
-
     stored = (
         os.path.join(schema_location, "inferred_schema.json")
         if schema_location
@@ -237,29 +309,11 @@ def stream_files_to_table(
         new = [f for f in schema.fields if f.name not in have]
         if new:
             t.add_columns(new)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "STREAMING UPDATE"},
+        lambda batch_df, tbl: batch_df, prepare=transform,
     )
-    if transform is not None:
-        reader = transform(reader)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return  # exactly-once: batch was already committed
-        _append_batch(tbl, batch_df, stream_id, batch_id)
-
-    writer = reader.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
 
 
 def notify_files(queue_dir: str, paths: list[str]) -> str:
@@ -276,10 +330,6 @@ def notify_files(queue_dir: str, paths: list[str]) -> str:
     shape; everything downstream is unchanged (the queue FILE FORMAT is
     the pluggable seam, exactly like the image-codec stub in
     operators/multimodal.py)."""
-    import json
-    import os
-    import uuid
-
     if not paths:
         raise ValueError(
             "notify_files called with no paths — an empty notification "
@@ -303,8 +353,6 @@ def _all_notified_paths(queue_dir: str) -> list[str]:
     A malformed notification line raises NAMING the queue file — the
     same loud-failure contract the sink applies (a silent drop under
     an exactly-once contract is permanent data loss)."""
-    import os
-
     out: list[str] = []
     if not os.path.isdir(queue_dir):
         return out
@@ -320,13 +368,9 @@ def _uncommitted_queue_files(checkpoint: str) -> set[str]:
     batch that has not yet committed. A restart replays those batches
     by re-reading exactly these files (the FileStreamSource offset log
     records paths, not contents), so purge must keep them even when
-    every data path they carry is already in the sourceFiles ledger —
-    the crash-between-sink-commit-and-checkpoint-advance window the
-    batchId replay guard exists for."""
-    import json
-    import os
-    from urllib.parse import unquote, urlparse
-
+    every data path they carry is already in the stream's source-file
+    ledger — the crash-between-sink-commit-and-checkpoint-advance
+    window the batch guard exists for."""
     src = os.path.join(checkpoint, "sources", "0")
     commits = os.path.join(checkpoint, "commits")
     if not os.path.isdir(src):
@@ -383,9 +427,9 @@ def purge_consumed_notifications(
     """Queue maintenance for notification-mode discovery (the analog
     of the event-retention/cleanup policy on the cloud queue behind
     Auto Loader's ``useNotifications``): delete notification files
-    whose EVERY path is already in the stream's ``sourceFiles`` commit
-    ledger — i.e. provably ingested. Zero-path files (an empty publish)
-    are trivially consumed and deleted too. Notification files carrying
+    whose EVERY path is already in the stream's source-file ledger
+    (``CommitLog.loaded_files``) — i.e. provably ingested. Zero-path
+    files (an empty publish) are trivially consumed and deleted too. Notification files carrying
     ANY un-ingested path are kept whole (a notification file is the
     atomic queue unit). Returns the deleted file paths.
 
@@ -406,12 +450,10 @@ def purge_consumed_notifications(
     has not seen. This is what keeps the per-trigger O(queue depth)
     bound equal to O(recent notifications) instead of O(all
     notifications ever)."""
-    import os
-
     removed: list[str] = []
     if not os.path.isdir(queue_dir):
         return removed
-    ingested = _ingested_source_files(table, stream_id)
+    ingested = table.log.loaded_files(("stream", stream_id))
     replay_needed = (
         _uncommitted_queue_files(checkpoint) if checkpoint else set()
     )
@@ -439,8 +481,6 @@ def purge_consumed_notifications(
 def _all_notified_paths_one(queue_file: str) -> list[str]:
     """Paths of a single notification file (same strict parse as
     :func:`_all_notified_paths`)."""
-    import json
-
     out: list[str] = []
     with open(queue_file) as fh:
         for ln in fh:
@@ -455,23 +495,6 @@ def _all_notified_paths_one(queue_file: str) -> list[str]:
                 )
             out.append(rec["path"])
     return out
-
-
-def _ingested_source_files(table: LogTable, stream_id: str) -> set[str]:
-    """Replay this stream's commit provenance into the already-ingested
-    file set — the transactional dedup ledger for at-least-once queues
-    (Auto Loader keeps the same ledger in RocksDB under the checkpoint;
-    here the TABLE is the store, so the ledger can never disagree with
-    the data). Metadata-sized: one path string per ingested file, the
-    same order of magnitude as the table's own add-file list."""
-    import json
-
-    seen: set[str] = set()
-    for c in table.commits():
-        p = c.parameters or {}
-        if p.get("streamId") == stream_id and p.get("sourceFiles"):
-            seen.update(json.loads(p["sourceFiles"]))
-    return seen
 
 
 def stream_notified_files_to_table(
@@ -497,19 +520,21 @@ def stream_notified_files_to_table(
     notification queue — checkpointed, so each notification file is
     processed exactly once — and each micro-batch reads the newly
     notified data files with the BATCH reader and appends them to the
-    log table under the usual batch-id idempotent commit. Discovery
+    log table under the usual exactly-once batch commit. Discovery
     cost per trigger is O(queue depth), not O(corpus files): the one
     scaling cliff of listing mode at millions of files per day.
 
     Exactly-once, layered:
 
     - notification delivery: the queue stream's checkpoint;
-    - sink replay after a crash: ``batchId`` in the commit parameters
-      (same as every sink in this module);
+    - sink replay after a crash: the stream's last batch id in the
+      table's snapshot (same as every sink in this module);
     - DUPLICATE notifications (cloud queues are at-least-once): each
-      commit records the data files it ingested (``sourceFiles``), and
-      a batch drops paths already in that ledger — re-notified files
-      are no-ops instead of double-ingests.
+      commit records the data files it ingested in the table's
+      source-file ledger, and a batch drops paths already in it —
+      re-notified files are no-ops instead of double-ingests. The
+      ledger is folded from the listed commits: once log pruning
+      deletes the commit that recorded a file, the file is forgotten.
 
     ``schema=None`` infers from the currently-notified files (never a
     directory listing) and pins under the checkpoint, identical to
@@ -528,9 +553,6 @@ def stream_notified_files_to_table(
     the same files should each get their own queue_dir, fanned out at
     the publisher.
     """
-    import json
-    import os
-
     notif_schema = T.StructType([T.StructField("path", T.StringType())])
     if schema is None:
         pin = (
@@ -561,14 +583,6 @@ def stream_notified_files_to_table(
         new = [f for f in schema.fields if f.name not in have]
         if new:
             t.add_columns(new)
-    data_schema = schema
-
-    notifications = (
-        spark.readStream.schema(notif_schema)
-        .option("maxFilesPerTrigger", max_notifications_per_trigger)
-        .format("json")
-        .load(queue_dir)
-    )
 
     # the duplicate-notification ledger, seeded from the table's commit
     # provenance ONCE per stream start and maintained incrementally —
@@ -578,12 +592,9 @@ def stream_notified_files_to_table(
     # mutation is safe; a restart just re-seeds from the log.
     ledger: dict[str, set | None] = {"seen": None}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return  # exactly-once: batch was already committed
+    def batch(batch_df: DataFrame, tbl: LogTable) -> tuple[DataFrame, list[str]] | None:
         if ledger["seen"] is None:
-            ledger["seen"] = _ingested_source_files(tbl, stream_id)
+            ledger["seen"] = tbl.log.loaded_files(("stream", stream_id))
         seen = ledger["seen"]
         # a notification batch is metadata (bounded by
         # max_notifications_per_trigger × lines/file) — collecting the
@@ -602,24 +613,20 @@ def stream_notified_files_to_table(
             )
         fresh = sorted({r.path for r in rows} - seen)
         if not fresh:
-            return  # all duplicates: nothing to commit
-        data = spark.read.format(file_format).schema(data_schema).load(fresh)
+            return None  # all duplicates: nothing to commit
+        data = spark.read.format(file_format).schema(schema).load(fresh)
         if transform is not None:
             data = transform(data)
-        _append_batch(
-            tbl, data, stream_id, batch_id,
-            extra_params={"sourceFiles": json.dumps(fresh)},
-        )
+        # a batch whose commit fails fails the stream, and a restart
+        # re-seeds the ledger from the log
         seen.update(fresh)
+        return data, fresh
 
-    writer = notifications.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, queue_dir, notif_schema, "json", max_notifications_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "STREAMING UPDATE"},
+        batch,
+    )
 
 
 def windowed_counts(
@@ -672,51 +679,35 @@ def stream_upsert_to_table(
     operator: each micro-batch is first deduplicated to the latest row
     per key (``row_number() = 1`` over ``order_col`` descending — a
     batch can carry several updates for one key, and MERGE requires a
-    unique source key), then merged into the target. Batch-id
-    idempotence rides on the MERGE commit parameters, so crash-replayed
-    batches short-circuit instead of double-applying.
+    unique source key), then merged into the target. The MERGE commit
+    records the batch in the table's exactly-once ledger, so
+    crash-replayed batches short-circuit instead of double-applying.
 
     At scale each micro-batch MERGE touches only the target files whose
     key-range stats overlap the batch (LogTable stats pruning), so
     steady-state cost tracks batch size, not table size.
     """
-    from pyspark.sql import Window
-
     LogTable.create(spark, table_path, schema)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-    )
+    w = Window.partitionBy(*key_columns).orderBy(F.col(order_col).desc())
+    cond = " AND ".join(f"target.{k} = source.{k}" for k in key_columns)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
-        w = Window.partitionBy(*key_columns).orderBy(F.col(order_col).desc())
+    def batch(batch_df: DataFrame, tbl: LogTable) -> MergeBuilder:
         latest = (
             batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        cond = " AND ".join(f"target.{k} = source.{k}" for k in key_columns)
-        (
+        return (
             tbl.merge(latest, cond)
             .when_matched_update_all()
             .when_not_matched_insert_all()
-            .with_commit_params(streamId=stream_id, batchId=int(batch_id))
-            .execute()
         )
 
-    writer = reader.writeStream.foreachBatch(sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "MERGE"}, batch,
+        mode="update",
+    )
 
 
 def stream_enrich_to_table(
@@ -744,8 +735,8 @@ def stream_enrich_to_table(
     AQE broadcasts a metadata-sized dim (the common case, fact batch
     never shuffles) and falls back to a shuffle join when the
     dimension outgrows an executor, instead of OOMing a hinted plan
-    (same posture as winsorize's bounds join, r10). Batch-id
-    idempotence rides on the commit parameters like every other sink
+    (same posture as winsorize's bounds join, r10). Each commit records
+    its batch in the table's exactly-once ledger like every other sink
     here, so crash-replayed batches are no-ops.
     """
     dim_schema = LogTable(spark, dim_path).schema()
@@ -755,29 +746,16 @@ def stream_enrich_to_table(
         if f.name != join_key
     ]
     LogTable.create(spark, table_path, T.StructType(enriched_fields))
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
+    def batch(batch_df: DataFrame, tbl: LogTable) -> DataFrame:
         dim = LogTable(spark, dim_path).read()  # CURRENT snapshot
-        enriched = batch_df.join(dim, join_key, "left")
-        _append_batch(tbl, enriched, stream_id, batch_id)
+        return batch_df.join(dim, join_key, "left")
 
-    writer = reader.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "STREAMING UPDATE"},
+        batch,
+    )
 
 
 def session_windowed_counts(
@@ -870,34 +848,18 @@ def stream_dedup_to_table(
     entry per key only until the watermark passes it (bounded state —
     the plain ``dropDuplicates`` keeps keys forever and OOMs an
     unbounded stream). Cross-batch duplicates inside the horizon are
-    caught by the state store; the append sink keeps the batch-id
-    idempotence contract of :func:`stream_files_to_table`, so a
+    caught by the state store; the append sink keeps the exactly-once
+    batch contract of :func:`stream_files_to_table`, so a
     crash-replayed micro-batch cannot double-append either.
     """
-    t = LogTable.create(spark, table_path, schema)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(key_columns)
+    LogTable.create(spark, table_path, schema)
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "STREAMING DEDUP"},
+        lambda batch_df, tbl: batch_df,
+        prepare=lambda s: s.withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(key_columns),
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
-        _append_batch(tbl, batch_df, stream_id, batch_id, "STREAMING DEDUP")
-
-    writer = reader.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
 
 
 def stream_windowed_agg_to_table(
@@ -935,22 +897,16 @@ def stream_windowed_agg_to_table(
     window-range stats overlap the batch's emitted windows.
     """
     gcols = list(group_cols or [])
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-    )
-    if transform is not None:
-        reader = transform(reader)
-    agg = windowed_counts(
-        reader,
-        ts_col=ts_col,
-        window_duration=window_duration,
-        watermark=watermark,
-        group_cols=gcols,
-        value_col=value_col,
-    )
+
+    def aggregate(stream: DataFrame) -> DataFrame:
+        return windowed_counts(
+            transform(stream) if transform is not None else stream,
+            ts_col=ts_col,
+            window_duration=window_duration,
+            watermark=watermark,
+            group_cols=gcols,
+            value_col=value_col,
+        )
 
     in_fields = {f.name: f for f in (transform(spark.createDataFrame([], schema))
                                      if transform is not None else
@@ -965,29 +921,20 @@ def stream_windowed_agg_to_table(
         ]
     )
     LogTable.create(spark, table_path, out_schema)
-    keys = ["window_start", *gcols]
+    cond = " AND ".join(f"target.{k} = source.{k}" for k in ["window_start", *gcols])
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
-        cond = " AND ".join(f"target.{k} = source.{k}" for k in keys)
-        (
+    def batch(batch_df: DataFrame, tbl: LogTable) -> MergeBuilder:
+        return (
             tbl.merge(batch_df, cond)
             .when_matched_update_all()
             .when_not_matched_insert_all()
-            .with_commit_params(streamId=stream_id, batchId=int(batch_id))
-            .execute()
         )
 
-    writer = agg.writeStream.foreachBatch(sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "MERGE"}, batch,
+        prepare=aggregate, mode="update",
+    )
 
 
 def stream_near_dup_ingest(
@@ -1016,8 +963,9 @@ def stream_near_dup_ingest(
     against them too.
 
     Exactly-once on BOTH tables independently: corpus and index appends
-    each carry (streamId, batchId); a crash between the two re-runs the
-    batch, the already-committed side no-ops, and the other catches up
+    each record the batch in their own table's ledger; a crash between
+    the two re-runs the batch, the already-committed side no-ops, and
+    the other catches up
     (the pair probe is deterministic, so the recomputed survivor set is
     identical). At 100 TB the per-batch cost is the batch hash + one
     bucket equi-join against the index — the corpus is never re-hashed.
@@ -1034,20 +982,9 @@ def stream_near_dup_ingest(
     )
     LogTable.create(spark, index_path, band_schema)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        corpus = LogTable(spark, table_path)
-        index = LogTable(spark, index_path)
-        corpus_done = batch_id <= _last_committed_batch(corpus, stream_id)
-        index_done = batch_id <= _last_committed_batch(index, stream_id)
-        if corpus_done and index_done:
-            return
+    def batch(
+        batch_df: DataFrame, corpus: LogTable, index: LogTable
+    ) -> tuple[DataFrame, DataFrame]:
         pairs = incremental_lsh_pairs(
             batch_df, index.read(), text_col, id_col, num_hashes, band_size
         )
@@ -1069,22 +1006,16 @@ def stream_near_dup_ingest(
         survivors = batch_df.join(
             drops, F.col(id_col) == F.col("pid"), "left_anti"
         )
-        if not corpus_done:
-            _append_batch(corpus, survivors, stream_id, batch_id)
-        if not index_done:
-            bands = minhash_band_buckets(
-                survivors, text_col, id_col, num_hashes, band_size
-            )
-            _append_batch(index, bands, stream_id, batch_id, "STREAMING INDEX")
+        bands = minhash_band_buckets(
+            survivors, text_col, id_col, num_hashes, band_size
+        )
+        return survivors, bands
 
-    writer = reader.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id,
+        {table_path: "STREAMING UPDATE", index_path: "STREAMING INDEX"}, batch,
+    )
 
 
 def stream_scd2_apply(
@@ -1124,7 +1055,8 @@ def stream_scd2_apply(
     trick of :mod:`operators.scd2`): per-key close rows update the
     open target row with ``effective_end_date = source.__close_ts``;
     version rows ride NULL merge keys into a guarded INSERT clause.
-    Batch-id idempotence rides the MERGE commit parameters.
+    The MERGE commit records the batch in the table's exactly-once
+    ledger.
 
     At 100 TB: the batch work is one key-window (batch-sized), an
     open-row hash probe (a key equi-join against the dimension's
@@ -1135,10 +1067,6 @@ def stream_scd2_apply(
     not dimension size; on an unclustered dimension the probe is a
     per-batch dim scan, the same cost profile Delta's own
     APPLY CHANGES pays."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-
     from ..operators.scd2 import SCD2_COLS, record_hash
 
     tracked = [
@@ -1155,17 +1083,8 @@ def stream_scd2_apply(
         ]
     )
     LogTable.create(spark, table_path, dim_schema)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = LogTable(spark, table_path)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
+    def batch(batch_df: DataFrame, tbl: LogTable) -> MergeBuilder | None:
         b = batch_df.withColumn("__h", record_hash(tracked))
         open_rows = (
             tbl.read()
@@ -1199,7 +1118,7 @@ def stream_scd2_apply(
         if not versions.take(1):
             # all records were consecutive duplicates: nothing to
             # commit; a crash-replay of this batch is a no-op anyway
-            return
+            return None
         closes = versions.groupBy(*key_columns).agg(
             F.min("effective_start_date").alias("__close_ts")
         )
@@ -1231,7 +1150,7 @@ def stream_scd2_apply(
         null_keys = " AND ".join(
             f"source.__mk_{k} IS NULL" for k in key_columns
         )
-        (
+        return (
             tbl.merge(staged, cond)
             .when_matched_update(
                 # no hash condition needed: no-op firsts were filtered
@@ -1245,18 +1164,13 @@ def stream_scd2_apply(
                 condition=null_keys,
                 values={c: f"source.{c}" for c in all_cols},
             )
-            .with_commit_params(streamId=stream_id, batchId=int(batch_id))
-            .execute()
         )
 
-    writer = reader.writeStream.foreachBatch(sink).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "MERGE"}, batch,
+        mode="update",
+    )
 
 
 def stream_pit_enrich(
@@ -1292,7 +1206,8 @@ def stream_pit_enrich(
     matches AT MOST ONE version (intervals are disjoint per key).
     Events with no matching version (unknown key, or older than the
     key's first version) keep NULL attributes — enrichment never drops
-    or duplicates events. Batch-id idempotent append.
+    or duplicates events. An exactly-once batch append, like every
+    sink in this module.
 
     At scale the dimension side rewards key clustering exactly like
     MERGE; the target table is created from the first batch's enriched
@@ -1301,7 +1216,7 @@ def stream_pit_enrich(
 
     dkeys = dim_key_columns or key_columns
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def batch(batch_df: DataFrame, tbl: LogTable) -> DataFrame:
         dim = LogTable(spark, dim_path).read().drop("record_hash")
         attr_cols = [
             c for c in dim.columns
@@ -1321,34 +1236,17 @@ def stream_pit_enrich(
             d["effective_end_date"].isNull()
             | (batch_df[ts_col] < d["effective_end_date"])
         )
-        enriched = batch_df.join(d, cond, "left").drop(
+        return batch_df.join(d, cond, "left").drop(
             *[f"__dk_{k}" for k in key_columns],
             "effective_start_date",
             "effective_end_date",
         )
-        tbl = LogTable(spark, table_path)
-        if not tbl.exists():
-            tbl = LogTable.create(spark, table_path, enriched.schema)
-        if batch_id <= _last_committed_batch(tbl, stream_id):
-            return
-        _append_batch(tbl, enriched, stream_id, batch_id)
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(file_format)
-        .load(source_path)
+    # ``transform`` e.g. re-types an exact epoch-micros long into the
+    # event-time timestamp (JSON's default timestamp format is
+    # milli-precise, so micro-exact pipelines ship longs and convert)
+    return _run(
+        spark, source_path, schema, file_format, max_files_per_trigger,
+        checkpoint, available_now, stream_id, {table_path: "STREAMING UPDATE"},
+        batch, prepare=transform,
     )
-    if transform is not None:
-        # e.g. re-type an exact epoch-micros long into the event-time
-        # timestamp (JSON's default timestamp format is milli-precise,
-        # so micro-exact pipelines ship longs and convert here)
-        reader = transform(reader)
-    writer = reader.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()

@@ -118,7 +118,8 @@ class LogTableStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         log = CommitLog(self.path)
-        _, schema_json, _, props, _ = log.snapshot()
+        snap = log.snapshot()
+        schema_json, props = snap.schema_json, snap.properties
         if self.cdf:
             return self._cdf_partitions(log, schema_json, props, start, end)
         mapping = json.loads(props.get(MAPPING_PROP, "{}"))
@@ -277,7 +278,7 @@ class LogTableStreamDataSource(DataSource):
         return "logtable_stream"
 
     def schema(self):
-        _, schema_json, _, _, _ = CommitLog(self.options["path"]).snapshot()
+        schema_json = CommitLog(self.options["path"]).snapshot().schema_json
         sch = json.loads(schema_json)
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             sch["fields"] = list(sch["fields"]) + CDF_FIELDS

@@ -7,6 +7,17 @@ version v is the newest readable checkpoint at or below v plus the
 commits after it up to v, taken from a fresh listing — the Delta Lake
 paper's definition (VLDB 2020, §3).
 
+The log also holds the exactly-once ledger, in commit parameters: a
+stream micro-batch records ``streamId`` and ``batchId``; a commit that
+loaded source files lists them in ``sourceFiles`` — COPY INTO under its
+``source`` directory as [relative path, size, mtime] triples, a
+notification-mode batch under its ``streamId`` as a JSON string of
+paths. Each stream's last batch id (Delta's ``txn``) is folded into the
+:class:`Snapshot` and carried in every checkpoint, so it survives log
+pruning. The source-file sets grow with every file ever loaded, so
+they stay out of checkpoints: :meth:`CommitLog.loaded_files` folds
+them from the listed commits.
+
 :class:`CommitLog` is the only reader and writer of that directory:
 :class:`~.logtable.LogTable` and the streaming source
 (``streaming/table_source.py``) both go through it, and it does all of
@@ -172,6 +183,8 @@ class Snapshot(NamedTuple):
     partition_by: list[str]
     properties: dict[str, str]
     version: int
+    # stream id → the batch id of its newest commit (Delta's txn)
+    txns: dict[str, int]
 
     @property
     def schema(self) -> T.StructType:
@@ -185,6 +198,57 @@ def fold_properties(props: dict[str, str], c: Commit) -> dict[str, str]:
     if c.operation in _PROPS_REPLACE_OPS:
         return dict(c.properties)
     return {**props, **c.properties}
+
+
+# ---- the exactly-once ledger (see the module docstring) -------------------
+
+
+def stream_params(stream_id: str, batch_id: int, files: list[str] | None = None) -> dict:
+    """The parameters that record batch ``batch_id`` of ``stream_id``
+    and, for a notification-mode batch, the data ``files`` it loaded."""
+    p = {"streamId": stream_id, "batchId": int(batch_id)}
+    return {**p, "sourceFiles": json.dumps(files)} if files else p
+
+
+def copy_params(source: str, files: list[tuple]) -> dict:
+    """The parameters that record the ``(relative path, size, mtime)``
+    identities of the ``files`` a COPY INTO from ``source`` loaded."""
+    return {"source": source, "sourceFiles": [list(x) for x in files]}
+
+
+def _batch(c: Commit) -> tuple[str, int] | None:
+    """``(stream id, batch id)`` of a stream micro-batch commit."""
+    p = c.parameters or {}
+    if p.get("streamId") is None or "batchId" not in p:
+        return None
+    return p["streamId"], int(p["batchId"])
+
+
+def _loaded(c: Commit) -> tuple[tuple[str, str], set] | None:
+    """``(ledger key, file identities)`` of the source files ``c``
+    loaded: ``("COPY INTO", source)`` or ``("stream", stream id)``."""
+    p = c.parameters or {}
+    files = p.get("sourceFiles")
+    if not files:
+        return None
+    if isinstance(files, str):
+        return ("stream", p.get("streamId")), set(json.loads(files))
+    if c.operation == "COPY INTO":
+        return ("COPY INTO", p.get("source")), {tuple(x) for x in files}
+    return None
+
+
+def already_applied(ours: Commit, theirs: Commit) -> str | None:
+    """What ``ours`` would apply that ``theirs`` already applied: its
+    stream's batch (or a later one), or one of its source files under
+    the same ledger key. None when they share nothing."""
+    a, b = _batch(ours), _batch(theirs)
+    if a and b and a[0] == b[0] and b[1] >= a[1]:
+        return f"batch {a[1]} of stream {a[0]!r}"
+    a, b = _loaded(ours), _loaded(theirs)
+    if a and b and a[0] == b[0] and a[1] & b[1]:
+        return f"source files of {a[0][1]!r}"
+    return None
 
 
 class CommitLog:
@@ -279,6 +343,7 @@ class CommitLog:
         schema_json: str | None = None
         partition_by: list[str] = []
         props: dict[str, str] = {}
+        txns: dict[str, int] = {}
         start_after = -1
         cp = self._checkpoint(checkpoints, target)
         if cp is not None:
@@ -286,11 +351,20 @@ class CommitLog:
             schema_json = cp["schema"]
             partition_by = cp["partitionBy"] or []
             props = dict(cp["properties"] or {})
+            txns = dict(cp.get("txns") or {})
             start_after = cp["version"]
         if cp is None and versions[0] > target:
             raise ValueError(f"version {version} not found (table at {versions[-1]})")
+        # a checkpoint written before it carried the ledger: seed the
+        # ledger from the commits still listed at or below it
+        legacy = cp is not None and "txns" not in cp
         for c in self._load(versions):
-            if not start_after < c.version <= target:
+            if c.version > target:
+                break
+            b = _batch(c)
+            if b is not None and (legacy or c.version > start_after):
+                txns[b[0]] = b[1]
+            if c.version <= start_after:
                 continue
             for p in c.remove:
                 active.pop(p, None)
@@ -306,7 +380,7 @@ class CommitLog:
             if c.partition_by is not None:
                 partition_by = c.partition_by
             props = fold_properties(props, c)
-        return Snapshot(list(active.values()), schema_json, partition_by, props, target)
+        return Snapshot(list(active.values()), schema_json, partition_by, props, target, txns)
 
     def walk(self) -> Iterator[tuple[Commit, dict[str, str]]]:
         """Yield ``(commit, properties after it)`` for every listed
@@ -324,9 +398,26 @@ class CommitLog:
             props = fold_properties(props, c)
             yield c, props
 
+    def loaded_files(self, key: tuple[str, str], snap: Snapshot | None = None) -> set:
+        """The identities of every source file that the listed commits
+        loaded under ``key``: ``("COPY INTO", source directory)`` or
+        ``("stream", stream id)``. With ``snap``, the commits up to it
+        that its read listed (no listing of its own). Pruned commits
+        are not seen."""
+        out: set = set()
+        commits = self.commits() if snap is None else self.cache.values()
+        for c in commits:
+            if snap is not None and c.version > snap.version:
+                break
+            loaded = _loaded(c)
+            if loaded is not None and loaded[0] == key:
+                out |= loaded[1]
+        return out
+
     def write_checkpoint(self, version: int) -> None:
-        """Materialize the snapshot at ``version`` so later snapshots
-        replay only the commit tail after it."""
+        """Materialize the snapshot at ``version``, the stream ledger
+        included, so later snapshots replay only the commit tail after
+        it."""
         snap = self.snapshot(version)
         state = {
             "version": snap.version,
@@ -334,6 +425,7 @@ class CommitLog:
             "schema": snap.schema_json,
             "partitionBy": snap.partition_by,
             "properties": snap.properties,
+            "txns": snap.txns,
         }
         self.fs.write_text(self._path(version, "checkpoint"), json.dumps(state))
 

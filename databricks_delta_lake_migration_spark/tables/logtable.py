@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 
 from .fsio import LOCAL_FS, FileSystem
 from .log import CHANGES_DIR, LOG_DIR, Commit, CommitLog, FileEntry, Snapshot
+from .log import already_applied, copy_params
 from .log import change_dir, fold_properties
 
 STAGING_DIR = "_staging"
@@ -800,6 +801,9 @@ class LogTable:
         - both transactions removed the same file → our rewrite read
           state another writer already rewrote →
           :class:`ConcurrentDeleteError`; never rebased.
+        - a racing commit already applied one of our exactly-once
+          ledger keys (a stream batch, a COPY INTO source file) →
+          :class:`ConcurrentTransactionError`; never rebased.
         - otherwise the operations commute at file granularity (blind
           appends commute with everything; disjoint rewrites compose)
           → renumber, restamp, retry. Every DML path in this class reads
@@ -867,7 +871,9 @@ class LogTable:
 
     def _check_rebase_conflicts(self, ours: Commit, theirs: list[Commit]) -> None:
         """Raise a typed conflict error if ``ours`` cannot be replayed
-        on top of ``theirs`` (see :meth:`_commit_tx`)."""
+        on top of ``theirs`` (see :meth:`_commit_tx`). One rule covers
+        exactly-once writes: a racing commit already applied one of our
+        ledger keys (:func:`~.log.already_applied`)."""
         if theirs and theirs[0].version != ours.version:
             # the commits that won the race were pruned before we could
             # read them: nothing can be checked, so nothing is rebased
@@ -901,34 +907,14 @@ class LogTable:
                 f"{self.path}: {ours.operation} changes table metadata and "
                 f"lost the race to {[c.operation for c in theirs]}"
             )
-        # idempotent-transaction conflict: a racing COPY INTO of the
-        # same source already loaded (some of) our files — rebasing
-        # would duplicate their rows (Delta's txn-version check)
-        if ours.operation == "COPY INTO":
-            ours_files = {tuple(x) for x in ours.parameters.get("sourceFiles", [])}
-            for c in theirs:
-                if (
-                    c.operation == "COPY INTO"
-                    and c.parameters.get("source") == ours.parameters.get("source")
-                    and ours_files
-                    & {tuple(x) for x in c.parameters.get("sourceFiles", [])}
-                ):
-                    raise ConcurrentTransactionError(
-                        f"{self.path}: concurrent COPY INTO from "
-                        f"{ours.parameters.get('source')!r} already loaded "
-                        "overlapping files; re-run to pick up the remainder"
-                    )
-        # the same for a streaming micro-batch: a racing commit of the
-        # same stream already wrote this batch (or a later one)
-        sid, bid = ours.parameters.get("streamId"), ours.parameters.get("batchId")
-        if sid is not None and bid is not None and any(
-            c.parameters.get("streamId") == sid and c.parameters.get("batchId", -1) >= bid
-            for c in theirs
-        ):
-            raise ConcurrentTransactionError(
-                f"{self.path}: batch {bid} of stream {sid!r} was already "
-                "committed by a concurrent writer"
-            )
+        # Delta's txn-version check: rebasing would apply it twice
+        for c in theirs:
+            key = already_applied(ours, c)
+            if key is not None:
+                raise ConcurrentTransactionError(
+                    f"{self.path}: {ours.operation} lost the race to a "
+                    f"concurrent {c.operation} that already applied {key}"
+                )
         their_removed = {p for c in theirs for p in c.remove}
         overlap = set(ours.remove) & their_removed
         if overlap:
@@ -1178,12 +1164,12 @@ class LogTable:
         alone has proven too blunt a gauge for clustering quality
         (round-3 false positive, round-4 true zero) — this is the
         direct observable."""
-        files, _, _, props, _ = self._replay(version)
-        kept = self._skip_files(files, self._physical_conjuncts(where, props))
+        snap = self._replay(version)
+        kept = self._skip_files(snap.files, self._physical_conjuncts(where, snap.properties))
         return {
-            "files_total": len(files),
+            "files_total": len(snap.files),
             "files_read": len(kept),
-            "files_skipped": len(files) - len(kept),
+            "files_skipped": len(snap.files) - len(kept),
         }
 
     # ---- bloom sidecar plumbing --------------------------------------
@@ -1349,7 +1335,8 @@ class LogTable:
 
     def detail(self) -> dict[str, Any]:
         """DESCRIBE DETAIL (D10): physical stats."""
-        files, _, partition_by, props, v = self._replay()
+        snap = self._replay()
+        files, props = snap.files, snap.properties
         return {
             "format": "logtable",
             "location": self.path,
@@ -1359,9 +1346,9 @@ class LogTable:
             # vectors (purge via OPTIMIZE to reconcile)
             "numRecords": sum(f.num_records for f in files),
             "numDeletionVectorFiles": sum(len(f.dv or []) for f in files),
-            "partitionColumns": partition_by,
+            "partitionColumns": snap.partition_by,
             "properties": props,
-            "version": v,
+            "version": snap.version,
             # protocol surface (Delta DESCRIBE DETAIL parity)
             "minReaderVersion": int(props.get(MIN_READER_PROP, "1")),
             "minWriterVersion": int(props.get(MIN_WRITER_PROP, "2")),
@@ -2284,7 +2271,8 @@ class LogTable:
             return
         min_files = int(props.get(AUTOCOMPACT_MIN_FILES_PROP, "8"))
         touched_dirs = {os.path.dirname(e.path) for e in new_entries}
-        files, _, partition_by, props, _ = self._replay()
+        snap = self._replay()
+        files, partition_by, props = snap.files, snap.partition_by, snap.properties
         by_dir: dict[str, int] = {}
         for f in files:
             d = os.path.dirname(f.path)
@@ -2327,11 +2315,14 @@ class LogTable:
         """``COPY INTO`` (Delta SQL): idempotent bulk file loading.
 
         Each run lists the source directory and loads ONLY files not
-        recorded by a previous COPY INTO commit — identity is
-        (relative path, size, mtime), Delta's rule — so re-running
-        after a partial failure, or on a directory that keeps
-        receiving files, never duplicates rows. ``force=True`` reloads
-        everything regardless.
+        recorded by a previous COPY INTO commit from the same source —
+        identity is (relative path, size, mtime), Delta's rule — so
+        re-running after a partial failure, or on a directory that
+        keeps receiving files, never duplicates rows. ``force=True``
+        reloads everything regardless. The loaded set is the log's
+        source-file ledger (:meth:`CommitLog.loaded_files`), folded from
+        the listed commits: a commit pruned from the log is forgotten,
+        and its files load again.
 
         At scale: the loaded-set recovery is a metadata scan of the
         commit log (file identities, never contents), the listing is
@@ -2342,12 +2333,7 @@ class LogTable:
         # read first: a COPY INTO landing after this read is either in
         # the loaded set below or checked at commit (ConcurrentTransactionError)
         snap = self._replay()
-        loaded: set[tuple] = set()
-        if not force:
-            # the snapshot parsed every listed commit into the log cache
-            for c in self.log.cache.values():
-                if c.operation == "COPY INTO" and c.version <= snap.version:
-                    loaded.update(tuple(x) for x in c.parameters.get("sourceFiles", []))
+        loaded = set() if force else self.log.loaded_files(("COPY INTO", source_path), snap)
         exts = self._COPY_EXTS[file_format]
         new: list[tuple] = []
         for dirpath, name in self.fs.walk_files(source_path):
@@ -2377,9 +2363,8 @@ class LogTable:
                 "COPY INTO",
                 add=entries,
                 parameters={
-                    "source": source_path,
+                    **copy_params(source_path, sorted(new)),
                     "fileFormat": file_format,
-                    "sourceFiles": [list(x) for x in sorted(new)],
                 },
                 metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
                 **fields,
@@ -2684,6 +2669,21 @@ class LogTable:
         if need_key and not with_dv_key:
             out = out.drop("__dv_key", "__dv_ridx")
         return out
+
+    def _live_rows(self, entries: Sequence[FileEntry]) -> int:
+        """The rows of ``entries`` that their deletion vectors leave
+        live. Reads tombstones, never data, and only when some entry
+        carries a deletion vector."""
+        n = sum(e.num_records for e in entries)
+        dvs = sorted({d for e in entries if e.dv for d in e.dv})
+        if not dvs:
+            return n
+        # a tombstone's key is its file's path relative to the file's base
+        keys = [os.path.relpath(e.abspath(self.path), e.base or self.path) for e in entries]
+        tomb = self.spark.read.parquet(
+            *[d if os.path.isabs(d) else os.path.join(self.path, d) for d in dvs]
+        )
+        return n - tomb.filter(F.col("path").isin(keys)).distinct().count()
 
     def _dv_key_sql(self, base: str) -> str:
         """SQL expr for a scan row's deletion-vector tombstone key: the
@@ -3038,7 +3038,8 @@ class LogTable:
 
     def restore(self, version: int | None = None, timestamp: float | None = None) -> dict:
         """RESTORE TABLE TO VERSION/TIMESTAMP AS OF (D5)."""
-        old_files, old_schema, old_part, old_props, v = self._replay(version, timestamp)
+        old = self._replay(version, timestamp)
+        old_files, old_props, v = old.files, old.properties, old.version
         snap = self._replay()
         cur_files, cur_props = snap.files, snap.properties
         # Schema-coupled properties must travel WITH the restored schema:
@@ -3090,8 +3091,8 @@ class LogTable:
                 or (cur_by_path[f.path].dv or []) != (f.dv or [])
             ],
             remove=sorted(cur_paths - old_paths),
-            schema_json=old_schema,
-            partition_by=old_part,
+            schema_json=old.schema_json,
+            partition_by=old.partition_by,
             properties=props_patch,
             parameters={"version": v},
         )
@@ -3510,7 +3511,7 @@ class LogTable:
         manifest tree atomically-enough for readers (old manifests of
         vanished partitions are removed). Returns the manifest file
         paths written."""
-        files, _, _, _, _ = self._replay()
+        files = self._replay().files
         man_root = os.path.join(self.path, "_symlink_format_manifest")
         if self.fs.isdir(man_root):
             self.fs.delete_tree(man_root)
@@ -3540,7 +3541,7 @@ class LogTable:
         deep copies them. ``version`` clones a historical snapshot
         (CLONE ... VERSION AS OF)."""
         snap = self._replay(version)
-        files, schema_json, partition_by, props, v = snap
+        files, partition_by, props = snap.files, snap.partition_by, snap.properties
         t = LogTable(self.spark, target_path)
         if t.exists():
             raise FileExistsError(target_path)
@@ -3604,10 +3605,12 @@ class LogTable:
                 timestamp=time.time(),
                 operation="CLONE",
                 add=entries,
-                schema_json=schema_json,
+                schema_json=snap.schema_json,
                 partition_by=partition_by,
                 properties=props,
-                parameters={"source": self.path, "sourceVersion": v, "shallow": shallow},
+                parameters={
+                    "source": self.path, "sourceVersion": snap.version, "shallow": shallow,
+                },
             ),
             {},
         )
@@ -4105,10 +4108,10 @@ class MergeBuilder:
                 inserts=inserts,
                 checks=t._all_checks(tprops),
             )
-            # without a probe, ambiguity shows in the counts: each row of
-            # the touched files is kept, updated or deleted exactly once
+            # without a probe, ambiguity shows in the counts: each live
+            # row of the touched files is kept, updated or deleted once
             n_target = m[KEEP] + m[UPDATE] + m[DELETE]
-            if skip_probe and n_target != sum(f.num_records for f in touched):
+            if skip_probe and n_target != t._live_rows(touched):
                 raise ValueError(
                     "MERGE: multiple source rows matched the same target row"
                 )

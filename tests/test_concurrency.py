@@ -405,9 +405,12 @@ def test_stream_batch_rebases_unless_same_batch_won(spark, tmp_path):
     t, path = _make(spark, tmp_path)
     other = LogTable(spark, path)
     _race(t, "_write_files", lambda: other.append(_rows(spark, [100])))
-    _append_batch(t, _rows(spark, [1]), "s", 0)
-    _race(t, "_write_files", lambda: _append_batch(other, _rows(spark, [2]), "s", 1))
+    _append_batch(t, t._replay(), _rows(spark, [1]), "s", 0)
+    _race(
+        t, "_write_files",
+        lambda: _append_batch(other, other._replay(), _rows(spark, [2]), "s", 1),
+    )
     with pytest.raises(ConcurrentTransactionError):
-        _append_batch(t, _rows(spark, [2]), "s", 1)
+        _append_batch(t, t._replay(), _rows(spark, [2]), "s", 1)
     _assert_no_orphans(path)
     assert sorted(r.id for r in LogTable(spark, path).read().collect()) == [1, 2, 100]

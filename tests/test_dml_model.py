@@ -404,8 +404,12 @@ def _merge_model(target, source, by_source_pred):
 
 @pytest.mark.parametrize("dv", [False, True], ids=["plain", "dv"])
 def test_merge_matches_null_key_model(spark, dv):
+    """The MERGE follows a DELETE, so on the DV table its touched files
+    carry tombstones: the rows the MERGE sees are the live ones."""
     rows = _null_rows(11, 40)
     t = _diff_table(spark, dv, rows)
+    t.delete("amount < 20")
+    rows = [r for r in rows if r[2] is None or r[2] >= 20]
     # half the source keys hit existing ids, the rest are new or NULL
     source = [(r[0], "d9", 1, "m") for r in rows[::4]] + _null_rows(12, 8, first_id=500)
     seen = set()
@@ -423,3 +427,29 @@ def test_merge_matches_null_key_model(spark, dv):
 
     want = _bag(_merge_model(rows, source, amount_gt_60))
     assert _bag(t.read().select("id", "day", "amount", "note").collect()) == want
+
+
+def test_merge_ambiguous_source_raises_on_dv_table(spark):
+    """Two source rows matching one target row raise, also when the
+    touched file carries a deletion vector."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    t = LogTable.create(
+        spark,
+        tempfile.mkdtemp(prefix="dmldv-") + "/t",
+        schema,
+        properties={"enableDeletionVectors": "true"},
+    )
+    t.append(spark.createDataFrame([(i, "a") for i in range(1, 6)], schema).coalesce(1))
+    t.delete("id = 3")
+    assert [len(f.dv or []) for f in t._replay().files] == [1]
+    v = t.version()
+    source = spark.createDataFrame([(1, "b"), (1, "c")], schema)
+    with pytest.raises(ValueError, match="multiple source rows matched"):
+        t.upsert(source, ["id"])
+    assert t.version() == v
+    assert t.upsert(spark.createDataFrame([(1, "b")], schema), ["id"])["numUpdatedRows"] == 1
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "b"), (2, "a"), (4, "a"), (5, "a")
+    ]

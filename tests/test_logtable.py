@@ -561,9 +561,11 @@ def _cdf_merge(t, spark):
 
 
 def _stream_batch(t, df, batch_id):
-    from databricks_delta_lake_migration_spark.streaming.ingest import _append_batch
+    """Append ``df`` as batch ``batch_id`` of stream "s" through the
+    streaming sink's per-batch path, its batch guard included."""
+    from databricks_delta_lake_migration_spark.streaming.ingest import _sink
 
-    _append_batch(t, df, "s", batch_id)
+    _sink(t.spark, {t.path: "STREAMING UPDATE"}, "s", lambda df, tbl: df)(df, batch_id)
 
 
 def _copy_new_file(t, df):

@@ -504,6 +504,115 @@ def test_stream_upsert_exactly_once_latest_wins(spark, tmp_path):
     assert all("batchId" in c.parameters for c in merges)
 
 
+# checkpoint every 2 commits and prune every commit below the
+# second-newest checkpoint
+_PRUNING = {
+    "delta.checkpointInterval": "2",
+    "delta.logRetentionDuration": "interval 0 hours",
+}
+
+
+def _uncommit_last_batch(ckpt, tmp_path):
+    """A copy of the stream checkpoint ``ckpt`` whose last micro-batch
+    is not committed, as after a crash between the table commit and
+    the checkpoint advance; the copy gets a fresh query id, as a
+    restart in a fresh JVM would."""
+    import shutil
+
+    commits = os.path.join(ckpt, "commits")
+    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    clone = str(tmp_path / "ckpt-restarted")
+    shutil.copytree(ckpt, clone)
+    for name in ("metadata", ".metadata.crc"):
+        if os.path.exists(os.path.join(clone, name)):
+            os.remove(os.path.join(clone, name))
+    return clone
+
+
+def test_stream_replay_after_log_pruning_is_skipped(spark, tmp_path):
+    """A stream's last batch id lives in every checkpoint, so a batch
+    replayed after log pruning deleted its commit lands nothing."""
+    src, tgt, ckpt = (str(tmp_path / n) for n in ("src", "t", "ckpt"))
+    t = LogTable.create(spark, tgt, STREAM_SCHEMA, properties=_PRUNING)
+    _write_json(src + "/f1.json", [{"id": i, "v": float(i)} for i in (1, 2, 3)])
+    stream_files_to_table(
+        spark, src, tgt, STREAM_SCHEMA, stream_id="s1", checkpoint=ckpt
+    ).awaitTermination(60)
+    for i in range(6):
+        t.append(spark.createDataFrame([(10 + i, 0.0)], STREAM_SCHEMA))
+    assert t.log.versions()[0] > 1  # batch 0's commit (v1) is pruned
+    stream_files_to_table(
+        spark, src, tgt, STREAM_SCHEMA, stream_id="s1",
+        checkpoint=_uncommit_last_batch(ckpt, tmp_path),
+    ).awaitTermination(60)
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3, *range(10, 16)]
+
+
+def test_stream_upsert_replay_after_log_pruning_keeps_later_update(spark, tmp_path):
+    """A replayed upsert batch whose commit was pruned must not merge
+    again: it would undo the update made after it."""
+    from databricks_delta_lake_migration_spark.streaming import stream_upsert_to_table
+
+    src, tgt, ckpt = (str(tmp_path / n) for n in ("src", "t", "ckpt"))
+    t = LogTable.create(spark, tgt, UPSERT_SCHEMA, properties=_PRUNING)
+    _write_json(
+        src + "/f1.json", [{"id": i, "v": float(i), "seq": 1} for i in (1, 2, 3)]
+    )
+
+    def run(cp):
+        stream_upsert_to_table(
+            spark, src, tgt, UPSERT_SCHEMA, key_columns=["id"], order_col="seq",
+            stream_id="u1", checkpoint=cp,
+        ).awaitTermination(60)
+
+    run(ckpt)
+    t.update("id = 1", {"v": "100.0"})
+    for i in range(5):
+        t.append(spark.createDataFrame([(10 + i, 0.0, 1)], UPSERT_SCHEMA))
+    assert t.log.versions()[0] > 1  # batch 0's MERGE (v1) is pruned
+    v = t.version()
+    run(_uncommit_last_batch(ckpt, tmp_path))
+    assert t.version() == v
+    got = {(r.id, r.v) for r in t.read().collect() if r.id < 10}
+    assert got == {(1, 100.0), (2, 2.0), (3, 3.0)}
+
+
+def test_legacy_checkpoint_seeds_stream_ledger(spark, tmp_path):
+    """A checkpoint written before checkpoints carried the stream
+    ledger seeds it from the commits listed at or below it; the
+    commits after it fold on top, and the guard skips known batches."""
+    from databricks_delta_lake_migration_spark.streaming.ingest import _sink
+
+    t = LogTable.create(
+        spark, str(tmp_path / "t"), STREAM_SCHEMA,
+        properties={"delta.checkpointInterval": "2"},
+    )
+    rows = spark.createDataFrame([(1, 1.0)], STREAM_SCHEMA)
+
+    def batch(stream_id, batch_id):
+        targets = {t.path: "STREAMING UPDATE"}
+        _sink(spark, targets, stream_id, lambda df, tbl: df)(rows, batch_id)
+
+    batch("a", 0)
+    batch("b", 4)  # version 2: a checkpoint
+    cp = os.path.join(t.path, "_log", f"{2:020d}.checkpoint")
+    with open(cp) as fh:
+        state = json.load(fh)
+    assert state.pop("txns") == {"a": 0, "b": 4}
+    with open(cp, "w") as fh:
+        json.dump(state, fh)
+    batch("a", 1)
+    assert t._replay().txns == {"a": 1, "b": 4}
+    v = t.version()
+    batch("a", 1)
+    batch("b", 3)
+    assert t.version() == v
+    assert t.read().count() == 3
+
+
 def test_session_windowed_counts_batch_semantics(spark):
     from databricks_delta_lake_migration_spark.streaming import session_windowed_counts
 

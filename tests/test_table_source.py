@@ -214,9 +214,9 @@ def test_plainlog_state_matches_logtable_across_ddl(spark, tmp_path):
     t.unset_properties(["k"])          # props REPLACE op
     t.update("id = 1", {"val": "val + 1"})
 
-    _, schema_json, _, props, _ = CommitLog(t.path).snapshot()
-    assert T.StructType.fromJson(json.loads(schema_json)) == t.schema()
-    assert props == t.properties()
+    snap = CommitLog(t.path).snapshot()
+    assert T.StructType.fromJson(json.loads(snap.schema_json)) == t.schema()
+    assert snap.properties == t.properties()
 
 
 def test_stream_source_raises_on_pruned_history(spark, tmp_path):
